@@ -11,7 +11,7 @@ import graft.sources.Pages
   * sbt's `[info] ` prefix, which broke the driver's parse in round 1).
   *
   * Headline metric (BASELINE.json): rollup throughput in pages/sec through
-  * the full tier cascade (1m salted aggregate → 5m → 1h → 1d promotions,
+  * the full tier cascade (1m aggregate → 5m → 1h → 1d promotions,
   * exact percentiles + Gorilla blocks at every tier). The page table is
   * synthesized once to parquet (not timed), then the timed job reads it back
   * so the measurement covers scan + rollup, not generation.

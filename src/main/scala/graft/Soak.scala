@@ -19,8 +19,7 @@ object Soak {
     spark.sparkContext.setLogLevel("WARN")
 
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    val salt = sys.env.getOrElse("SPARK_GRAFT_SALT", "16").toInt
-    val cfg = TierPipeline.Config(root, saltBuckets = salt)
+    val cfg = TierPipeline.Config(root)
     def timed(label: String)(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; val s = (System.nanoTime() - t0) / 1e9
       println(f"[soak] $label: $s%.1f s"); s
@@ -41,7 +40,7 @@ object Soak {
       .filter(col("status") === "complete").count()
     println(f"""[soak] {"pages":$nPages,"build_sec":$build%.1f,"resume_sec":$resume%.1f,""" +
       s""""pages_per_sec":${(nPages / build).toLong},"rows_1d":$rows1d,""" +
-      s""""lineage_rows":$lineageRows,"cpus":$cpus,"salt":$salt}""")
+      s""""lineage_rows":$lineageRows,"cpus":$cpus}""")
     spark.stop()
   }
 }

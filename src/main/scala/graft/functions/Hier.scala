@@ -88,10 +88,13 @@ object Hier {
     regexp_replace(stripped, "[?&]+(#|$)", "$1")
   }
 
-  /** Salting for skewed hot keys: adds `salt ∈ [0, s)` derived from a row-level
-    * column so the tier-1 aggregate fans a hot host over `s` reducers; the
-    * caller re-aggregates without the salt afterwards (associative measures
-    * only). See [[graft.operators.Rollup.tier1mSalted]].
+  /** Salting for skewed hot keys: `salt ∈ [0, s)` derived from a row-level
+    * column, added as an extra grouping key so a hot group fans over `s`
+    * reducers; the caller merges the salted partials without it afterwards
+    * ([[graft.operators.Rollup.tier1mSalted]],
+    * [[graft.operators.Rollup.mergePartialsSalted]]). The merge still sees
+    * every partial of the group in one task, so salting pays only where that
+    * merge is cheaper than the first phase — coarse groups, not minute buckets.
     */
   def salt(rowKey: Column, s: Int): Column = pmod(xxhash64(rowKey), lit(s.toLong))
 }

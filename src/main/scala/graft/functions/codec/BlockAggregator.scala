@@ -49,8 +49,7 @@ object BlockAggregator extends Aggregator[PointIn, PointsBuf, MergedStats] {
     val ts = java.util.Arrays.copyOf(b.ts, b.n)
     val vs = java.util.Arrays.copyOf(b.vs, b.n)
     PointSort.sortPairs(ts, vs, b.n)
-    val p = PointSort.percentiles(vs, b.n, Array(0.5, 0.95))
-    MergedStats(TsCodec.encode(ts, vs), p(0), p(1))
+    MergedStats.ofSorted(ts, vs)
   }
 
   override def bufferEncoder: Encoder[PointsBuf] = Encoders.product[PointsBuf]
@@ -81,5 +80,18 @@ case class PointsBuf(var ts: Array[Long], var vs: Array[Double], var n: Int) {
   }
 }
 
-/** Output: compressed block + exact percentiles of its values. */
+/** Output of every block builder ([[BlockAggregator]],
+  * `Rollup.encodeWithStatsUdf`, `Rollup.mergeBlocksUdf`): compressed block +
+  * exact percentiles of its values.
+  */
 case class MergedStats(block: Array[Byte], p50: Double, p95: Double)
+
+object MergedStats {
+  /** Exact p50/p95 and the block of points already in (ts, v) order — the
+    * codec needs them sorted anyway, so the percentiles are free.
+    */
+  def ofSorted(ts: Array[Long], vs: Array[Double]): MergedStats = {
+    val p = PointSort.percentiles(vs, vs.length, Array(0.5, 0.95))
+    MergedStats(TsCodec.encode(ts, vs), p(0), p(1))
+  }
+}

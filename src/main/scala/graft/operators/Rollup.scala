@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import graft.functions.codec.{BlockCodec, TsCodec, PointRow, PointSort}
+import graft.functions.Hier
+import graft.functions.codec.{BlockAggregator, MergedStats, TsCodec, PointSort}
 
 /** Continuous-aggregate rollup + retention-tier promotion.
   *
@@ -26,9 +27,13 @@ import graft.functions.codec.{BlockCodec, TsCodec, PointRow, PointSort}
   *     larger lang domain the drop-in replacement is an HLL sketch
   *     (approx_count_distinct / HyperLogLogPlusPlus partials); kept exact here
   *     because the parity gate is exact.
-  *   - hot-host skew: [[tier1mSalted]] pre-aggregates on (key, salt) first —
-  *     see SURVEY.md §4.3 — and AQE skew-join/coalescing is enabled in the
-  *     session defaults.
+  *   - hot-host skew: at minute grain the time dimension already spreads a
+  *     hot host over many groups, and salting cannot split one hot (host,
+  *     minute) group — its merge phase still sends every partial block of
+  *     the group to one task, which decodes and re-encodes all its points.
+  *     [[tier1mSalted]] / [[mergePartialsSalted]] (SURVEY.md §4.3) are for
+  *     coarse groups with a large fan-in; AQE skew-join/coalescing is
+  *     enabled in the session defaults.
   */
 object Rollup {
 
@@ -59,8 +64,7 @@ object Rollup {
     var i = 0
     points.foreach { r => ts(i) = r.getLong(0); vs(i) = r.getDouble(1); i += 1 }
     PointSort.sortPairs(ts, vs, n)
-    val p = PointSort.percentiles(vs, n, Array(0.5, 0.95))
-    MergedBlock(TsCodec.encode(ts, vs), p(0), p(1))
+    MergedStats.ofSorted(ts, vs)
   }
 
   /** Merge N finer-tier blocks into one coarser block + exact percentiles,
@@ -82,8 +86,7 @@ object Rollup {
       runTs(i) = ts; runVs(i) = vs; i += 1
     }
     val (ts, vs) = PointSort.mergeSortedRuns(runTs, runVs)
-    val p = PointSort.percentiles(vs, vs.length, Array(0.5, 0.95))
-    MergedBlock(TsCodec.encode(ts, vs), p(0), p(1))
+    MergedStats.ofSorted(ts, vs)
   }
 
   /** Measure column: per-page text length in characters (parity-defined with
@@ -115,74 +118,70 @@ object Rollup {
     // buffers and ships them through the shuffle (measured 5-8× slower on
     // 32M pages / 1.23M groups).
     val keys = groupCols.map(col) :+ col("bucket_start")
-    df.select((keys :+ col("ts_sec") :+ col("text_len") :+ col("lang")): _*)
+    finish(df.select((keys :+ col("ts_sec") :+ col("text_len") :+ col("lang")): _*)
       .repartition(keys: _*)
       .groupBy(keys: _*)
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("text_len")).as("sum_len"),
-        min(col("text_len")).as("min_len"),
-        max(col("text_len")).as("max_len"),
-        collect_set(col("lang")).as("lang_set"),
-        graft.functions.codec.BlockAggregator(col("ts_sec"), col("text_len")).as("m")
-      )
-      .withColumn("mean_len", col("sum_len") / col("cnt"))
-      .withColumn("lang_card", size(col("lang_set")).cast("long"))
-      .withColumn("p50_len", col("m.p50"))
-      .withColumn("p95_len", col("m.p95"))
-      .withColumn("block", col("m.block"))
-      .drop("m")
+      .agg(rawPartial.head, rawPartial.tail: _*))
   }
 
+  /** Partial measures of one group of raw points (`ts_sec`, `text_len`,
+    * `lang`); the point block and its percentiles ride in struct `m`.
+    */
+  private def rawPartial: Seq[Column] = Seq(
+    count(lit(1)).as("cnt"),
+    sum(col("text_len")).as("sum_len"),
+    min(col("text_len")).as("min_len"),
+    max(col("text_len")).as("max_len"),
+    collect_set(col("lang")).as("lang_set"),
+    BlockAggregator(col("ts_sec"), col("text_len")).as("m"))
 
-  /** Skew-safe tier-1: phase 1 aggregates on (key, bucket, salt) so one hot
-    * host fans across `s` reducers, phase 2 merges the partials (associative
-    * measures + block merge). Result is identical to [[tier1m]] (salting
-    * invariance is property-tested).
+  /** The same measures re-aggregated from partial tier rows: associative
+    * measures combine, lang sets union, point blocks k-way merge into `m`.
+    */
+  private def mergedPartial: Seq[Column] = Seq(
+    sum(col("cnt")).as("cnt"),
+    sum(col("sum_len")).as("sum_len"),
+    min(col("min_len")).as("min_len"),
+    max(col("max_len")).as("max_len"),
+    array_distinct(flatten(collect_list(col("lang_set")))).as("lang_set"),
+    mergeBlocksUdf(collect_list(col("block"))).as("m"))
+
+  /** Derived tier columns over either aggregate above. */
+  private def finish(agg: DataFrame): DataFrame = agg
+    .withColumn("mean_len", col("sum_len") / col("cnt"))
+    .withColumn("lang_card", size(col("lang_set")).cast("long"))
+    .withColumn("p50_len", col("m.p50"))
+    .withColumn("p95_len", col("m.p95"))
+    .withColumn("block", col("m.block"))
+    .drop("m")
+
+  /** The columns a tier row needs to be merged again: group keys, bucket,
+    * the associative measures, the lang set and the point block.
+    */
+  private def partialCols(groupCols: Seq[String]): Seq[Column] =
+    (groupCols ++ Seq("bucket_start", "cnt", "sum_len", "min_len", "max_len",
+      "lang_set", "block")).map(col)
+
+  /** Salted tier-1: [[tier1m]] on (key, `s`-way url salt, bucket) so one
+    * hot group fans across `s` reducers, then [[mergePartials]] drops the
+    * salt. Result is identical to [[tier1m]] (salting invariance is
+    * property-tested). Not used by [[graft.plans.TierPipeline]]: at minute
+    * grain the merge still sends a hot group's every block to one task.
     */
   def tier1mSalted(pages: DataFrame, s: Int = 16,
-                   groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
-    val df = textLen(pages)
-      .withColumn("ts_sec", unix_timestamp(col("warc_ts")))
-      .withColumn("_salt", pmod(xxhash64(col("url")), lit(s.toLong)))
-    val partial = df
-      .groupBy((groupCols.map(col) ++ Seq(window(col("warc_ts"), "1 minute").as("w"), col("_salt"))): _*)
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("text_len")).as("sum_len"),
-        min(col("text_len")).as("min_len"),
-        max(col("text_len")).as("max_len"),
-        collect_set(col("lang")).as("lang_set"),
-        graft.functions.codec.BlockAggregator(col("ts_sec"), col("text_len")).as("mm")
-      )
-      .withColumn("block", col("mm.block"))
-      .withColumn("bucket_start", unix_timestamp(col("w.start")))
-      .drop("w", "_salt", "mm")
-    mergePartials(partial, groupCols)
-  }
+                   groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame =
+    mergePartials(tier1m(pages.withColumn("_salt", Hier.salt(col("url"), s)), groupCols :+ "_salt"),
+      groupCols)
 
   /** Merges partial tier rows sharing (groupCols, bucket_start): the shared
     * second phase of salting and of tier promotion.
     */
   private def mergePartials(partial: DataFrame, groupCols: Seq[String],
                             bucketExpr: Column = col("bucket_start")): DataFrame =
-    partial
+    finish(partial
       .withColumn("_bucket", bucketExpr)
       .groupBy((groupCols.map(col) :+ col("_bucket").as("bucket_start")): _*)
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        sum(col("sum_len")).as("sum_len"),
-        min(col("min_len")).as("min_len"),
-        max(col("max_len")).as("max_len"),
-        array_distinct(flatten(collect_list(col("lang_set")))).as("lang_set"),
-        mergeBlocksUdf(collect_list(col("block"))).as("m")
-      )
-      .withColumn("mean_len", col("sum_len") / col("cnt"))
-      .withColumn("lang_card", size(col("lang_set")).cast("long"))
-      .withColumn("p50_len", col("m.p50"))
-      .withColumn("p95_len", col("m.p95"))
-      .withColumn("block", col("m.block"))
-      .drop("m")
+      .agg(mergedPartial.head, mergedPartial.tail: _*))
 
   /** Promote a finer tier to `tierSeconds` buckets. Associative measures
     * re-aggregate; p50/p95 and the point block are rebuilt exactly from the
@@ -294,8 +293,6 @@ object Rollup {
   def readRange(tiers: Map[String, DataFrame], startSec: Long, endSec: Long,
                 groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
     val segs = coverage(startSec, endSec, Tiers.filter(t => tiers.contains(t.name)))
-    val partialCols = groupCols.map(col) ++ Seq(col("bucket_start"), col("cnt"),
-      col("sum_len"), col("min_len"), col("max_len"), col("lang_set"), col("block"))
     // ONE plan subtree per tier, its (disjoint) segment ranges OR-combined:
     // a tier usually covers two edge segments, and referencing the tier
     // frame twice would evaluate its whole upstream plan twice when the
@@ -307,7 +304,7 @@ object Rollup {
       val pred = ss.map(sg =>
           col("bucket_start") >= sg.startSec && col("bucket_start") < sg.endSec)
         .reduce(_ || _)
-      tiers(tier).filter(pred).select(partialCols: _*)
+      tiers(tier).filter(pred).select(partialCols(groupCols): _*)
     }
     mergePartials(parts.reduce(_.unionByName(_)), groupCols, bucketExpr = lit(startSec))
       .withColumnRenamed("bucket_start", "range_start")
@@ -339,12 +336,10 @@ object Rollup {
     val usable = Tiers.filter(t => tiers.contains(t.name) && stepSeconds % t.seconds == 0)
     require(usable.nonEmpty, s"no provided tier divides the $stepSeconds s step")
     val src = usable.maxBy(_.seconds)
-    val partialCols = groupCols.map(col) ++ Seq(col("bucket_start"), col("cnt"),
-      col("sum_len"), col("min_len"), col("max_len"), col("lang_set"), col("block"))
     val merged = mergePartials(
       tiers(src.name)
         .filter(col("bucket_start") >= startSec && col("bucket_start") < endSec)
-        .select(partialCols: _*),
+        .select(partialCols(groupCols): _*),
       groupCols,
       bucketExpr = col("bucket_start") - pmod(col("bucket_start"), lit(stepSeconds)))
     val grid = merged.select(groupCols.map(col): _*).distinct()
@@ -378,11 +373,9 @@ object Rollup {
                    groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
     val keys = groupCols :+ "bucket_start"
     val affected = latePartial.select(keys.map(col): _*).distinct()
-    val partialCols = groupCols.map(col) ++ Seq(col("bucket_start"), col("cnt"),
-      col("sum_len"), col("min_len"), col("max_len"), col("lang_set"), col("block"))
-    val touched = tier.join(affected, keys, "left_semi").select(partialCols: _*)
+    val touched = tier.join(affected, keys, "left_semi").select(partialCols(groupCols): _*)
     val merged = mergePartials(
-      touched.unionByName(latePartial.select(partialCols: _*)), groupCols)
+      touched.unionByName(latePartial.select(partialCols(groupCols): _*)), groupCols)
     val untouched = tier.join(affected, keys, "left_anti")
       .select(merged.columns.map(col): _*)
     merged.unionByName(untouched)
@@ -394,24 +387,8 @@ object Rollup {
     * ≤`s` partials. Result identical to a direct merge (associativity +
     * exact block recompute).
     */
-  def mergePartialsSalted(partial: DataFrame, groupCols: Seq[String], s: Int = 64): DataFrame = {
-    val salted = partial
-      .withColumn("_salt", pmod(xxhash64(col("block")), lit(s.toLong)))
-    val phase1 = salted
-      .withColumn("_bucket", col("bucket_start"))
-      .groupBy((groupCols.map(col) ++ Seq(col("_bucket").as("bucket_start"), col("_salt"))): _*)
-      .agg(
-        sum(col("cnt")).as("cnt"),
-        sum(col("sum_len")).as("sum_len"),
-        min(col("min_len")).as("min_len"),
-        max(col("max_len")).as("max_len"),
-        array_distinct(flatten(collect_list(col("lang_set")))).as("lang_set"),
-        mergeBlocksUdf(collect_list(col("block"))).as("m"))
-      .withColumn("block", col("m.block"))
-      .drop("m", "_salt")
-    mergePartials(phase1, groupCols)
-  }
+  def mergePartialsSalted(partial: DataFrame, groupCols: Seq[String], s: Int = 64): DataFrame =
+    mergePartials(
+      mergePartials(partial.withColumn("_salt", Hier.salt(col("block"), s)), groupCols :+ "_salt"),
+      groupCols)
 }
-
-/** Result struct of [[Rollup.mergeBlocksUdf]]. */
-case class MergedBlock(block: Array[Byte], p50: Double, p95: Double)

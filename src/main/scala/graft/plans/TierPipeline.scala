@@ -1,7 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.operators.Rollup
 
 /** Checkpoint-resumable retention-tier pipeline with per-partition lineage +
@@ -39,29 +41,56 @@ object TierPipeline {
   case class Config(
       root: String,
       groupCols: Seq[String] = Seq("tld", "registered_domain", "host"),
-      hostBuckets: Int = 8,
-      saltBuckets: Int = 16)
+      hostBuckets: Int = 8)
 
   def tierPath(root: String, tier: String): String = s"$root/tier_$tier"
   def lineagePath(root: String): String = s"$root/_lineage"
 
   /** Lineage schema: one row per completed partition of a tier. */
-  private[graft] val lineageSchema =
+  private val lineageSchema =
     "tier string, day string, host_bucket int, run_id string, " +
       "row_cnt long, page_cnt long, sum_len_sum double, status string"
 
-  /** The lineage + metrics table (empty if nothing ran yet). */
+  /** The FileSystem that holds `path` (not the session default), and the path. */
+  private[graft] def fsPath(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
+
+  private[graft] def exists(spark: SparkSession, path: String): Boolean = {
+    val (fs, p) = fsPath(spark, path)
+    fs.exists(p)
+  }
+
+  private def lineageFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType.fromDDL(lineageSchema))
+
+  /** The lineage + metrics table; empty if nothing ran yet (no lineage
+    * directory). Any other failure — an unknown filesystem, an unreadable
+    * table — is thrown, never read as "nothing built".
+    */
   def lineage(spark: SparkSession, root: String): DataFrame =
-    try spark.read.schema(lineageSchema).parquet(lineagePath(root))
-    catch { case _: Throwable =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(lineageSchema))
-    }
+    if (exists(spark, lineagePath(root))) spark.read.schema(lineageSchema).parquet(lineagePath(root))
+    else lineageFrame(spark, Seq.empty)
+
+  /** Appends lineage rows (in [[lineageSchema]] order); no-op when empty. */
+  private[graft] def appendLineage(spark: SparkSession, root: String, rows: Seq[Row]): Unit =
+    if (rows.nonEmpty) lineageFrame(spark, rows).write.mode(SaveMode.Append).parquet(lineagePath(root))
+
+  /** (day, host_bucket) partitions of `tier` with a `complete` lineage row. */
+  def completed(spark: SparkSession, root: String, tier: String): DataFrame =
+    lineage(spark, root)
+      .filter(col("tier") === tier && col("status") === "complete")
+      .select("day", "host_bucket")
+
+  /** Partition key of a host: which of `hostBuckets` directories it lands in. */
+  private[graft] def hostBucket(host: Column, hostBuckets: Int): Column =
+    pmod(xxhash64(host), lit(hostBuckets.toLong)).cast("int")
 
   private[graft] def withPartitionCols(tierDf: DataFrame, hostBuckets: Int): DataFrame =
     tierDf
       .withColumn("day", date_format(timestamp_seconds(col("bucket_start")), "yyyy-MM-dd"))
-      .withColumn("host_bucket", pmod(xxhash64(col("host")), lit(hostBuckets.toLong)).cast("int"))
+      .withColumn("host_bucket", hostBucket(col("host"), hostBuckets))
 
   /** Writes the pending (not-yet-complete) partitions of one tier:
     * dynamic-partition overwrite of the data, then metrics+lineage append.
@@ -69,9 +98,7 @@ object TierPipeline {
     */
   def writeTier(tierDf: DataFrame, tier: String, cfg: Config, runId: String): Seq[(String, Int)] = {
     val spark = tierDf.sparkSession
-    val done = lineage(spark, cfg.root)
-      .filter(col("tier") === tier && col("status") === "complete")
-      .select("day", "host_bucket")
+    val done = completed(spark, cfg.root, tier)
     val part = withPartitionCols(tierDf, cfg.hostBuckets)
     val pending = part.join(broadcast(done), Seq("day", "host_bucket"), "left_anti")
 
@@ -107,13 +134,10 @@ object TierPipeline {
       .filterNot(r => doneLocal.contains((r.getAs[String]("day"), r.getAs[Int]("host_bucket"))))
     if (metrics.isEmpty) return Seq.empty
 
-    val rows = metrics.map(r => org.apache.spark.sql.Row(
+    appendLineage(spark, cfg.root, metrics.toSeq.map(r => Row(
       tier, r.getAs[String]("day"), r.getAs[Int]("host_bucket"), runId,
       r.getAs[Long]("row_cnt"), r.getAs[Long]("page_cnt"),
-      r.getAs[Double]("sum_len_sum"), "complete"))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
-        org.apache.spark.sql.types.StructType.fromDDL(lineageSchema))
-      .write.mode(SaveMode.Append).parquet(lineagePath(cfg.root))
+      r.getAs[Double]("sum_len_sum"), "complete")))
 
     metrics.map(r => (r.getAs[String]("day"), r.getAs[Int]("host_bucket"))).toSeq
   }
@@ -139,31 +163,23 @@ object TierPipeline {
     */
   def enforceRetention(spark: SparkSession, cfg: Config, policy: Map[String, Int],
                        today: java.time.LocalDate, runId: String): Map[String, Seq[String]] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     policy.map { case (tier, keepDays) =>
       val cutoff = today.minusDays(keepDays.toLong).toString // yyyy-MM-dd sorts lexically
-      val lin = lineage(spark, cfg.root).filter(col("tier") === tier)
       // lineage is tiny (one row per partition ever completed) — the collect
       // is bounded by partition count, not data
-      val expired = lin.filter(col("status") === "expired")
+      val expired = lineage(spark, cfg.root)
+        .filter(col("tier") === tier && col("status") === "expired")
         .select("day", "host_bucket").collect()
         .map(r => (r.getString(0), r.getInt(1))).toSet
-      val todo = lin.filter(col("status") === "complete" && col("day") < lit(cutoff))
-        .select("day", "host_bucket").distinct().collect()
+      val todo = completed(spark, cfg.root, tier).filter(col("day") < lit(cutoff))
+        .distinct().collect()
         .map(r => (r.getString(0), r.getInt(1)))
         .filterNot(expired)
       val days = todo.map(_._1).distinct.sorted.toSeq
-      days.foreach { d =>
-        fs.delete(new org.apache.hadoop.fs.Path(tierPath(cfg.root, tier), s"day=$d"), true)
-      }
-      if (todo.nonEmpty) {
-        val rows = todo.map { case (d, hb) =>
-          org.apache.spark.sql.Row(tier, d, hb, runId, 0L, 0L, 0.0, "expired")
-        }
-        spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
-            org.apache.spark.sql.types.StructType.fromDDL(lineageSchema))
-          .write.mode(SaveMode.Append).parquet(lineagePath(cfg.root))
-      }
+      val (fs, base) = fsPath(spark, tierPath(cfg.root, tier))
+      days.foreach(d => fs.delete(new Path(base, s"day=$d"), true))
+      appendLineage(spark, cfg.root,
+        todo.toSeq.map { case (d, hb) => Row(tier, d, hb, runId, 0L, 0L, 0.0, "expired") })
       tier -> days
     }
   }
@@ -191,7 +207,7 @@ object TierPipeline {
     val spark = latePages.sparkSession
     val affected = latePages
       .select(date_format(col("warc_ts"), "yyyy-MM-dd").as("day"),
-        pmod(xxhash64(col("host")), lit(cfg.hostBuckets.toLong)).cast("int").as("host_bucket"))
+        hostBucket(col("host"), cfg.hostBuckets).as("host_bucket"))
       .distinct().collect()
       .map(r => (r.getString(0), r.getInt(1))).toSet
     if (affected.isEmpty) return Seq.empty
@@ -200,13 +216,10 @@ object TierPipeline {
       r.getString(7) == "complete" && affected.contains((r.getString(1), r.getInt(2)))
     }
     val tmp = lineagePath(cfg.root) + "_rewrite"
-    spark.createDataFrame(spark.sparkContext.parallelize(kept.toSeq, 1),
-        org.apache.spark.sql.types.StructType.fromDDL(lineageSchema))
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(lineagePath(cfg.root)), true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(lineagePath(cfg.root)))
+    lineageFrame(spark, kept.toSeq).write.mode(SaveMode.Overwrite).parquet(tmp)
+    val (fs, linPath) = fsPath(spark, lineagePath(cfg.root))
+    fs.delete(linPath, true)
+    fs.rename(new Path(tmp), linPath)
     affected.toSeq.sorted
   }
 
@@ -247,8 +260,7 @@ object TierPipeline {
               runId: String, zOrderCluster: Boolean = false): Seq[(String, Int)] = {
     require(maxFilesPerPartition >= 1, "maxFilesPerPartition must be >= 1")
     require(targetFileBytes >= 1, "targetFileBytes must be >= 1")
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(tierPath(cfg.root, tier))
+    val (fs, base) = fsPath(spark, tierPath(cfg.root, tier))
     if (!fs.exists(base)) return Seq.empty
     val parts = for {
       dayDir <- fs.listStatus(base).toSeq
@@ -295,12 +307,9 @@ object TierPipeline {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("day", "host_bucket")
       .parquet(tierPath(cfg.root, tier))
-    val rows = todo.map { case (d, hb, nFiles, bytes) =>
-      org.apache.spark.sql.Row(tier, d, hb, runId, nFiles.toLong, bytes, 0.0, "compacted")
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        org.apache.spark.sql.types.StructType.fromDDL(lineageSchema))
-      .write.mode(SaveMode.Append).parquet(lineagePath(cfg.root))
+    appendLineage(spark, cfg.root, todo.map { case (d, hb, nFiles, bytes) =>
+      Row(tier, d, hb, runId, nFiles.toLong, bytes, 0.0, "compacted")
+    })
     todo.map(t => (t._1, t._2))
   }
 
@@ -317,12 +326,10 @@ object TierPipeline {
     // no-op resume cost more than the initial build). The row-level
     // (day, host_bucket) predicate is cheap derived-column arithmetic; on a
     // day-partitioned source table the day side additionally prunes the scan.
-    val done1m = lineage(spark, cfg.root)
-      .filter(col("tier") === "1m" && col("status") === "complete")
-      .select(col("day").as("_day"), col("host_bucket").as("_hb"))
+    val done1m = completed(spark, cfg.root, "1m").toDF("_day", "_hb")
     def withKeys(df: DataFrame): DataFrame = df
       .withColumn("_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-      .withColumn("_hb", pmod(xxhash64(col("host")), lit(cfg.hostBuckets.toLong)).cast("int"))
+      .withColumn("_hb", hostBucket(col("host"), cfg.hostBuckets))
     // cheap pending probe FIRST, on (warc_ts, host) only: a fully-complete
     // resume must not pay a full-width scan (text bytes dominate the source)
     // just to learn nothing is pending. take(1) short-circuits as soon as
@@ -335,13 +342,11 @@ object TierPipeline {
       val pending = withKeys(pages)
         .join(broadcast(done1m), Seq("_day", "_hb"), "left_anti")
         .drop("_day", "_hb")
-      // saltBuckets <= 1 selects the single-phase aggregate: at (host,
-      // minute) grain the time dimension already spreads hot hosts, so
-      // salting only multiplies group count (measured slower on uniform
-      // corpora); keep >1 when single host×minute buckets can be hot.
-      val t1m = if (cfg.saltBuckets <= 1) Rollup.tier1m(pending, cfg.groupCols)
-                else Rollup.tier1mSalted(pending, cfg.saltBuckets, cfg.groupCols)
-      writeTier(t1m, "1m", cfg, runId)
+      // single-phase aggregate: at (host, minute) grain the time dimension
+      // already spreads hot hosts, and salting cannot split one hot (host,
+      // minute) group (see Rollup's scaladoc); measured 10% slower at 32M
+      // pages (BASELINE.md, TierPipeline soak)
+      writeTier(Rollup.tier1m(pending, cfg.groupCols), "1m", cfg, runId)
     }
     val written = Rollup.Tiers.tail.foldLeft(Map("1m" -> w1)) { case (acc, t) =>
       val finerName = Rollup.Tiers(Rollup.Tiers.indexWhere(_.name == t.name) - 1).name
@@ -350,12 +355,9 @@ object TierPipeline {
       // tier's complete lineage. Reading only pending DAYS is exact
       // directory-level partition pruning (the per-partition anti-join inside
       // writeTier then trims to exact (day, host_bucket) granularity).
-      val lin = lineage(spark, cfg.root).filter(col("status") === "complete").cache()
-      val pendingDays = lin.filter(col("tier") === finerName).select("day", "host_bucket")
-        .join(lin.filter(col("tier") === t.name).select("day", "host_bucket"),
-          Seq("day", "host_bucket"), "left_anti")
+      val pendingDays = completed(spark, cfg.root, finerName)
+        .join(completed(spark, cfg.root, t.name), Seq("day", "host_bucket"), "left_anti")
         .select("day").distinct().collect().map(_.getString(0)).toSeq
-      lin.unpersist()
       if (pendingDays.isEmpty) acc + (t.name -> Seq.empty)
       else {
         val finer = spark.read.parquet(tierPath(cfg.root, finerName))

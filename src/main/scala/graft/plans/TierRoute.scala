@@ -365,7 +365,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     // replacement expression is EXTRACTED from an analyzed template
     // (`collect_list(block)` -> `Rollup.mergeBlocksUdf` -> struct), so the
     // rule never hand-assembles ScalaUDF internals; p50/p95 are struct
-    // fields 1/2 of MergedBlock. One collect_list aggregate is shared by
+    // fields 1/2 of MergedStats. One collect_list aggregate is shared by
     // both percentile outputs (same resultId -> planned once).
     lazy val mergedStats: Option[Expression] = route.blockCol.flatMap { bc =>
       if (tierAttr(bc).isEmpty) None

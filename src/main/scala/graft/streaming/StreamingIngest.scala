@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -70,13 +71,10 @@ object StreamingIngest {
         .agg(count(lit(1)).as("row_cnt"), sum(col("cnt")).as("page_cnt"),
           sum(col("sum_len")).as("sum_len_sum"))
         .collect()
-      val rows = metrics.map(r => org.apache.spark.sql.Row(
+      TierPipeline.appendLineage(spark, cfg.root, metrics.toSeq.map(r => Row(
         StreamTier, r.getAs[String]("day"), r.getAs[Int]("host_bucket"), batchRun,
         r.getAs[Long]("row_cnt"), r.getAs[Long]("page_cnt"),
-        r.getAs[Double]("sum_len_sum"), "stream-append"))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1),
-          org.apache.spark.sql.types.StructType.fromDDL(TierPipeline.lineageSchema))
-        .write.mode(SaveMode.Append).parquet(TierPipeline.lineagePath(cfg.root))
+        r.getAs[Double]("sum_len_sum"), "stream-append")))
     } finally part.unpersist()
   }
 
@@ -114,8 +112,7 @@ object StreamingIngest {
   def pruneStreamTier(spark: SparkSession, cfg: TierPipeline.Config,
                       runId: String): Seq[(String, Int)] = {
     val lin = TierPipeline.lineage(spark, cfg.root)
-    val batchDone = lin.filter(col("tier") === "1m" && col("status") === "complete")
-      .select("day", "host_bucket")
+    val batchDone = TierPipeline.completed(spark, cfg.root, "1m")
     val streamed = lin.filter(col("tier") === StreamTier &&
         col("status") === "stream-append")
       .select("day", "host_bucket")
@@ -128,22 +125,15 @@ object StreamingIngest {
       .map(r => (r.getString(0), r.getInt(1))).toSeq
     if (todo.isEmpty) return Seq.empty
 
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    todo.foreach { case (d, hb) =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        streamTierPath(cfg.root), s"day=$d/host_bucket=$hb"), true)
-    }
+    val (fs, base) = TierPipeline.fsPath(spark, streamTierPath(cfg.root))
+    todo.foreach { case (d, hb) => fs.delete(new Path(base, s"day=$d/host_bucket=$hb"), true) }
     // drop day directories left empty (keeps file listings clean for readers)
     todo.map(_._1).distinct.foreach { d =>
-      val dayPath = new org.apache.hadoop.fs.Path(streamTierPath(cfg.root), s"day=$d")
+      val dayPath = new Path(base, s"day=$d")
       if (fs.exists(dayPath) && fs.listStatus(dayPath).isEmpty) fs.delete(dayPath, true)
     }
-    val rows = todo.map { case (d, hb) =>
-      org.apache.spark.sql.Row(StreamTier, d, hb, runId, 0L, 0L, 0.0, "stream-pruned")
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        org.apache.spark.sql.types.StructType.fromDDL(TierPipeline.lineageSchema))
-      .write.mode(SaveMode.Append).parquet(TierPipeline.lineagePath(cfg.root))
+    TierPipeline.appendLineage(spark, cfg.root,
+      todo.map { case (d, hb) => Row(StreamTier, d, hb, runId, 0L, 0L, 0.0, "stream-pruned") })
     todo
   }
 
@@ -157,32 +147,26 @@ object StreamingIngest {
               groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
     val serveCols = (groupCols ++ Seq("bucket_start", "cnt", "sum_len",
       "min_len", "max_len", "mean_len")).map(col)
-    def exists(p: String): Boolean = {
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
-    }
     def empty: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.sparkContext.emptyRDD[Row],
       org.apache.spark.sql.types.StructType.fromDDL(
         groupCols.map(c => s"$c string").mkString(", ") +
         ", bucket_start long, cnt long, sum_len double, min_len double" +
         ", max_len double, mean_len double"))
-    val batchDone = TierPipeline.lineage(spark, cfg.root)
-      .filter(col("tier") === "1m" && col("status") === "complete")
-      .select("day", "host_bucket")
-    val hot = if (!exists(streamTierPath(cfg.root))) empty else
+    val batchDone = TierPipeline.completed(spark, cfg.root, "1m")
+    val hot = if (!TierPipeline.exists(spark, streamTierPath(cfg.root))) empty else
       spark.read.parquet(streamTierPath(cfg.root))
         .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
         .join(broadcast(batchDone), Seq("day", "host_bucket"), "left_anti")
         .select(serveCols: _*)
-    val coldPath = new org.apache.hadoop.fs.Path(TierPipeline.tierPath(cfg.root, "1m"))
-    if (!exists(coldPath.toString)) hot
+    val coldPath = TierPipeline.tierPath(cfg.root, "1m")
+    if (!TierPipeline.exists(spark, coldPath)) hot
     else {
       // cold side restricted to lineage-COMPLETE partitions: data written by
       // a crashed batch run that never reached its lineage append must not be
       // served (it will be overwritten on resume, and its partition is still
       // served from the hot layer by the anti-join above)
-      val cold = spark.read.parquet(coldPath.toString)
+      val cold = spark.read.parquet(coldPath)
         .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
         .join(broadcast(batchDone), Seq("day", "host_bucket"), "left_semi")
         .select(serveCols: _*)

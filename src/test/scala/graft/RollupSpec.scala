@@ -75,17 +75,20 @@ class RollupSpec extends SparkSuite {
   }
 
   test("salting invariance: salted tier1m == unsalted") {
-    val salted = tier1mSalted(pages, s = 8)
-      .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "p50_len", "p95_len", "lang_card")
-    val plain = t1m
-      .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "p50_len", "p95_len", "lang_card")
-    val j = salted.alias("a").join(plain.alias("b"), Seq("host", "bucket_start"), "full_outer")
+    def measures(df: org.apache.spark.sql.DataFrame) = df.select(col("host"), col("bucket_start"),
+      col("cnt"), col("sum_len"), col("min_len"), col("max_len"), col("p50_len"), col("p95_len"),
+      col("lang_card"), sha2(col("block"), 256).as("block_sha"))
+    val j = measures(tier1mSalted(pages, s = 8)).alias("a")
+      .join(measures(t1m).alias("b"), Seq("host", "bucket_start"), "full_outer")
     assert(j.filter(col("a.cnt").isNull || col("b.cnt").isNull).count() == 0)
     val bad = j.filter(col("a.cnt") =!= col("b.cnt") ||
       abs(col("a.sum_len") - col("b.sum_len")) > 1e-9 ||
+      col("a.min_len") =!= col("b.min_len") ||
+      col("a.max_len") =!= col("b.max_len") ||
       abs(col("a.p50_len") - col("b.p50_len")) > 1e-9 ||
       abs(col("a.p95_len") - col("b.p95_len")) > 1e-9 ||
-      col("a.lang_card") =!= col("b.lang_card")).count()
+      col("a.lang_card") =!= col("b.lang_card") ||
+      col("a.block_sha") =!= col("b.block_sha")).count()
     assert(bad == 0)
   }
 

@@ -99,7 +99,7 @@ class StreamingIngestSpec extends SparkSuite {
   test("readHot serves each partition from exactly one layer") {
     implicit val sqlCtx = spark.sqlContext
     val root = tmp("ingest_hot")
-    val cfg = TierPipeline.Config(root, saltBuckets = 1)
+    val cfg = TierPipeline.Config(root)
     // day 1 = 2024-01-01 (minutes 0-4), day 2 = 2024-01-02 (minutes 1500-1504)
     val day1 = (0 until 10).map { i =>
       StreamPage(s"https://w$i.site${i % 3}.com/p/$i", ts(i % 5, i), "x" * (2 + i), "en")

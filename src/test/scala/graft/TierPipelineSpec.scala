@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Hier
 import graft.operators.Rollup
@@ -36,6 +37,16 @@ class TierPipelineSpec extends SparkSuite {
     val w1 = TierPipeline.buildAll(pages, cfg, runId = "run1")
     assert(w1.keySet === Set("1m", "5m", "1h", "1d"))
     assert(w1.values.forall(_.nonEmpty))
+    // stored 1m tier == the in-memory tier1m, row for row: block bytes,
+    // lang set (order-free) and every derived measure
+    def rows1m(df: DataFrame): DataFrame = df.select(col("tld"), col("registered_domain"),
+      col("host"), col("bucket_start"), col("cnt"), col("sum_len"), col("min_len"), col("max_len"),
+      col("mean_len"), col("p50_len"), col("p95_len"), col("lang_card"),
+      sort_array(col("lang_set")).as("lang_set"), sha2(col("block"), 256).as("block_sha"))
+    val stored1m = rows1m(TierPipeline.readTier(spark, cfg, "1m"))
+    val direct1m = rows1m(Rollup.tier1m(pages))
+    assert(stored1m.count() === direct1m.count())
+    assert(stored1m.exceptAll(direct1m).isEmpty && direct1m.exceptAll(stored1m).isEmpty)
     // stored 1h tier == direct promotion of the in-memory cascade
     val stored = TierPipeline.readTier(spark, cfg, "1h")
       .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "p50_len", "p95_len")
@@ -49,6 +60,13 @@ class TierPipelineSpec extends SparkSuite {
     // second run: everything complete -> nothing recomputed
     val w2 = TierPipeline.buildAll(pages, cfg, runId = "run2")
     assert(w2.values.forall(_.isEmpty))
+  }
+
+  test("lineage: empty before any build, but a listing failure throws") {
+    assert(TierPipeline.lineage(spark, freshRoot()).isEmpty)
+    // an unreadable root must not read as "nothing built yet": invalidateLate
+    // would write that empty table over _lineage and drop all build progress
+    intercept[Exception](TierPipeline.lineage(spark, "nosuchfs://x/root"))
   }
 
   test("killed promotion resumes: only unfinished partitions recompute") {

@@ -283,7 +283,7 @@ class TierRouteSpec extends SparkSuite {
       .write.mode("overwrite").parquet(rawDir)
     val rawPages = spark.read.parquet(rawDir)
     val cfg = TierPipeline.Config(Files.createTempDirectory("graft_store").toString,
-      hostBuckets = 2, saltBuckets = 1)
+      hostBuckets = 2)
     TierPipeline.buildAll(rawPages, cfg, runId = "routes1")
     val uw = unix_timestamp(col("warc_ts"))
     def daily(src: DataFrame): DataFrame = src
