@@ -1,15 +1,14 @@
-/* Dumps explain("formatted") of the headline cascade (tier1m -> 5m -> 1h -> 1d)
- * and of TierPipeline.buildAll's tier_1m write, over 20k synthetic pages at
- * local[4] with 16 shuffle partitions, into <out>/{cascade,buildall_1m_write}_<tag>.txt.
- * Expression ids, object hashes, plan ids and the work directory are
- * normalized so two trees' dumps diff cleanly.
- *
- * Not part of the sbt build. From the repository root:
- *   classes=$(python3 perfbench/build.py)
- *   java -cp "$SPARK_HOME/jars/*:$classes" scala.tools.nsc.Main -usejavacp -d /tmp/pd plans/pr3/PlanDump.scala
- *   java <build.sbt's --add-opens> -Duser.timezone=UTC -Dspark.sql.session.timeZone=UTC \
- *     -cp "/tmp/pd:$classes:$SPARK_HOME/jars/*" PlanDump /tmp/pd-work plans/pr3 after
- */
+// Dumps explain("formatted") of the headline cascade (tier1m -> 5m -> 1h -> 1d)
+// and of TierPipeline.buildAll's tier_1m write, over 20k synthetic pages at
+// local[4] with 16 shuffle partitions, into <out>/{cascade,buildall_1m_write}_<tag>.txt.
+// Expression ids, object hashes, plan ids and the work directory are
+// normalized so two trees' dumps diff cleanly.
+//
+// Not part of the sbt build. From the repository root:
+//   classes=$(python3 perfbench/build.py)
+//   java -cp "$SPARK_HOME/jars/*:$classes" scala.tools.nsc.Main -usejavacp -d /tmp/pd plans/pr3/PlanDump.scala
+//   java <build.sbt's --add-opens> -Duser.timezone=UTC -Dspark.sql.session.timeZone=UTC \
+//     -cp "/tmp/pd:$classes:$SPARK_HOME/jars/*" PlanDump /tmp/pd-work plans/pr3 after
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand

@@ -707,8 +707,8 @@ private[graft] object EntriesQ001 extends EntryPart {
     }),
 
     // the engine's SIGNATURE path against the independent oracle: 1m blocks
-    // (BlockAggregator) -> promote to 1h where p50/p95 are recomputed from
-    // the DECODED, k-way-merged Gorilla blocks (Rollup.mergeBlocksUdf) —
+    // (BlockAgg point mode) -> promote to 1h where p50/p95 are recomputed
+    // from the DECODED, merged Gorilla blocks (BlockAgg block mode) —
     // the oracle computes quantile_cont directly from raw at 1h grain, so a
     // green row proves block encode/merge/percentile exactness end-to-end
     "q62_block_pctl_promote" -> ((s, dir) => {
@@ -719,7 +719,7 @@ private[graft] object EntriesQ001 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
           min(col("value")).as("min_len"), max(col("value")).as("max_len"),
           collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAggregator(col("ts_sec"), col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
         .withColumn("block", col("m.block")).drop("m")
       Rollup.promote(t1m, 3600L, groupCols = Seq("user_id"))
         .select(col("user_id"), col("bucket_start"), col("cnt"),
@@ -741,7 +741,7 @@ private[graft] object EntriesQ001 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
           min(col("value")).as("min_len"), max(col("value")).as("max_len"),
           collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAggregator(col("ts_sec"), col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
         .withColumn("mean_len", col("sum_len") / col("cnt"))
         .withColumn("lang_card", size(col("lang_set")).cast("long"))
         .withColumn("p50_len", col("m.p50")).withColumn("p95_len", col("m.p95"))

@@ -143,7 +143,7 @@ private[graft] object EntriesQ099 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
           min(col("value")).as("min_len"), max(col("value")).as("max_len"),
           collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAggregator(col("ts_sec"), col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
         .withColumn("block", col("m.block")).drop("m")
       val t1h = Rollup.promote(t1m, 3600L, groupCols = Seq("user_id"))
       val t1d = Rollup.promote(t1h, 86400L, groupCols = Seq("user_id"))
@@ -318,7 +318,7 @@ private[graft] object EntriesQ099 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
           min(col("value")).as("min_len"), max(col("value")).as("max_len"),
           collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAggregator(col("ts_sec"), col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
         .withColumn("block", col("m.block")).drop("m")
       val t5m = Rollup.promote(t1m, 300L, groupCols = Seq("user_id"))
       Rollup.readSeries(Map("1m" -> t1m, "5m" -> t5m),

@@ -627,9 +627,9 @@ private[graft] object EntriesQ169 extends EntryPart {
     }),
 
     // percentile routing: the tier additionally carries Gorilla point
-    // blocks (BlockAggregator), and the raw-phrased HOURLY
-    // percentile(value, .5/.95) is rewritten onto the k-way block merge
-    // (collect_list(block) -> mergeBlocksUdf -> struct fields) — the
+    // blocks (BlockAgg point mode), and the raw-phrased HOURLY
+    // percentile(value, .5/.95) is rewritten onto the block merge
+    // (BlockAgg block mode -> struct fields) — the
     // optimizer meeting the engine's signature exact-percentile promotion.
     // Oracle: quantile_cont on raw at the same grain; parity is exact, 6-dp
     // rounded on both sides.
@@ -641,7 +641,7 @@ private[graft] object EntriesQ169 extends EntryPart {
       raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
         .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
           min("value").as("min_value"), max("value").as("max_value"),
-          graft.functions.codec.BlockAggregator(u, col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
         .withColumn("block", col("m.block")).drop("m")
         .write.mode("overwrite").parquet(tierPath)
       TierRoute.install(s)

@@ -567,7 +567,7 @@ private[graft] object EntriesQ242 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
           min(col("value")).as("min_len"), max(col("value")).as("max_len"),
           collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAggregator(col("ts_sec"), col("value")).as("m"))
+          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
         .withColumn("mean_len", col("sum_len") / col("cnt"))
         .withColumn("lang_card", size(col("lang_set")).cast("long"))
         .withColumn("p50_len", col("m.p50")).withColumn("p95_len", col("m.p95"))

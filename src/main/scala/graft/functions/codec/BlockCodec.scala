@@ -1,42 +1,26 @@
 package graft.functions.codec
 
-import org.apache.spark.sql.{Column, Row}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
-/** Spark column bindings for [[TsCodec]].
+/** Spark column binding for reading [[TsCodec]] blocks back as points.
   *
-  * Points are gathered per (group, coarse-bucket) with `collect_list(struct)`
-  * + `array_sort` and encoded by a scalar UDF into a `BinaryType` block.
-  * Rationale (SURVEY.md §2.11): a Gorilla stream is order-recursive, so a
-  * merge-capable partial-aggregation buffer must hold the raw points anyway —
-  * a TypedImperativeAggregate would buffer exactly what collect_list buffers.
-  * Per-block cardinality is bounded by the bucket width (points per host per
-  * minute), so the array never approaches executor memory even at 10^12 rows;
-  * the *number* of blocks scales out across partitions.
+  * Blocks are BUILT by the native aggregate [[BlockAgg]] (from raw points,
+  * or by merging finer blocks), which buffers each group's points in
+  * primitive arrays: a Gorilla stream is order-recursive, so the raw points
+  * are the smallest merge-capable partial state (SURVEY.md §2.11). Per-block
+  * cardinality is bounded by the bucket width (points per host per bucket),
+  * so a buffer never approaches executor memory even at 10^12 rows; the
+  * *number* of blocks scales out across partitions.
   */
 object BlockCodec {
-
-  /** Encode an array<struct<ts:long, v:double>> (any order) into a block. */
-  val encodeUdf: UserDefinedFunction = udf { (points: Seq[Row]) =>
-    // sort by (ts, v), not ts alone: equal-timestamp points would otherwise
-    // keep collect_list's nondeterministic order and block bytes would differ
-    // run to run (breaking replay-identity of resumed jobs)
-    val sorted = points.map(r => (r.getLong(0), r.getDouble(1))).sortBy(identity).toArray
-    TsCodec.encode(sorted.map(_._1), sorted.map(_._2))
-  }
 
   /** Decode a block back to array<struct<ts:long, v:double>>. */
   val decodeUdf: UserDefinedFunction = udf { (block: Array[Byte]) =>
     val (ts, vs) = TsCodec.decode(block)
     ts.zip(vs).map { case (t, v) => PointRow(t, v) }
   }
-
-  /** Aggregate expression: collect (tsSeconds, value) points of the current
-    * group into one compressed binary block.
-    */
-  def encodeBlock(tsSeconds: Column, value: Column): Column =
-    encodeUdf(collect_list(struct(tsSeconds.cast("long").as("ts"), value.cast("double").as("v"))))
 
   /** Scalar expression: block → array<struct<ts,v>> (use with `explode`). */
   def decodeBlock(block: Column): Column = decodeUdf(block)

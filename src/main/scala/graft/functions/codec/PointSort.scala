@@ -10,12 +10,12 @@ package graft.functions.codec
   * ~75 s/level at 8 cores, ~3× the cost of the tier-1 aggregate itself).
   * These routines keep the points in parallel primitive arrays end to end:
   *
-  *   - [[sortPairs]]: dual-array quicksort by (ts, value) — for tier-1
-  *     encode, where points arrive unordered.
-  *   - [[mergeSortedRuns]]: k-way heap merge — for promotion, where every
-  *     input block is ALREADY sorted (the codec's invariant), so a full
-  *     re-sort is algorithmically wasted work: merge is O(n log k) with no
-  *     allocation beyond the output.
+  *   - [[sortPairs]]: dual-array quicksort by (ts, value) — the one sort of
+  *     [[BlockAgg]], for raw points and for concatenated decoded blocks
+  *     alike (a few sorted runs per promoted bucket).
+  *   - [[mergeSortedRuns]]: k-way heap merge of runs that are each already
+  *     sorted (the codec's invariant) — O(n log k), no allocation beyond the
+  *     output; the reference BlockAgg's block mode is specified against.
   *
   * Value comparisons use `java.lang.Double.compare` — identical to the
   * `Ordering.Double.TotalOrdering` the boxed paths used (-0.0 < 0.0, NaN

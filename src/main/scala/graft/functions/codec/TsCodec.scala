@@ -87,8 +87,9 @@ final class BitReader(bytes: Array[Byte]) {
   *
   * Block layout: [int32 count][ts stream][value stream] — the two streams are
   * interleaved point-by-point (ts bits then value bits), matching the paper.
-  * Encoding/decoding is driver-free pure Scala, invoked from executors via
-  * UDFs in [[BlockCodec]].
+  * Encoding/decoding is pure Scala with no Spark dependency, run on the
+  * executors by the [[BlockAgg]] aggregate and the [[BlockCodec]] decode
+  * binding.
   */
 object TsCodec {
 

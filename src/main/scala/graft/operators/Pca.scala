@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: the MODEL is tiny, the DATA is huge — so the fit is ONE
   * aggregation pass with a primitive-buffer typed `Aggregator` (the
-  * engine's licensed pattern, like `BlockAggregator`/`Cms`/`Hll`)
+  * engine's licensed pattern, like `Cms`/`Hll`)
   * accumulating n, the d per-dimension sums, and the d(d+1)/2
   * upper-triangular second moments: a fixed ~8·(1+d+d(d+1)/2)-byte buffer
   * (d=64 → ~17 KB) that map-side combines and merges by elementwise add.

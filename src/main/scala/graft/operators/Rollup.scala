@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import graft.functions.Hier
-import graft.functions.codec.{BlockAggregator, MergedStats, TsCodec, PointSort}
+import graft.functions.codec.{BlockAgg, MergedStats, PointSort}
 
 /** Continuous-aggregate rollup + retention-tier promotion.
   *
@@ -16,24 +16,39 @@ import graft.functions.codec.{BlockAggregator, MergedStats, TsCodec, PointSort}
   * text-length + lang distinct-count, tiers 1m → 5m → 1h → 1d.
   *
   * Scale design:
-  *   - tier-1 is ONE shuffle on (hierarchy, minute-bucket) — map-side partial
-  *     aggregation applies to every associative measure; the Gorilla point
-  *     block and the percentile inputs ride the same shuffle.
+  *   - the whole cascade is ONE shuffle: [[tier1m]] hash-partitions raw
+  *     points on the hierarchy columns alone, and every later merge groups
+  *     by (hierarchy, coarser bucket), a clustering that partitioning already
+  *     satisfies — so `tier1m → promote × 3` plans as one exchange followed
+  *     by one stage of chained aggregates (PlanEvidenceSpec). The exchange
+  *     moves lean raw points; the aggregation runs after it.
   *   - promotion NEVER re-reads raw pages: count/sum/min/max re-aggregate
   *     associatively, mean = sum/count, p50/p95 + the promoted point block are
-  *     recomputed exactly from the decoded finer-tier blocks — again one
-  *     shuffle per tier, over already-rolled-up (small) data.
+  *     recomputed exactly from the decoded finer-tier blocks by the block
+  *     mode of [[graft.functions.codec.BlockAgg]]; a tier read back from
+  *     storage shuffles once per promotion, over already-rolled-up data.
+  *   - point blocks: one native aggregate ([[graft.functions.codec.BlockAgg]])
+  *     builds them from raw points and from finer blocks, into primitive
+  *     arrays, with no per-row object.
   *   - lang cardinality: exact via a per-bucket lang set (tiny domain). At a
   *     larger lang domain the drop-in replacement is an HLL sketch
   *     (approx_count_distinct / HyperLogLogPlusPlus partials); kept exact here
   *     because the parity gate is exact.
-  *   - hot-host skew: at minute grain the time dimension already spreads a
-  *     hot host over many groups, and salting cannot split one hot (host,
-  *     minute) group — its merge phase still sends every partial block of
-  *     the group to one task, which decodes and re-encodes all its points.
-  *     [[tier1mSalted]] / [[mergePartialsSalted]] (SURVEY.md §4.3) are for
-  *     coarse groups with a large fan-in; AQE skew-join/coalescing is
-  *     enabled in the session defaults.
+  *   - hot-host skew: the trade-off of the single shuffle. Hierarchy-only
+  *     partitioning sends all of a hot host's points, every minute of them,
+  *     to one reduce task, which then builds all four of its tiers. On the
+  *     benchmark input (100k pages, the top host holds 10% of them) at
+  *     local[4], AQE coalesced the stage to 3 tasks and the largest took
+  *     34-41% of the stage's summed task time, near an even third, so the
+  *     three saved shuffles outweigh it there (CHANGES.md). Many-core boxes
+  *     were not measured: once the cores outnumber the work outside the hot
+  *     host, its task bounds the stage. Partitioning on (hierarchy, minute)
+  *     instead spreads a hot host but costs one shuffle per promotion.
+  *     Salting cannot split one hot (host, minute) group — its merge still
+  *     sends every partial block of the group to one task, which decodes and
+  *     re-encodes all its points. [[tier1mSalted]] / [[mergePartialsSalted]]
+  *     (SURVEY.md §4.3) are for coarse groups with a large fan-in; AQE
+  *     skew-join/coalescing is enabled in the session defaults.
   */
 object Rollup {
 
@@ -67,28 +82,6 @@ object Rollup {
     MergedStats.ofSorted(ts, vs)
   }
 
-  /** Merge N finer-tier blocks into one coarser block + exact percentiles,
-    * decoding each input block exactly once.
-    *
-    * Every input block is already (ts, v)-sorted (codec invariant), so this
-    * is a k-way primitive merge — O(n log k), no re-sort. The previous
-    * formulation concatenated and `sortBy(identity)`-ed BOXED tuples: at
-    * promotion time that re-sorted the entire point population of the tier
-    * per level (~75 s/level on the 32M-point bench corpus vs ~8 s merged).
-    */
-  val mergeBlocksUdf: UserDefinedFunction = udf { (blocks: Seq[Array[Byte]]) =>
-    val k = blocks.length
-    val runTs = new Array[Array[Long]](k)
-    val runVs = new Array[Array[Double]](k)
-    var i = 0
-    blocks.foreach { b =>
-      val (ts, vs) = TsCodec.decode(b)
-      runTs(i) = ts; runVs(i) = vs; i += 1
-    }
-    val (ts, vs) = PointSort.mergeSortedRuns(runTs, runVs)
-    MergedStats.ofSorted(ts, vs)
-  }
-
   /** Measure column: per-page text length in characters (parity-defined with
     * the oracle: `length(text)`), computed with the vectorizable
     * [[graft.functions.Utf8CharCountExpr]] — `length()`'s numChars loop was
@@ -108,18 +101,20 @@ object Rollup {
     val df = textLen(pages)
       .withColumn("ts_sec", unix_timestamp(col("warc_ts")))
       .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
-    // EXPLICIT repartition on the group key BEFORE the aggregate, so the
+    // EXPLICIT repartition on the hierarchy BEFORE the aggregate, so the
     // shuffle moves lean raw points (~60 B/row) and the aggregation runs
     // once, post-shuffle. Letting Catalyst insert the exchange instead puts
     // a partial aggregation on the MAP side — pure overhead here: a Gorilla
     // block is order-recursive, so the partial state IS the points
     // themselves, and with groups ~64× wider than per-file row groups every
-    // map task builds a near-full-cardinality hash map of padded array
-    // buffers and ships them through the shuffle (measured 5-8× slower on
-    // 32M pages / 1.23M groups).
+    // map task builds a near-full-cardinality hash map of point buffers and
+    // ships them through the shuffle (measured 5-8× slower on 32M pages /
+    // 1.23M groups). Hierarchy only, not (hierarchy, bucket): promotions
+    // group by (hierarchy, coarser bucket), which this partitioning already
+    // satisfies, so they add no shuffle (hot-host trade-off: see above).
     val keys = groupCols.map(col) :+ col("bucket_start")
     finish(df.select((keys :+ col("ts_sec") :+ col("text_len") :+ col("lang")): _*)
-      .repartition(keys: _*)
+      .repartition(groupCols.map(col): _*)
       .groupBy(keys: _*)
       .agg(rawPartial.head, rawPartial.tail: _*))
   }
@@ -133,10 +128,10 @@ object Rollup {
     min(col("text_len")).as("min_len"),
     max(col("text_len")).as("max_len"),
     collect_set(col("lang")).as("lang_set"),
-    BlockAggregator(col("ts_sec"), col("text_len")).as("m"))
+    BlockAgg.points(col("ts_sec"), col("text_len")).as("m"))
 
   /** The same measures re-aggregated from partial tier rows: associative
-    * measures combine, lang sets union, point blocks k-way merge into `m`.
+    * measures combine, lang sets union, point blocks merge into `m`.
     */
   private def mergedPartial: Seq[Column] = Seq(
     sum(col("cnt")).as("cnt"),
@@ -144,7 +139,7 @@ object Rollup {
     min(col("min_len")).as("min_len"),
     max(col("max_len")).as("max_len"),
     array_distinct(flatten(collect_list(col("lang_set")))).as("lang_set"),
-    mergeBlocksUdf(collect_list(col("block"))).as("m"))
+    BlockAgg.blocks(col("block")).as("m"))
 
   /** Derived tier columns over either aggregate above. */
   private def finish(agg: DataFrame): DataFrame = agg
@@ -275,7 +270,7 @@ object Rollup {
     * path of a retention-tier store (TimescaleDB-style real-time aggregates).
     * Associative measures re-merge; p50/p95 stay EXACT because each tier row
     * carries its Gorilla point block and the stitched percentile is
-    * recomputed from the k-way-merged blocks ([[mergeBlocksUdf]]).
+    * recomputed from the merged blocks ([[graft.functions.codec.BlockAgg]]).
     *
     * Scale: per group this touches O(interior-days + 48 + 118) tier rows for
     * ANY range width — at 10^12 raw pages a month-wide ad-hoc percentile

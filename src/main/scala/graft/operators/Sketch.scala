@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Spark-declarative realization, not a port).
   *
   * Role in the engine: the tier store keeps EXACT percentiles by carrying
-  * compressed point blocks (`BlockAggregator` + Gorilla codec) — the right
+  * compressed point blocks (`BlockAgg` + Gorilla codec) — the right
   * call while blocks fit the tier budget. A DDSketch tier is the documented
   * fallback when they do not (e.g. p99 over a year of raw points at host
   * grain): the sketch is a FIXED-size histogram (one row per occupied

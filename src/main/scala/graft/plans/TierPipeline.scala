@@ -97,11 +97,18 @@ object TierPipeline {
     * Returns the (day, host_bucket) partitions written.
     */
   def writeTier(tierDf: DataFrame, tier: String, cfg: Config, runId: String): Seq[(String, Int)] = {
-    val spark = tierDf.sparkSession
-    val done = completed(spark, cfg.root, tier)
-    val part = withPartitionCols(tierDf, cfg.hostBuckets)
-    val pending = part.join(broadcast(done), Seq("day", "host_bucket"), "left_anti")
+    val done = completed(tierDf.sparkSession, cfg.root, tier)
+    writePending(withPartitionCols(tierDf, cfg.hostBuckets)
+      .join(broadcast(done), Seq("day", "host_bucket"), "left_anti"), done, tier, cfg, runId)
+  }
 
+  /** The write half of [[writeTier]], for tier rows already cut to pending
+    * partitions (`pending` carries the partition columns; `done` is the
+    * tier's [[completed]] frame the cut was made against).
+    */
+  private def writePending(pending: DataFrame, done: DataFrame, tier: String, cfg: Config,
+                           runId: String): Seq[(String, Int)] = {
+    val spark = pending.sparkSession
     pending.write
       .mode(SaveMode.Overwrite)
       // dynamic partition overwrite set PER WRITE, not inherited from the
@@ -326,7 +333,8 @@ object TierPipeline {
     // no-op resume cost more than the initial build). The row-level
     // (day, host_bucket) predicate is cheap derived-column arithmetic; on a
     // day-partitioned source table the day side additionally prunes the scan.
-    val done1m = completed(spark, cfg.root, "1m").toDF("_day", "_hb")
+    val done1m = completed(spark, cfg.root, "1m")
+    val done1mKeys = done1m.toDF("_day", "_hb")
     def withKeys(df: DataFrame): DataFrame = df
       .withColumn("_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
       .withColumn("_hb", hostBucket(col("host"), cfg.hostBuckets))
@@ -336,17 +344,19 @@ object TierPipeline {
     // one pending row is found, so the probe is ~free when work exists; on a
     // day-partitioned source the day predicate additionally prunes dirs.
     val anyPending = withKeys(pages.select("warc_ts", "host"))
-      .join(broadcast(done1m), Seq("_day", "_hb"), "left_anti")
+      .join(broadcast(done1mKeys), Seq("_day", "_hb"), "left_anti")
       .take(1).nonEmpty
     val w1 = if (!anyPending) Seq.empty[(String, Int)] else {
       val pending = withKeys(pages)
-        .join(broadcast(done1m), Seq("_day", "_hb"), "left_anti")
+        .join(broadcast(done1mKeys), Seq("_day", "_hb"), "left_anti")
         .drop("_day", "_hb")
-      // single-phase aggregate: at (host, minute) grain the time dimension
-      // already spreads hot hosts, and salting cannot split one hot (host,
-      // minute) group (see Rollup's scaladoc); measured 10% slower at 32M
-      // pages (BASELINE.md, TierPipeline soak)
-      writeTier(Rollup.tier1m(pending, cfg.groupCols), "1m", cfg, runId)
+      // single-phase aggregate: salting cannot split one hot (host, minute)
+      // group (see Rollup's scaladoc); measured 10% slower at 32M pages
+      // (BASELINE.md, TierPipeline soak). The raw cut above is this write's
+      // only lineage anti-join: a tier row's (day, host_bucket) is its
+      // pages' (_day, _hb), so a second cut on the tier rows drops nothing.
+      writePending(withPartitionCols(Rollup.tier1m(pending, cfg.groupCols), cfg.hostBuckets),
+        done1m, "1m", cfg, runId)
     }
     val written = Rollup.Tiers.tail.foldLeft(Map("1m" -> w1)) { case (acc, t) =>
       val finerName = Rollup.Tiers(Rollup.Tiers.indexWhere(_.name == t.name) - 1).name

@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, TimestampNTZType, TimestampType}
+import graft.functions.codec.BlockAgg
 
 /** Transparent continuous-aggregate routing: a Catalyst optimizer rule that
   * rewrites aggregates phrased against the RAW table onto its pre-computed
@@ -24,7 +25,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType, TimestampNTZType, Times
   * `sum → sum(sum_col)`, `min/max → min/max of the partial`, `avg →
   * sum(sum_col)/sum(cnt)`, and (when the tier carries a Gorilla point-block
   * column) `percentile(m, 0.5/0.95) → ` the EXACT percentile recomputed
-  * from the k-way-merged decoded blocks (`Rollup.mergeBlocksUdf`) —
+  * from the merged decoded blocks (`codec.BlockAgg`'s block mode) —
   * whenever the bucket width is a multiple of the tier width and every
   * time predicate is tier-aligned. At 10^12 raw rows an hourly-by-host
   * dashboard query stops scanning pages and reads ~1/cnt-per-bucket of the
@@ -361,24 +362,13 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
         }
       }
 
-    // exact percentiles from the tier's Gorilla point blocks: the
-    // replacement expression is EXTRACTED from an analyzed template
-    // (`collect_list(block)` -> `Rollup.mergeBlocksUdf` -> struct), so the
-    // rule never hand-assembles ScalaUDF internals; p50/p95 are struct
-    // fields 1/2 of MergedStats. One collect_list aggregate is shared by
-    // both percentile outputs (same resultId -> planned once).
-    lazy val mergedStats: Option[Expression] = route.blockCol.flatMap { bc =>
-      if (tierAttr(bc).isEmpty) None
-      else scala.util.Try {
-        import org.apache.spark.sql.functions.{col => fcol, collect_list}
-        tierDf.groupBy()
-          .agg(graft.operators.Rollup.mergeBlocksUdf(collect_list(fcol(bc))).as("m"))
-          .queryExecution.analyzed match {
-          case Aggregate(_, Seq(a: Alias), _, _) => Some(a.child)
-          case _                              => None
-        }
-      }.toOption.flatten
-    }
+    // exact percentiles from the tier's Gorilla point blocks: the block mode
+    // of the native BlockAgg over the block column; p50/p95 are struct
+    // fields 1/2 of its output. One aggregate expression is shared by both
+    // percentile outputs (same resultId -> planned once).
+    lazy val mergedStats: Option[Expression] = route.blockCol.flatMap(tierAttr)
+      .filter(_.dataType == BinaryType)
+      .map(b => BlockAgg(Seq(b)).toAggregateExpression())
 
     def isUnitFreq(e: Expression): Boolean = e match {
       case Literal(1L, LongType) => true

@@ -90,29 +90,130 @@ class CodecSpec extends AnyFunSuite {
   }
 }
 
-/** BlockAggregator (typed Aggregator, primitive buffers) must produce the
-  * same block bytes and percentiles as the collect_list + scalar UDF path,
-  * including across partition merges.
+/** The native block aggregate ([[graft.functions.codec.BlockAgg]]) must give
+  * the same block bytes and percentiles as its references, across partition
+  * merges: in point mode the collect_list + scalar UDF path, in block mode a
+  * k-way merge of the decoded blocks. Null points and blocks are skipped.
+  * Every check runs twice: on the ObjectHashAggregate path, and with the
+  * sort-based fallback forced (threshold 1), which serializes every partial
+  * buffer and merges the deserialized copies.
   */
 class BlockAggregatorSpec extends SparkSuite {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+  import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
   import org.apache.spark.sql.functions._
-  import graft.functions.codec.BlockAggregator
+  import graft.functions.codec.{BlockAgg, MergedStats, PointSort, TsCodec}
   import graft.operators.Rollup
 
-  test("aggregator == collect_list+UDF path, merge-safe across partitions") {
+  private val FallbackConf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+  private var fallbackForced = false
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def withFallback(on: Boolean)(body: => Unit): Unit =
+    if (!on) body
+    else {
+      val prev = spark.conf.getOption(FallbackConf)
+      spark.conf.set(FallbackConf, "1")
+      fallbackForced = true
+      try body
+      finally {
+        fallbackForced = false
+        prev.fold(spark.conf.unset(FallbackConf))(spark.conf.set(FallbackConf, _))
+      }
+    }
+
+  /** Per-group (block, p50, p95) of an aggregate's struct column `m`; under
+    * a forced fallback, also checks that the aggregate did fall back.
+    */
+  private def stats(df: DataFrame): Map[Long, MergedStats] = {
+    val sel = df.select(col("g"), col("m.block"), col("m.p50"), col("m.p95"))
+    val out = sel.collect()
+      .map(r => r.getLong(0) -> MergedStats(r.getAs[Array[Byte]](1), r.getDouble(2), r.getDouble(3)))
+      .toMap
+    if (fallbackForced) {
+      val fellBack = Plans.collect(sel.queryExecution.executedPlan) {
+        case a: ObjectHashAggregateExec if a.groupingExpressions.nonEmpty =>
+          a.metrics("numTasksFallBacked").value
+      }
+      assert(fellBack.sum > 0, "the sort-based fallback did not run")
+    }
+    out
+  }
+
+  private def assertSame(got: MergedStats, want: MergedStats, g: Any): Unit = {
+    assert(java.util.Arrays.equals(got.block, want.block), s"group $g: block bytes differ")
+    assert(java.lang.Double.compare(got.p50, want.p50) == 0, s"group $g: p50 ${got.p50} vs ${want.p50}")
+    assert(java.lang.Double.compare(got.p95, want.p95) == 0, s"group $g: p95 ${got.p95} vs ${want.p95}")
+  }
+
+  private def pointMode(): Unit = {
     import spark.implicits._
     val pts = (1 to 500).map(i => (i % 7L, 1704067200L + (i * 37) % 1000, (i % 13) * 1.5))
     val df = pts.toDF("g", "ts", "v").repartition(7) // force multi-partition merges
-    val viaAgg = df.groupBy("g")
-      .agg(BlockAggregator(col("ts"), col("v")).as("m"))
-      .select(col("g"), col("m.block").as("b1"), col("m.p50").as("p1"), col("m.p95").as("q1"))
-    val viaUdf = df.groupBy("g")
-      .agg(Rollup.encodeWithStatsUdf(collect_list(struct(col("ts"), col("v").cast("double")))).as("m"))
-      .select(col("g"), col("m.block").as("b2"), col("m.p50").as("p2"), col("m.p95").as("q2"))
-    val j = viaAgg.join(viaUdf, "g")
-    assert(j.count() === 7)
-    val bad = j.filter(sha2(col("b1"), 256) =!= sha2(col("b2"), 256) ||
-      col("p1") =!= col("p2") || col("q1") =!= col("q2")).count()
-    assert(bad === 0)
+    val viaAgg = stats(df.groupBy("g").agg(BlockAgg.points(col("ts"), col("v")).as("m")))
+    val viaUdf = stats(df.groupBy("g")
+      .agg(Rollup.encodeWithStatsUdf(collect_list(struct(col("ts"), col("v").cast("double")))).as("m")))
+    assert(viaAgg.size === 7 && viaAgg.keySet === viaUdf.keySet)
+    viaAgg.foreach { case (g, m) => assertSame(m, viaUdf(g), g) }
+  }
+
+  private def blockMode(): Unit = {
+    import spark.implicits._
+    // sorted runs with tied timestamps, repeated values and empty blocks
+    val rnd = new scala.util.Random(11)
+    val blocks = for (g <- 0L until 6L; _ <- 0 until 1 + rnd.nextInt(9)) yield {
+      val pts = Seq.fill(rnd.nextInt(40))(
+        (1704067200L + rnd.nextInt(300), rnd.nextInt(20) * 0.5)).sortBy(identity)
+      (g, pts)
+    }
+    val df = blocks.map { case (g, pts) =>
+      (g, TsCodec.encode(pts.map(_._1).toArray, pts.map(_._2).toArray))
+    }.toDF("g", "block").repartition(5)
+    val got = stats(df.groupBy("g").agg(BlockAgg.blocks(col("block")).as("m")))
+    val want = blocks.groupBy(_._1).map { case (g, runs) =>
+      val (ts, vs) = PointSort.mergeSortedRuns(
+        runs.map(_._2.map(_._1).toArray).toArray, runs.map(_._2.map(_._2).toArray).toArray)
+      g -> MergedStats.ofSorted(ts, vs)
+    }
+    assert(got.keySet === want.keySet)
+    got.foreach { case (g, m) => assertSame(m, want(g), g) }
+  }
+
+  private def nullsSkipped(): Unit = {
+    import spark.implicits._
+    val one = MergedStats.ofSorted(Array(60L), Array(1.0))
+    val empty = MergedStats.ofSorted(Array.empty, Array.empty)
+    assert(empty.block.length === 4 && empty.p50.isNaN && empty.p95.isNaN)
+    // g=1: {1.0, null} is the one point 1.0 (a null stored as 0.0 gives p50 0.5);
+    // a null ts is skipped too. g=2: only nulls -> the empty block.
+    val pts = Seq[(Long, Option[Long], Option[Double])](
+      (1L, Some(60L), Some(1.0)), (1L, Some(120L), None), (1L, None, Some(5.0)),
+      (2L, Some(60L), None), (2L, None, None)).toDF("g", "ts", "v").repartition(3)
+    val viaPoints = stats(pts.groupBy("g").agg(BlockAgg.points(col("ts"), col("v")).as("m")))
+    assertSame(viaPoints(1L), one, 1L)
+    assertSame(viaPoints(2L), empty, 2L)
+    val blocks = Seq[(Long, Option[Array[Byte]])]((1L, Some(one.block)), (1L, None), (2L, None))
+      .toDF("g", "block").repartition(2)
+    val viaBlocks = stats(blocks.groupBy("g").agg(BlockAgg.blocks(col("block")).as("m")))
+    assertSame(viaBlocks(1L), one, 1L)
+    assertSame(viaBlocks(2L), empty, 2L)
+    // no rows at all: a global aggregate still emits the empty block
+    val none = pts.filter(lit(false)).agg(BlockAgg.points(col("ts"), col("v")).as("m"))
+      .select(col("m.block"), col("m.p50"), col("m.p95")).head()
+    assertSame(MergedStats(none.getAs[Array[Byte]](0), none.getDouble(1), none.getDouble(2)),
+      empty, "global")
+  }
+
+  for ((suffix, fallback) <- Seq("" -> false, " (sort-based fallback)" -> true)) {
+    test("aggregator == collect_list+UDF path, merge-safe across partitions" + suffix) {
+      withFallback(fallback)(pointMode())
+    }
+    test("block mode == PointSort.mergeSortedRuns + MergedStats.ofSorted, merge-safe" + suffix) {
+      withFallback(fallback)(blockMode())
+    }
+    test("null points and null blocks are skipped; empty group = 4-byte block, NaN pctl" + suffix) {
+      withFallback(fallback)(nullsSkipped())
+    }
   }
 }

@@ -8,9 +8,9 @@ import graft.operators.Rollup
 /** Physical-plan evidence for the scale claims the correctness oracle can't
   * see: bucketed tables join WITHOUT a shuffle, the tier-store layout prunes
   * partitions and pushes filters into the parquet scan, and the tier-1
-  * aggregate is a single-shuffle plan. These pin the plan *shapes* — on a
-  * 1000-executor cluster they are the difference between a narrow join and
-  * re-shuffling 100 TB.
+  * aggregate and the whole tier cascade are single-shuffle plans. These pin
+  * the plan *shapes* — on a 1000-executor cluster they are the difference
+  * between a narrow join and re-shuffling 100 TB.
   */
 class PlanEvidenceSpec extends SparkSuite {
 
@@ -116,6 +116,15 @@ class PlanEvidenceSpec extends SparkSuite {
     val exchanges = "(?<!Broadcast)Exchange".r.findAllIn(plan).size
     assert(exchanges == 1,
       s"tier-1 rollup should shuffle exactly once (got $exchanges):\n$plan")
+  }
+
+  test("tier1m -> 5m -> 1h -> 1d cascade is a single-shuffle plan") {
+    val pages = Hier.withHierarchy(Pages.synthesize(spark, 5000L, seed = 7L))
+    val t1d = Seq(300L, 3600L, 86400L).foldLeft(Rollup.tier1m(pages))(Rollup.promote(_, _))
+    val plan = finalPlan(t1d).split("== Initial Plan ==")(0)
+    val exchanges = "(?<!Broadcast)Exchange".r.findAllIn(plan).size
+    assert(exchanges == 1,
+      s"the tier cascade should shuffle exactly once (got $exchanges):\n$plan")
   }
 
   test("zipfSlope cuts top-K with a distributed TakeOrdered, never a vocab-wide window") {

@@ -202,7 +202,7 @@ class TierRouteFuzzSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
         min("value").as("min_value"), max("value").as("max_value"),
         collect_set(col("event_type")).as("type_set"),
-        graft.functions.codec.BlockAggregator(u, col("value")).as("m"))
+        graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
       .withColumn("block", col("m.block")).drop("m")
       .write.mode("overwrite").parquet(dir)
     val route = mkRoute.copy(name = "fuzzblk", tier = () => spark.read.parquet(dir),

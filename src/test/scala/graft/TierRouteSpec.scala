@@ -158,7 +158,7 @@ class TierRouteSpec extends SparkSuite {
     raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
       .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
         min("value").as("min_value"), max("value").as("max_value"),
-        graft.functions.codec.BlockAggregator(u, col("value")).as("m"))
+        graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
       .withColumn("block", col("m.block")).drop("m")
       .write.mode("overwrite").parquet(dir)
     val blockRoute = route("tblk", dir, 60L).copy(blockCol = Some("block"))

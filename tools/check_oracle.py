@@ -39,9 +39,18 @@ def cell_repr(x):
     # DuckDB DECIMAL literals / HUGEINT sums reach Arrow as Decimal; the
     # driver (like fetchdf) reads them as float64 — match that coercion so
     # a decimal literal 0.50 == double 0.5 (r5 all-true on these queries),
-    # while HUGEINT 7949 -> "7949.0" still fails against int64 "7949"
+    # while HUGEINT 7949 -> "7949.0" still fails against int64 "7949".
+    # The coercion is exact only while the float's shortest repr reads back
+    # as the same decimal (integers up to 2^53, ~15 significant digits);
+    # beyond that two different decimals can share one float repr, so keep
+    # the exact Decimal repr and warn.
     if isinstance(x, decimal.Decimal):
-        return cell_repr(float(x))
+        f = float(x)
+        if not x.is_finite() or decimal.Decimal(repr(f)) == x:
+            return cell_repr(f)
+        print(f"[check_oracle] warning: decimal {x} is not exact as float64 "
+              f"({f!r}); comparing its exact repr", file=sys.stderr)
+        return repr(x)
     # DuckDB DATE vs Spark TIMESTAMP_NTZ midnight: fetchdf coerced both to
     # datetime64[ns]; replicate by promoting date to midnight datetime
     if isinstance(x, _dt.date) and not isinstance(x, _dt.datetime):
@@ -64,9 +73,11 @@ def repr_frame(rel):
     so SQL NULL and float NaN both rendered "NaN" and the local receipt was
     more lenient than the driver's hash (ADVICE r5). Arrow's `to_pylist()`
     yields None for NULL and float('nan') for NaN per cell, so the two
-    repr differently ("NULL" vs "NaN"). Dtype strictness is preserved
-    cell-wise: int64 5 reprs "5", float64 5.0 reprs "5.0", HUGEINT/decimal
-    reprs as Decimal(...) — any cross-engine dtype drift still fails.
+    repr differently ("NULL" vs "NaN"). Decimal cells (DuckDB DECIMAL,
+    HUGEINT sums) are normalized to their float64 repr, the coercion the
+    reference compare applies, except where float64 cannot hold the decimal
+    exactly (see cell_repr). Int-vs-float dtype drift still fails cell-wise:
+    int64 5 reprs "5", float64 5.0 reprs "5.0".
     """
     import pandas as pd
     tbl = rel.arrow()
