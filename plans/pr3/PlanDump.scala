@@ -1,6 +1,7 @@
 // Dumps explain("formatted") of the headline cascade (tier1m -> 5m -> 1h -> 1d)
-// and of TierPipeline.buildAll's tier_1m write, over 20k synthetic pages at
-// local[4] with 16 shuffle partitions, into <out>/{cascade,buildall_1m_write}_<tag>.txt.
+// and of TierPipeline.buildAll's tier_1m write and first promotion (tier_5m)
+// write, over 20k synthetic pages at local[4] with 16 shuffle partitions, into
+// <out>/{cascade,buildall_1m_write,buildall_5m_write}_<tag>.txt.
 // Expression ids, object hashes, plan ids and the work directory are
 // normalized so two trees' dumps diff cleanly.
 //
@@ -19,7 +20,7 @@ import graft.operators.Rollup
 import graft.plans.TierPipeline
 import graft.sources.Pages
 
-/** Dumps explain("formatted") of the cascade and of buildAll's 1m write.
+/** Dumps explain("formatted") of the cascade and of buildAll's 1m and 5m writes.
   * args: work dir, output dir, tag. Expression ids and the work dir are normalized.
   */
 object PlanDump {
@@ -41,19 +42,20 @@ object PlanDump {
     val cascade = Rollup.promote(Rollup.promote(Rollup.promote(Rollup.tier1m(pages), 300L), 3600L), 86400L)
     dump("cascade", cascade.queryExecution.explainString(FormattedMode))
 
-    @volatile var write1m: Option[QueryExecution] = None
+    val tiers = Seq("1m", "5m")
+    val writes = new java.util.concurrent.ConcurrentHashMap[String, QueryExecution]()
     spark.listenerManager.register(new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = qe.commandExecuted match {
-        case c: InsertIntoHadoopFsRelationCommand
-            if c.outputPath.toString.endsWith("tier_1m") && write1m.isEmpty => write1m = Some(qe)
+        case c: InsertIntoHadoopFsRelationCommand =>
+          tiers.find(t => c.outputPath.toString.endsWith(s"tier_$t")).foreach(writes.putIfAbsent(_, qe))
         case _ =>
       }
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     })
     TierPipeline.buildAll(pages, TierPipeline.Config(s"$work/store"), "dump")
     val t0 = System.currentTimeMillis()
-    while (write1m.isEmpty && System.currentTimeMillis() - t0 < 30000) Thread.sleep(100)
-    dump("buildall_1m_write", write1m.get.explainString(FormattedMode))
+    while (writes.size < tiers.size && System.currentTimeMillis() - t0 < 30000) Thread.sleep(100)
+    tiers.foreach(t => dump(s"buildall_${t}_write", writes.get(t).explainString(FormattedMode)))
     spark.stop()
   }
 }

@@ -30,20 +30,12 @@ object Hier {
   /** Top-level domain = last label of the host. */
   def tld(url: Column): Column = substring_index(host(url), ".", -1)
 
-  /** Stable bucket of the host for physical partitioning (day/host_bucket
-    * directory layout — the Iceberg-style partition spec emulated on Parquet,
-    * SURVEY.md §4.3).
-    */
-  def hostBucket(url: Column, buckets: Int = 64): Column =
-    pmod(xxhash64(host(url)), lit(buckets.toLong))
-
   /** Adds the derived hierarchy columns to a page table. */
-  def withHierarchy(pages: DataFrame, buckets: Int = 64): DataFrame =
+  def withHierarchy(pages: DataFrame): DataFrame =
     pages
       .withColumn("host", host(col("url")))
       .withColumn("registered_domain", registeredDomain(col("url")))
       .withColumn("tld", tld(col("url")))
-      .withColumn("host_bucket", hostBucket(col("url"), buckets))
 
   /** URL canonicalization — the normalize step every web-corpus dedup keys
     * on (RFC 3986 §6 normalizations that are safe without fetching):

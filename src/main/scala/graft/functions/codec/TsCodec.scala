@@ -88,8 +88,8 @@ final class BitReader(bytes: Array[Byte]) {
   * Block layout: [int32 count][ts stream][value stream] — the two streams are
   * interleaved point-by-point (ts bits then value bits), matching the paper.
   * Encoding/decoding is pure Scala with no Spark dependency, run on the
-  * executors by the [[BlockAgg]] aggregate and the [[BlockCodec]] decode
-  * binding.
+  * executors by the [[BlockAgg]] aggregate, which encodes new blocks and
+  * decodes finer blocks to merge them.
   */
 object TsCodec {
 

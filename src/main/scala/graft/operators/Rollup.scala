@@ -55,19 +55,6 @@ object Rollup {
   case class Tier(name: String, seconds: Long)
   val Tiers: Seq[Tier] = Seq(Tier("1m", 60), Tier("5m", 300), Tier("1h", 3600), Tier("1d", 86400))
 
-  /** Exact linear-interpolation percentile over a sorted array — same
-    * definition as Spark `percentile` / DuckDB `quantile_cont`.
-    */
-  def exactPercentile(sorted: Array[Double], p: Double): Double = {
-    val n = sorted.length
-    if (n == 0) return Double.NaN
-    val rank = p * (n - 1)
-    val lo = math.floor(rank).toInt
-    val hi = math.ceil(rank).toInt
-    if (lo == hi) sorted(lo)
-    else sorted(lo) + (rank - lo) * (sorted(hi) - sorted(lo))
-  }
-
   /** Encode points into a block AND compute exact p50/p95 in the same pass —
     * the points are sorted for the codec anyway, so the percentiles are free;
     * using separate `percentile` aggregates would add two TypedImperative

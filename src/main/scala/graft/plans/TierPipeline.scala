@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.operators.Rollup
@@ -25,16 +25,25 @@ import graft.operators.Rollup
   * partition, never appends into it).
   *
   * Scale design:
-  *   - the pending-work filter is a broadcast anti-join against the (tiny)
-  *     lineage table — no driver-side listing of a 10^12-row table.
+  *   - "which partitions are done" has one answer: a driver-side snapshot of
+  *     the lineage table ([[snapshot]]), read once per [[buildAll]]. Lineage
+  *     holds one row per partition event, so the snapshot is bounded by
+  *     partition count, never by data. Every pending question (the raw cut,
+  *     each promotion's pending set, retention, invalidation, stream pruning,
+  *     the hot/cold split) is a set operation on it, and reaches the data as
+  *     a (day, host_bucket) predicate ([[partIn]]) — over a stored tier's
+  *     partition columns that predicate prunes at the directory level.
   *   - promotion reads ONLY the finer tier (already rolled up, ~1/60th the
-  *     data) and only its pending days, pruned at the parquet-directory level
-  *     by the `day` partition filter.
+  *     data), and only its partitions in complete(finer) − complete(tier).
   *   - a coarser bucket never spans a day or a host_bucket, so promotion is
   *     closed per partition — partitions can be (re)built independently and
   *     in parallel, which is what makes partition-granular resume sound.
   *   - metrics ride the same pass as the data write (one extra small agg),
   *     giving per-partition row counts + measure checksums for drift checks.
+  *
+  * One writer per root: nothing locks `_lineage`, so [[buildAll]],
+  * [[enforceRetention]], [[invalidateLate]] and [[compact]] on one root must
+  * not run concurrently.
   */
 object TierPipeline {
 
@@ -43,13 +52,24 @@ object TierPipeline {
       groupCols: Seq[String] = Seq("tld", "registered_domain", "host"),
       hostBuckets: Int = 8)
 
+  /** A (day, host_bucket) partition of a tier; `day` is yyyy-MM-dd. */
+  type Part = (String, Int)
+
+  /** One lineage row: a partition event of a tier — `complete`, `expired`,
+    * `compacted`, `stream-append` or `stream-pruned` — with the partition's
+    * metrics where the event has them. Its fields are the lineage schema.
+    */
+  case class LineageRow(tier: String, day: String, host_bucket: Int, run_id: String,
+                        row_cnt: Long = 0L, page_cnt: Long = 0L, sum_len_sum: Double = 0.0,
+                        status: String) {
+    def part: Part = (day, host_bucket)
+  }
+
+  private val lineageEncoder = Encoders.product[LineageRow]
+  private[graft] val lineageSchema: StructType = lineageEncoder.schema
+
   def tierPath(root: String, tier: String): String = s"$root/tier_$tier"
   def lineagePath(root: String): String = s"$root/_lineage"
-
-  /** Lineage schema: one row per completed partition of a tier. */
-  private val lineageSchema =
-    "tier string, day string, host_bucket int, run_id string, " +
-      "row_cnt long, page_cnt long, sum_len_sum double, status string"
 
   /** The FileSystem that holds `path` (not the session default), and the path. */
   private[graft] def fsPath(spark: SparkSession, path: String): (FileSystem, Path) = {
@@ -62,26 +82,32 @@ object TierPipeline {
     fs.exists(p)
   }
 
-  private def lineageFrame(spark: SparkSession, rows: Seq[Row]): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType.fromDDL(lineageSchema))
-
   /** The lineage + metrics table; empty if nothing ran yet (no lineage
     * directory). Any other failure — an unknown filesystem, an unreadable
     * table — is thrown, never read as "nothing built".
     */
   def lineage(spark: SparkSession, root: String): DataFrame =
     if (exists(spark, lineagePath(root))) spark.read.schema(lineageSchema).parquet(lineagePath(root))
-    else lineageFrame(spark, Seq.empty)
+    else spark.createDataFrame(Seq.empty[LineageRow])
 
-  /** Appends lineage rows (in [[lineageSchema]] order); no-op when empty. */
-  private[graft] def appendLineage(spark: SparkSession, root: String, rows: Seq[Row]): Unit =
-    if (rows.nonEmpty) lineageFrame(spark, rows).write.mode(SaveMode.Append).parquet(lineagePath(root))
+  /** The lineage table on the driver: the one read that every pending
+    * question is answered from. Bounded by partition count.
+    */
+  private[graft] def snapshot(spark: SparkSession, root: String): Seq[LineageRow] =
+    lineage(spark, root).as(lineageEncoder).collect().toSeq
 
-  /** (day, host_bucket) partitions of `tier` with a `complete` lineage row. */
-  def completed(spark: SparkSession, root: String, tier: String): DataFrame =
-    lineage(spark, root)
-      .filter(col("tier") === tier && col("status") === "complete")
-      .select("day", "host_bucket")
+  /** Partitions of `tier` with a `status` row in `lin`. */
+  private[graft] def parts(lin: Seq[LineageRow], tier: String,
+                           status: String = "complete"): Set[Part] =
+    lin.collect { case r if r.tier == tier && r.status == status => r.part }.toSet
+
+  /** Appends lineage rows as one file; no-op when empty. */
+  private[graft] def appendLineage(spark: SparkSession, root: String, rows: Seq[LineageRow]): Unit =
+    if (rows.nonEmpty) writeLineage(spark, rows, lineagePath(root), SaveMode.Append)
+
+  private def writeLineage(spark: SparkSession, rows: Seq[LineageRow], path: String,
+                           mode: SaveMode): Unit =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1)).write.mode(mode).parquet(path)
 
   /** Partition key of a host: which of `hostBuckets` directories it lands in. */
   private[graft] def hostBucket(host: Column, hostBuckets: Int): Column =
@@ -92,24 +118,53 @@ object TierPipeline {
       .withColumn("day", date_format(timestamp_seconds(col("bucket_start")), "yyyy-MM-dd"))
       .withColumn("host_bucket", hostBucket(col("host"), hostBuckets))
 
-  /** Writes the pending (not-yet-complete) partitions of one tier:
-    * dynamic-partition overwrite of the data, then metrics+lineage append.
-    * Returns the (day, host_bucket) partitions written.
-    */
-  def writeTier(tierDf: DataFrame, tier: String, cfg: Config, runId: String): Seq[(String, Int)] = {
-    val done = completed(tierDf.sparkSession, cfg.root, tier)
-    writePending(withPartitionCols(tierDf, cfg.hostBuckets)
-      .join(broadcast(done), Seq("day", "host_bucket"), "left_anti"), done, tier, cfg, runId)
-  }
+  /** The partition key of a stored tier read through [[readParts]]. */
+  private[graft] val storedPart: Seq[Column] = Seq(col("day"), col("host_bucket"))
 
-  /** The write half of [[writeTier]], for tier rows already cut to pending
-    * partitions (`pending` carries the partition columns; `done` is the
-    * tier's [[completed]] frame the cut was made against).
+  /** The partition key raw pages' tier rows land under. */
+  private def pagePart(cfg: Config): Seq[Column] = Seq(
+    date_format(col("warc_ts"), "yyyy-MM-dd").as("day"),
+    hostBucket(col("host"), cfg.hostBuckets).as("host_bucket"))
+
+  /** `key ∈ parts` for a (day, host_bucket) key; false when `parts` is
+    * empty. Over [[storedPart]] it is a partition filter.
     */
-  private def writePending(pending: DataFrame, done: DataFrame, tier: String, cfg: Config,
-                           runId: String): Seq[(String, Int)] = {
-    val spark = pending.sparkSession
-    pending.write
+  private[graft] def partIn(key: Seq[Column], parts: Set[Part]): Column =
+    struct(key: _*).isin(parts.toSeq.sorted.map { case (d, hb) =>
+      struct(lit(d).as("day"), lit(hb).as("host_bucket"))
+    }: _*)
+
+  private def partsOf(df: DataFrame, key: Seq[Column]): Set[Part] =
+    df.select(key: _*).distinct().collect().map(r => (r.getString(0), r.getInt(1))).toSet
+
+  /** A stored tier with its partition columns; partition inference reads
+    * `day=` directories back as DATE, so `day` is normalized to the lineage's
+    * yyyy-MM-dd string.
+    */
+  private[graft] def readParts(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
+
+  /** One lineage row per (day, host_bucket) partition of `df`: its row count
+    * and its page and length checksums.
+    */
+  private[graft] def partitionMetrics(df: DataFrame, tier: String, runId: String,
+                                      status: String): Seq[LineageRow] =
+    df.groupBy("day", "host_bucket")
+      .agg(count(lit(1)), sum(col("cnt")), sum(col("sum_len")))
+      .collect().toSeq
+      .map(r => LineageRow(tier, r.getString(0), r.getInt(1), runId,
+        r.getLong(2), r.getLong(3), r.getDouble(4), status))
+
+  /** The one tier writer. `rows` are the tier rows of exactly the partitions
+    * `todo`: they are written by dynamic-partition overwrite, `todo` is read
+    * back from disk for the metrics, and only then are its `complete` lineage
+    * rows appended — the crash-consistency point. Returns the appended rows.
+    */
+  private def writeParts(spark: SparkSession, rows: => DataFrame, tier: String, todo: Set[Part],
+                         cfg: Config, runId: String): Seq[LineageRow] = {
+    if (todo.isEmpty) return Seq.empty
+    val path = tierPath(cfg.root, tier)
+    withPartitionCols(rows, cfg.hostBuckets).write
       .mode(SaveMode.Overwrite)
       // dynamic partition overwrite set PER WRITE, not inherited from the
       // session: under the Spark default (static) a resume would delete ALL
@@ -118,35 +173,15 @@ object TierPipeline {
       // idempotent-replay contract forbids.
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("day", "host_bucket")
-      .parquet(tierPath(cfg.root, tier))
-
-    // metrics are computed from the bytes actually on disk (verifies the
-    // durable write, and avoids evaluating the tier pipeline twice); lineage
-    // is appended AFTER the data write — the crash-consistency point
-    val doneLocal = done.collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    // read back only days that are not fully complete — a literal day filter
-    // prunes at the partition-directory level, so a no-op resume reads no
-    // tier data at all
-    val fullDays = doneLocal.groupBy(_._1)
-      .collect { case (d, ps) if ps.size >= cfg.hostBuckets => d }.toSeq
-    val metrics = spark.read.parquet(tierPath(cfg.root, tier))
-      .filter(if (fullDays.isEmpty) lit(true) else !col("day").isin(fullDays: _*))
-      // partition-type inference reads day= dirs back as DATE; lineage keys
-      // are canonical yyyy-MM-dd strings
-      .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-      .groupBy(col("day"), col("host_bucket"))
-      .agg(count(lit(1)).as("row_cnt"), sum(col("cnt")).as("page_cnt"),
-        sum(col("sum_len")).as("sum_len_sum"))
-      .collect()
-      .filterNot(r => doneLocal.contains((r.getAs[String]("day"), r.getAs[Int]("host_bucket"))))
-    if (metrics.isEmpty) return Seq.empty
-
-    appendLineage(spark, cfg.root, metrics.toSeq.map(r => Row(
-      tier, r.getAs[String]("day"), r.getAs[Int]("host_bucket"), runId,
-      r.getAs[Long]("row_cnt"), r.getAs[Long]("page_cnt"),
-      r.getAs[Double]("sum_len_sum"), "complete")))
-
-    metrics.map(r => (r.getAs[String]("day"), r.getAs[Int]("host_bucket"))).toSeq
+      .parquet(path)
+    // metrics from the bytes on disk verify the durable write and do not
+    // evaluate the tier pipeline twice; the predicate prunes the read to
+    // the written directories, so other partitions of the tier — complete
+    // or orphaned — are neither read nor marked
+    val done = partitionMetrics(readParts(spark, path).filter(partIn(storedPart, todo)),
+      tier, runId, "complete")
+    appendLineage(spark, cfg.root, done)
+    done
   }
 
   /** Reads a stored tier table (data columns only, partition cols dropped). */
@@ -170,23 +205,15 @@ object TierPipeline {
     */
   def enforceRetention(spark: SparkSession, cfg: Config, policy: Map[String, Int],
                        today: java.time.LocalDate, runId: String): Map[String, Seq[String]] = {
+    val lin = snapshot(spark, cfg.root)
     policy.map { case (tier, keepDays) =>
       val cutoff = today.minusDays(keepDays.toLong).toString // yyyy-MM-dd sorts lexically
-      // lineage is tiny (one row per partition ever completed) — the collect
-      // is bounded by partition count, not data
-      val expired = lineage(spark, cfg.root)
-        .filter(col("tier") === tier && col("status") === "expired")
-        .select("day", "host_bucket").collect()
-        .map(r => (r.getString(0), r.getInt(1))).toSet
-      val todo = completed(spark, cfg.root, tier).filter(col("day") < lit(cutoff))
-        .distinct().collect()
-        .map(r => (r.getString(0), r.getInt(1)))
-        .filterNot(expired)
-      val days = todo.map(_._1).distinct.sorted.toSeq
+      val todo = (parts(lin, tier) -- parts(lin, tier, "expired")).filter(_._1 < cutoff).toSeq.sorted
+      val days = todo.map(_._1).distinct
       val (fs, base) = fsPath(spark, tierPath(cfg.root, tier))
       days.foreach(d => fs.delete(new Path(base, s"day=$d"), true))
       appendLineage(spark, cfg.root,
-        todo.toSeq.map { case (d, hb) => Row(tier, d, hb, runId, 0L, 0L, 0.0, "expired") })
+        todo.map { case (d, hb) => LineageRow(tier, d, hb, runId, status = "expired") })
       tier -> days
     }
   }
@@ -200,11 +227,10 @@ object TierPipeline {
     * invalidated set — the next [[buildAll]] over the FULL corpus then
     * replays exactly those partitions and nothing else.
     *
-    * The lineage rewrite is a driver-side overwrite of a table bounded by
-    * partition count (the same order every other pipeline step already
-    * collects). Crash-safety: lineage shrinks BEFORE any data rewrite, so
+    * The lineage rewrite is a driver-side overwrite of the [[snapshot]].
+    * Crash-safety: lineage shrinks BEFORE any data rewrite, so
     * a crash anywhere leaves partitions pending — the idempotent-replay
-    * contract of [[writeTier]] finishes them on the next run; stale data
+    * contract of [[buildAll]] finishes them on the next run; stale data
     * remains readable (never deleted here) until its rebuild overwrites it
     * partition-atomically.
     *
@@ -212,18 +238,11 @@ object TierPipeline {
     */
   def invalidateLate(latePages: DataFrame, cfg: Config): Seq[(String, Int)] = {
     val spark = latePages.sparkSession
-    val affected = latePages
-      .select(date_format(col("warc_ts"), "yyyy-MM-dd").as("day"),
-        hostBucket(col("host"), cfg.hostBuckets).as("host_bucket"))
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSet
+    val affected = partsOf(latePages, pagePart(cfg))
     if (affected.isEmpty) return Seq.empty
-    val lin = lineage(spark, cfg.root)
-    val kept = lin.collect().filterNot { r =>
-      r.getString(7) == "complete" && affected.contains((r.getString(1), r.getInt(2)))
-    }
+    val kept = snapshot(spark, cfg.root).filterNot(r => r.status == "complete" && affected(r.part))
     val tmp = lineagePath(cfg.root) + "_rewrite"
-    lineageFrame(spark, kept.toSeq).write.mode(SaveMode.Overwrite).parquet(tmp)
+    writeLineage(spark, kept, tmp, SaveMode.Overwrite)
     val (fs, linPath) = fsPath(spark, lineagePath(cfg.root))
     fs.delete(linPath, true)
     fs.rename(new Path(tmp), linPath)
@@ -242,15 +261,15 @@ object TierPipeline {
     * Safety: a rewrite changes LAYOUT, not rows — `complete` lineage is
     * untouched (so nothing gets rebuilt), and an audit `compacted` row is
     * appended per rewritten partition. Rewrites use the same
-    * dynamic-partition overwrite as [[writeTier]], so a crashed compaction
+    * dynamic-partition overwrite as [[buildAll]], so a crashed compaction
     * leaves either the old or the new layout per partition, both valid.
     *
     * Scale: the file listing is driver-side but bounded by PARTITION count
     * (one `listStatus` per partition directory of the selected tier), which
-    * is the same order as the lineage table the pipeline already collects;
-    * a real Iceberg catalog would serve the same stats from manifests. The
-    * rewrite itself reads only the selected partitions (directory-pruned)
-    * and shuffles them once into per-partition slot groups.
+    * is the same order as the lineage [[snapshot]]; a real Iceberg catalog
+    * would serve the same stats from manifests. The rewrite itself reads
+    * only the selected partitions (directory-pruned) and shuffles them once
+    * into per-partition slot groups.
     *
     * With `zOrderCluster = true` the rewrite also sorts each output file by
     * the Morton key of (hashed host, minute-of-day)
@@ -269,7 +288,7 @@ object TierPipeline {
     require(targetFileBytes >= 1, "targetFileBytes must be >= 1")
     val (fs, base) = fsPath(spark, tierPath(cfg.root, tier))
     if (!fs.exists(base)) return Seq.empty
-    val parts = for {
+    val onDisk = for {
       dayDir <- fs.listStatus(base).toSeq
       if dayDir.isDirectory && dayDir.getPath.getName.startsWith("day=")
       hbDir <- fs.listStatus(dayDir.getPath).toSeq
@@ -281,19 +300,14 @@ object TierPipeline {
         hbDir.getPath.getName.stripPrefix("host_bucket=").toInt,
         files.length, files.map(_.getLen).sum)
     }
-    val todo = parts.filter(_._3 > maxFilesPerPartition)
+    val todo = onDisk.filter(_._3 > maxFilesPerPartition)
     if (todo.isEmpty) return Seq.empty
     val slots: Map[(String, Int), Int] = todo.map { case (d, hb, _, bytes) =>
       (d, hb) -> math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     }.toMap
-    val days = todo.map(_._1).distinct
     val slotFor = udf((d: String, hb: Int) => slots.getOrElse((d, hb), 1))
-    val keyIn = todo.map { case (d, hb, _, _) => s"$d/$hb" }.toSet
-    val keyInUdf = udf((d: String, hb: Int) => keyIn.contains(s"$d/$hb"))
-    val selected = spark.read.parquet(tierPath(cfg.root, tier))
-      .filter(col("day").isin(days: _*)) // directory-level prune
-      .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-      .filter(keyInUdf(col("day"), col("host_bucket")))
+    val selected = readParts(spark, tierPath(cfg.root, tier))
+      .filter(partIn(storedPart, slots.keySet)) // directory-level prune
     val nTasks = math.max(1, slots.values.sum)
     val slotted = selected
       .withColumn("_slot",
@@ -315,69 +329,45 @@ object TierPipeline {
       .partitionBy("day", "host_bucket")
       .parquet(tierPath(cfg.root, tier))
     appendLineage(spark, cfg.root, todo.map { case (d, hb, nFiles, bytes) =>
-      Row(tier, d, hb, runId, nFiles.toLong, bytes, 0.0, "compacted")
+      LineageRow(tier, d, hb, runId, nFiles.toLong, bytes, status = "compacted")
     })
     todo.map(t => (t._1, t._2))
   }
 
   /** Builds / resumes the full tier cascade 1m → 5m → 1h → 1d from raw pages
-    * (pages must already carry hierarchy columns). Each tier writes only its
-    * pending partitions; promotion reads the stored finer tier, pruned to the
-    * days that still have pending work. Returns tier → partitions written.
+    * (pages must already carry hierarchy columns). Lineage is read once, as
+    * a [[snapshot]] that each tier's appended rows extend in memory; each
+    * tier writes only its pending partitions through the one writer, and a
+    * promotion reads exactly its pending partitions of the stored finer
+    * tier. Assumes one writer per root (see the object scaladoc). Returns
+    * tier → partitions written.
     */
   def buildAll(pages: DataFrame, cfg: Config, runId: String): Map[String, Seq[(String, Int)]] = {
     val spark = pages.sparkSession
-    // prune raw pages to PENDING partitions BEFORE aggregating: the
-    // writeTier anti-join alone would re-run the whole tier-1 aggregate on a
-    // fully-complete table just to discover nothing is pending (measured: a
-    // no-op resume cost more than the initial build). The row-level
-    // (day, host_bucket) predicate is cheap derived-column arithmetic; on a
-    // day-partitioned source table the day side additionally prunes the scan.
-    val done1m = completed(spark, cfg.root, "1m")
-    val done1mKeys = done1m.toDF("_day", "_hb")
-    def withKeys(df: DataFrame): DataFrame = df
-      .withColumn("_day", date_format(col("warc_ts"), "yyyy-MM-dd"))
-      .withColumn("_hb", hostBucket(col("host"), cfg.hostBuckets))
-    // cheap pending probe FIRST, on (warc_ts, host) only: a fully-complete
-    // resume must not pay a full-width scan (text bytes dominate the source)
-    // just to learn nothing is pending. take(1) short-circuits as soon as
-    // one pending row is found, so the probe is ~free when work exists; on a
-    // day-partitioned source the day predicate additionally prunes dirs.
-    val anyPending = withKeys(pages.select("warc_ts", "host"))
-      .join(broadcast(done1mKeys), Seq("_day", "_hb"), "left_anti")
-      .take(1).nonEmpty
-    val w1 = if (!anyPending) Seq.empty[(String, Int)] else {
-      val pending = withKeys(pages)
-        .join(broadcast(done1mKeys), Seq("_day", "_hb"), "left_anti")
-        .drop("_day", "_hb")
-      // single-phase aggregate: salting cannot split one hot (host, minute)
-      // group (see Rollup's scaladoc); measured 10% slower at 32M pages
-      // (BASELINE.md, TierPipeline soak). The raw cut above is this write's
-      // only lineage anti-join: a tier row's (day, host_bucket) is its
-      // pages' (_day, _hb), so a second cut on the tier rows drops nothing.
-      writePending(withPartitionCols(Rollup.tier1m(pending, cfg.groupCols), cfg.hostBuckets),
-        done1m, "1m", cfg, runId)
-    }
-    val written = Rollup.Tiers.tail.foldLeft(Map("1m" -> w1)) { case (acc, t) =>
-      val finerName = Rollup.Tiers(Rollup.Tiers.indexWhere(_.name == t.name) - 1).name
-      // promotion preserves (day, host_bucket), so this tier's partition
-      // domain == the finer tier's lineage; pending = finer lineage minus this
-      // tier's complete lineage. Reading only pending DAYS is exact
-      // directory-level partition pruning (the per-partition anti-join inside
-      // writeTier then trims to exact (day, host_bucket) granularity).
-      val pendingDays = completed(spark, cfg.root, finerName)
-        .join(completed(spark, cfg.root, t.name), Seq("day", "host_bucket"), "left_anti")
-        .select("day").distinct().collect().map(_.getString(0)).toSeq
-      if (pendingDays.isEmpty) acc + (t.name -> Seq.empty)
-      else {
-        val finer = spark.read.parquet(tierPath(cfg.root, finerName))
-          .filter(col("day").isin(pendingDays: _*))
-          .drop("day", "host_bucket")
-        val promoted = Rollup.promote(finer, t.seconds, cfg.groupCols)
-        acc + (t.name -> writeTier(promoted, t.name, cfg, runId))
-      }
-    }
-    written
+    val snap = snapshot(spark, cfg.root)
+    // raw pages cut to partitions without a complete 1m row BEFORE
+    // aggregating: a no-op resume must not re-run the tier-1 aggregate
+    // (measured: it cost more than the initial build). On a first build the
+    // cut is `NOT false` and the optimizer drops it.
+    val raw = pages.filter(!partIn(pagePart(cfg), parts(snap, "1m")))
+    // the exact 1m partitions to write, from (warc_ts, host) only: a
+    // fully-complete resume must not pay a full-width scan (text bytes
+    // dominate the source) to learn nothing is pending
+    val todo1m = partsOf(raw, pagePart(cfg))
+    val w1m = writeParts(spark, Rollup.tier1m(raw, cfg.groupCols), "1m", todo1m, cfg, runId)
+    Rollup.Tiers.sliding(2).foldLeft((Map("1m" -> w1m.map(_.part)), snap ++ w1m)) {
+      case ((written, lin), Seq(finer, t)) =>
+        // promotion preserves (day, host_bucket): the pending partitions are
+        // complete(finer) − complete(t), and the input is exactly those
+        // finer partitions — an orphan finer partition (data with no lineage
+        // row) sharing their day is never read
+        val todo = parts(lin, finer.name) -- parts(lin, t.name)
+        def input = readParts(spark, tierPath(cfg.root, finer.name))
+          .filter(partIn(storedPart, todo)).drop("day", "host_bucket")
+        val w = writeParts(spark, Rollup.promote(input, t.seconds, cfg.groupCols), t.name, todo,
+          cfg, runId)
+        (written + (t.name -> w.map(_.part)), lin ++ w)
+    }._1
   }
 
   /** [[TierRoute]] registrations for a durable store: every stored tier

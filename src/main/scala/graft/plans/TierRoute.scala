@@ -241,9 +241,6 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     case other     => Seq(other)
   }
 
-  private val dbg = sys.env.contains("GRAFT_ROUTE_DEBUG")
-  private def trace(msg: => String): Unit = if (dbg) println(s"[route-debug] $msg")
-
   /** Classified filter conjunct: tier-aligned time bound or dim predicate. */
   private sealed trait TimePred
   private case class TimeGe(sec: Long) extends TimePred
@@ -253,7 +250,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
   private def tryRewrite(agg0: Aggregate): Option[LogicalPlan] = {
     val (conjuncts, subst, rel) = decompose(agg0.child) match {
       case Some(t) => t
-      case None    => trace(s"decompose failed: ${agg0.child.nodeName}"); return None
+      case None    => logDebug(s"tier-route: decompose failed: ${agg0.child.nodeName}"); return None
     }
     // re-inline pulled-out grouping aliases so the structural matchers see
     // the original bucket/measure expressions
@@ -271,7 +268,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     val relPaths = TierRoute.relationPaths(rel)
     if (relPaths.isEmpty) return None
     val candidates = TierRoute.registered.filter(_.rawPaths == relPaths)
-    if (candidates.isEmpty) { trace(s"no candidate for $relPaths"); return None }
+    if (candidates.isEmpty) { logDebug(s"tier-route: no candidate for $relPaths"); return None }
 
     // classify grouping: dimension attributes + at most one bucket expr
     def classify(route: Route): Option[(Seq[AttributeReference], Option[Long])] = {
@@ -281,7 +278,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
         case a: AttributeReference if route.groupCols.contains(a.name) => dims += a
         case e => bucketWidth(e, route.tsCol) match {
           case Some(w) if width.isEmpty && w >= 1 => width = Some(w)
-          case _ => trace(s"bucketWidth failed on: ${e.treeString}"); return None
+          case _ => logDebug(s"tier-route: bucketWidth failed on: ${e.treeString}"); return None
         }
       }
       Some((dims.result(), width))
@@ -323,7 +320,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     val ordered = candidates.flatMap(r => eligible(r).map(r -> _))
       .sortBy(-_._1.tierSeconds)
     if (ordered.isEmpty) {
-      trace(s"no eligible route; grouping=${agg.groupingExpressions.map(_.getClass.getSimpleName)}; " +
+      logDebug(s"tier-route: no eligible route; grouping=${agg.groupingExpressions.map(_.getClass.getSimpleName)}; " +
         candidates.map(r => s"${r.name}: classify=${classify(r)}").mkString("; "))
       return None
     }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.plans.TierPipeline
+import graft.plans.TierPipeline.{parts, partIn, snapshot, storedPart}
 
 /** Durable landing of the streaming 1-minute tier into the
   * [[graft.plans.TierPipeline]] store — the ingestion half of a
@@ -50,10 +51,8 @@ object StreamingIngest {
                   runId: String, batchId: Long): Unit = {
     val spark = closed.sparkSession
     val batchRun = s"$runId#$batchId"
-    val replayed = TierPipeline.lineage(spark, cfg.root)
-      .filter(col("tier") === StreamTier && col("run_id") === batchRun &&
-        col("status") === "stream-append")
-      .take(1).nonEmpty
+    val replayed = snapshot(spark, cfg.root).exists(r =>
+      r.tier == StreamTier && r.run_id == batchRun && r.status == "stream-append")
 
     val part = TierPipeline.withPartitionCols(closed, cfg.hostBuckets)
       .withColumn("batch_id", lit(batchId))
@@ -67,14 +66,8 @@ object StreamingIngest {
         .parquet(streamTierPath(cfg.root))
       if (replayed) return // data re-landed idempotently; lineage already there
 
-      val metrics = part.groupBy("day", "host_bucket")
-        .agg(count(lit(1)).as("row_cnt"), sum(col("cnt")).as("page_cnt"),
-          sum(col("sum_len")).as("sum_len_sum"))
-        .collect()
-      TierPipeline.appendLineage(spark, cfg.root, metrics.toSeq.map(r => Row(
-        StreamTier, r.getAs[String]("day"), r.getAs[Int]("host_bucket"), batchRun,
-        r.getAs[Long]("row_cnt"), r.getAs[Long]("page_cnt"),
-        r.getAs[Double]("sum_len_sum"), "stream-append")))
+      TierPipeline.appendLineage(spark, cfg.root,
+        TierPipeline.partitionMetrics(part, StreamTier, batchRun, "stream-append"))
     } finally part.unpersist()
   }
 
@@ -101,7 +94,7 @@ object StreamingIngest {
 
   /** Hot-layer garbage collection: once the cold cascade marks a (day,
     * host_bucket) partition complete in `tier_1m`, the streamed rows for that
-    * partition are superseded — [[readHot]]'s anti-join already ignores them,
+    * partition are superseded — [[readHot]]'s split already ignores them,
     * so deleting them changes no query result; it only reclaims the space and
     * the small-file count that accumulate at one-directory-per-micro-batch.
     * Appends a `stream-pruned` lineage row per dropped partition for audit.
@@ -111,18 +104,9 @@ object StreamingIngest {
     */
   def pruneStreamTier(spark: SparkSession, cfg: TierPipeline.Config,
                       runId: String): Seq[(String, Int)] = {
-    val lin = TierPipeline.lineage(spark, cfg.root)
-    val batchDone = TierPipeline.completed(spark, cfg.root, "1m")
-    val streamed = lin.filter(col("tier") === StreamTier &&
-        col("status") === "stream-append")
-      .select("day", "host_bucket")
-    val pruned = lin.filter(col("tier") === StreamTier &&
-        col("status") === "stream-pruned")
-      .select("day", "host_bucket")
-    val todo = streamed.join(batchDone, Seq("day", "host_bucket"), "left_semi")
-      .join(pruned, Seq("day", "host_bucket"), "left_anti")
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    val lin = snapshot(spark, cfg.root)
+    val todo = ((parts(lin, StreamTier, "stream-append") intersect parts(lin, "1m")) --
+      parts(lin, StreamTier, "stream-pruned")).toSeq.sorted
     if (todo.isEmpty) return Seq.empty
 
     val (fs, base) = TierPipeline.fsPath(spark, streamTierPath(cfg.root))
@@ -132,16 +116,19 @@ object StreamingIngest {
       val dayPath = new Path(base, s"day=$d")
       if (fs.exists(dayPath) && fs.listStatus(dayPath).isEmpty) fs.delete(dayPath, true)
     }
-    TierPipeline.appendLineage(spark, cfg.root,
-      todo.map { case (d, hb) => Row(StreamTier, d, hb, runId, 0L, 0L, 0.0, "stream-pruned") })
+    TierPipeline.appendLineage(spark, cfg.root, todo.map { case (d, hb) =>
+      TierPipeline.LineageRow(StreamTier, d, hb, runId, status = "stream-pruned")
+    })
     todo
   }
 
   /** Serving view over the associative measures: batch `tier_1m` rows for
     * every (day, host_bucket) partition the cold layer has marked complete,
-    * streamed rows for everything else. The overlap filter is a broadcast
-    * anti-join against the (tiny) lineage table — a partition is served from
-    * exactly one layer, so catch-up of the cold cascade never double-counts.
+    * streamed rows for everything else. The split is the complete 1m set of
+    * the lineage [[TierPipeline.snapshot]] taken when the frame is built,
+    * applied to both layers as a partition filter — a partition is served
+    * from exactly one layer, so catch-up of the cold cascade never
+    * double-counts.
     */
   def readHot(spark: SparkSession, cfg: TierPipeline.Config,
               groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
@@ -153,11 +140,10 @@ object StreamingIngest {
         groupCols.map(c => s"$c string").mkString(", ") +
         ", bucket_start long, cnt long, sum_len double, min_len double" +
         ", max_len double, mean_len double"))
-    val batchDone = TierPipeline.completed(spark, cfg.root, "1m")
+    val batchDone = parts(snapshot(spark, cfg.root), "1m")
     val hot = if (!TierPipeline.exists(spark, streamTierPath(cfg.root))) empty else
-      spark.read.parquet(streamTierPath(cfg.root))
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .join(broadcast(batchDone), Seq("day", "host_bucket"), "left_anti")
+      TierPipeline.readParts(spark, streamTierPath(cfg.root))
+        .filter(!partIn(storedPart, batchDone))
         .select(serveCols: _*)
     val coldPath = TierPipeline.tierPath(cfg.root, "1m")
     if (!TierPipeline.exists(spark, coldPath)) hot
@@ -165,10 +151,9 @@ object StreamingIngest {
       // cold side restricted to lineage-COMPLETE partitions: data written by
       // a crashed batch run that never reached its lineage append must not be
       // served (it will be overwritten on resume, and its partition is still
-      // served from the hot layer by the anti-join above)
-      val cold = spark.read.parquet(coldPath)
-        .withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
-        .join(broadcast(batchDone), Seq("day", "host_bucket"), "left_semi")
+      // served from the hot layer by the filter above)
+      val cold = TierPipeline.readParts(spark, coldPath)
+        .filter(partIn(storedPart, batchDone))
         .select(serveCols: _*)
       cold.unionByName(hot)
     }

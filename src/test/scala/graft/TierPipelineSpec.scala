@@ -1,8 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerShim
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.functions.Hier
 import graft.operators.Rollup
 import graft.plans.TierPipeline
@@ -25,6 +30,16 @@ class TierPipelineSpec extends SparkSuite {
   private def rmrf(p: Path): Unit = {
     if (Files.isDirectory(p)) Files.list(p).forEach(rmrf(_))
     Files.deleteIfExists(p)
+  }
+
+  /** Replaces the lineage table with its rows that pass `keep`, as a crash
+    * that never appended the others would have left it.
+    */
+  private def rewriteLineage(root: String)(keep: Row => Boolean): Unit = {
+    val rows = TierPipeline.lineage(spark, root).collect().filter(keep)
+    rmrf(Paths.get(TierPipeline.lineagePath(root)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), TierPipeline.lineageSchema)
+      .write.parquet(TierPipeline.lineagePath(root))
   }
 
   // 3 days of simulated crawl: the resume granularity is (day, host_bucket),
@@ -60,6 +75,8 @@ class TierPipelineSpec extends SparkSuite {
     // second run: everything complete -> nothing recomputed
     val w2 = TierPipeline.buildAll(pages, cfg, runId = "run2")
     assert(w2.values.forall(_.isEmpty))
+    // no pages on a fresh root: nothing to write, no tier to read
+    assert(TierPipeline.buildAll(pages.limit(0), Config(freshRoot()), "run0").values.forall(_.isEmpty))
   }
 
   test("lineage: empty before any build, but a listing failure throws") {
@@ -82,26 +99,16 @@ class TierPipelineSpec extends SparkSuite {
     // simulate a crash that lost two 1h partitions: remove their data dirs
     // and rewrite lineage without their rows (and without all 1d rows, as a
     // killed job would never have reached the coarser tier)
-    val lin = TierPipeline.lineage(spark, cfg.root).cache()
-    val victims = lin.filter(col("tier") === "1h").limit(2)
+    val victims = TierPipeline.lineage(spark, cfg.root).filter(col("tier") === "1h").limit(2)
       .select("day", "host_bucket").collect()
       .map(r => (r.getString(0), r.getInt(1)))
     victims.foreach { case (day, hb) =>
-      rmrf(java.nio.file.Paths.get(cfg.root, "tier_1h", s"day=$day", s"host_bucket=$hb"))
+      rmrf(Paths.get(cfg.root, "tier_1h", s"day=$day", s"host_bucket=$hb"))
     }
-    val keep = lin.filter(
-      !(col("tier") === "1d") &&
-        !(col("tier") === "1h" && concat_ws("|", col("day"), col("host_bucket"))
-          .isin(victims.map(v => s"${v._1}|${v._2}"): _*)))
-      .collect()
-    lin.unpersist()
-    rmrf(java.nio.file.Paths.get(TierPipeline.lineagePath(cfg.root)))
-    import spark.implicits._
-    spark.createDataFrame(spark.sparkContext.parallelize(keep.toSeq),
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "tier string, day string, host_bucket int, run_id string, " +
-            "row_cnt long, page_cnt long, sum_len_sum double, status string"))
-      .repartition(1).write.parquet(TierPipeline.lineagePath(cfg.root))
+    rewriteLineage(cfg.root) { r =>
+      r.getString(0) != "1d" &&
+        !(r.getString(0) == "1h" && victims.contains((r.getString(1), r.getInt(2))))
+    }
 
     val w = TierPipeline.buildAll(pages, cfg, runId = "run2")
     // 1m and 5m untouched; 1h recomputed exactly the victims
@@ -112,6 +119,61 @@ class TierPipelineSpec extends SparkSuite {
     val after = TierPipeline.readTier(spark, cfg, "1d")
       .select(stable.map(col): _*).collect().toSet
     assert(after === before)
+  }
+
+  test("lineage is read at most once per buildAll, and exactly once on a no-op resume") {
+    val cfg = Config(freshRoot(), hostBuckets = 4)
+    def readsLineage(qe: QueryExecution): Boolean = qe.analyzed.exists {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.exists(_.getName == "_lineage")
+        case _ => false
+      }
+      case _ => false
+    }
+    val reads = new AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (readsLineage(qe)) reads.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = onSuccess(f, qe, 0L)
+    }
+    def lineageReads(body: => Any): Int = {
+      ListenerShim.drain(spark)
+      reads.set(0)
+      body
+      ListenerShim.drain(spark)
+      reads.get
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(lineageReads(TierPipeline.buildAll(pages, cfg, runId = "run1")) <= 1)
+      assert(lineageReads(TierPipeline.buildAll(pages, cfg, runId = "run2")) === 1)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("an orphan 1m partition sharing a day with pending work is never promoted") {
+    val cfg = Config(freshRoot(), hostBuckets = 4)
+    TierPipeline.buildAll(pages, cfg, runId = "run1")
+    // a crash left the orphan's 1m data on disk without its lineage row; the
+    // pending partition of the same day lost its data and lineage at every
+    // tier; the re-run has no raw pages of the orphan
+    val day = "2024-01-02"
+    val (orphan, pending) = ((day, 0), (day, 1))
+    rewriteLineage(cfg.root)(r => !Set(orphan, pending).contains((r.getString(1), r.getInt(2))))
+    Rollup.Tiers.foreach { t =>
+      rmrf(Paths.get(cfg.root, s"tier_${t.name}", s"day=$day", "host_bucket=1"))
+      if (t.name != "1m") rmrf(Paths.get(cfg.root, s"tier_${t.name}", s"day=$day", "host_bucket=0"))
+    }
+    assert(Files.exists(Paths.get(cfg.root, "tier_1m", s"day=$day", "host_bucket=0")))
+    val rerun = pages.filter(!(date_format(col("warc_ts"), "yyyy-MM-dd") === day &&
+      pmod(xxhash64(col("host")), lit(4L)) === 0))
+    val w = TierPipeline.buildAll(rerun, cfg, runId = "run2")
+    w.foreach { case (t, ps) => assert(ps.toSet === Set(pending), s"tier $t") }
+    val orphanRows = TierPipeline.lineage(spark, cfg.root)
+      .filter(col("day") === day && col("host_bucket") === 0)
+    assert(orphanRows.isEmpty)
+    Rollup.Tiers.tail.foreach { t =>
+      assert(!Files.exists(Paths.get(cfg.root, s"tier_${t.name}", s"day=$day", "host_bucket=0")))
+    }
   }
 
   test("retention expiry drops old fine-tier days but never triggers a rebuild") {
