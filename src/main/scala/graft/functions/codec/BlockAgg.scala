@@ -150,7 +150,7 @@ final class PointsBuf(var ts: Array[Long], var vs: Array[Double], var n: Int) {
 }
 
 /** Compressed block + exact percentiles of its values: the fields of
-  * [[BlockAgg]]'s output and of `Rollup.encodeWithStatsUdf`.
+  * [[BlockAgg]]'s output (and of BlockAggregatorSpec's reference UDF).
   */
 case class MergedStats(block: Array[Byte], p50: Double, p95: Double)
 

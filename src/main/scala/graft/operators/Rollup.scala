@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 import graft.functions.Hier
-import graft.functions.codec.{BlockAgg, MergedStats, PointSort}
+import graft.functions.codec.BlockAgg
 
 /** Continuous-aggregate rollup + retention-tier promotion.
   *
@@ -54,20 +54,6 @@ object Rollup {
 
   case class Tier(name: String, seconds: Long)
   val Tiers: Seq[Tier] = Seq(Tier("1m", 60), Tier("5m", 300), Tier("1h", 3600), Tier("1d", 86400))
-
-  /** Encode points into a block AND compute exact p50/p95 in the same pass —
-    * the points are sorted for the codec anyway, so the percentiles are free;
-    * using separate `percentile` aggregates would add two TypedImperative
-    * buffers per group (measurably heavy at ~10^6 sparse groups).
-    */
-  val encodeWithStatsUdf: UserDefinedFunction = udf { (points: Seq[Row]) =>
-    val n = points.length
-    val ts = new Array[Long](n); val vs = new Array[Double](n)
-    var i = 0
-    points.foreach { r => ts(i) = r.getLong(0); vs(i) = r.getDouble(1); i += 1 }
-    PointSort.sortPairs(ts, vs, n)
-    MergedStats.ofSorted(ts, vs)
-  }
 
   /** Measure column: per-page text length in characters (parity-defined with
     * the oracle: `length(text)`), computed with the vectorizable
@@ -143,6 +129,56 @@ object Rollup {
   private def partialCols(groupCols: Seq[String]): Seq[Column] =
     (groupCols ++ Seq("bucket_start", "cnt", "sum_len", "min_len", "max_len",
       "lang_set", "block")).map(col)
+
+  /** The columns of a finished tier row over string hierarchy columns
+    * `groupCols`: [[tier1m]] analyzed over an empty page frame, so a column
+    * added to the tier is in it too. [[promote]] gives the same names and
+    * types (TierPipelineSpec). Analysis only — no Spark job — but its ~15
+    * eager analyses took 40-110 ms warm, so it is derived once per
+    * `groupCols`.
+    */
+  private[graft] def tierSchema(spark: SparkSession, groupCols: Seq[String]): StructType =
+    tierSchemas.getOrElseUpdate(groupCols, {
+      val pages = StructType(groupCols.map(StructField(_, StringType)))
+        .add("warc_ts", TimestampType).add("text", StringType).add("lang", StringType)
+      tier1m(spark.createDataFrame(java.util.Collections.emptyList[Row](), pages), groupCols).schema
+    })
+
+  private val tierSchemas = scala.collection.concurrent.TrieMap.empty[Seq[String], StructType]
+
+  /** The yyyy-MM-dd UTC day of epoch second `sec`, whatever the session
+    * time zone: the store's `day` partition of a tier row is
+    * `dayOf(bucket_start)`, so a reader in any time zone names the
+    * directories the writer did. Whole days since the epoch, as a DATE cast
+    * to its ISO string.
+    */
+  private[graft] def dayOf(sec: Column): Column =
+    date_from_unix_date(floor(sec / 86400L).cast("int")).cast("string")
+
+  /** `tier` cut to the days a `bucket_start` in one of `ranges` (each
+    * `[lo, hi)`, a missing end unbounded) can lie on, when the frame carries
+    * the store's `day` column ([[graft.plans.TierPipeline.readTier]]);
+    * otherwise, or when a range has no bound, `tier` as it is. [[dayOf]] is
+    * monotone, so `[lo, hi)` covers `day ∈ [dayOf(lo), dayOf(hi − 1)]`: a
+    * predicate over `day` alone, which over a stored tier's partition column
+    * prunes directories.
+    */
+  private[graft] def dayPruned(tier: DataFrame, ranges: Seq[(Option[Long], Option[Long])]): DataFrame = {
+    val cover = ranges.map { case (lo, hi) =>
+      (lo.map(l => col("day") >= dayOf(lit(l))) ++ hi.map(h => col("day") <= dayOf(lit(h - 1))))
+        .reduceOption(_ && _)
+    }
+    if (!tier.columns.contains("day") || cover.isEmpty || cover.exists(_.isEmpty)) tier
+    else tier.filter(cover.flatten.reduce(_ || _))
+  }
+
+  /** Rows of a tier frame with `bucket_start` in any of `ranges` (each
+    * `[lo, hi)`), day-pruned by [[dayPruned]].
+    */
+  private def inRanges(tier: DataFrame, ranges: Seq[(Long, Long)]): DataFrame =
+    dayPruned(tier, ranges.map { case (lo, hi) => (Some(lo), Some(hi)) })
+      .filter(ranges.map { case (lo, hi) => col("bucket_start") >= lo && col("bucket_start") < hi }
+        .reduce(_ || _))
 
   /** Salted tier-1: [[tier1m]] on (key, `s`-way url salt, bucket) so one
     * hot group fans across `s` reducers, then [[mergePartials]] drops the
@@ -261,14 +297,19 @@ object Rollup {
     *
     * Scale: per group this touches O(interior-days + 48 + 118) tier rows for
     * ANY range width — at 10^12 raw pages a month-wide ad-hoc percentile
-    * query reads thousands of tier rows, not billions of points. Against the
-    * day-partitioned durable store each segment filter is a partition prune
-    * (tier tables partition by day — see [[graft.plans.TierPipeline]]); here
-    * the same predicate prunes via parquet min/max on `bucket_start`.
+    * query reads thousands of tier rows, not billions of points. Every
+    * segment filter on `bucket_start` reaches the parquet reader, which
+    * prunes row groups by their min/max. A store frame from
+    * [[graft.plans.TierPipeline.readTier]] also carries its `day` partition
+    * column, and each tier's read is then cut to the days its segments cover
+    * ([[dayPruned]]) — a directory-level prune: the files of other days are
+    * never opened.
     *
     * @param tiers tierName → tier table (the [[allTiers]] map or the durable
     *              store's frames); every segment's tier must be present and
-    *              carry the partial columns (cnt/sum/min/max/lang_set/block)
+    *              carry the partial columns (cnt/sum/min/max/lang_set/block).
+    *              A `day` column, where present, must be
+    *              `dayOf(bucket_start)` as the store writes it
     * @return one row per group: `range_start`, `range_end`, the merged
     *         measures, exact `p50_len`/`p95_len`, and the merged block
     */
@@ -283,10 +324,7 @@ object Rollup {
     // worse. (Catalyst's ReuseExchange cannot dedupe the two references:
     // the differing pushed-down range filters make the exchanges differ.)
     val parts = segs.groupBy(_.tier).toSeq.map { case (tier, ss) =>
-      val pred = ss.map(sg =>
-          col("bucket_start") >= sg.startSec && col("bucket_start") < sg.endSec)
-        .reduce(_ || _)
-      tiers(tier).filter(pred).select(partialCols(groupCols): _*)
+      inRanges(tiers(tier), ss.map(sg => (sg.startSec, sg.endSec))).select(partialCols(groupCols): _*)
     }
     mergePartials(parts.reduce(_.unionByName(_)), groupCols, bucketExpr = lit(startSec))
       .withColumnRenamed("bucket_start", "range_start")
@@ -306,7 +344,8 @@ object Rollup {
     * p50/p95 are rebuilt per step bucket from the tier blocks, so a 90-min
     * resample of a month costs O(groups × range/5m) tier rows, never a raw
     * scan. The empty-bucket grid is `groups-in-range × (range/step)` — the
-    * size of the chart being drawn.
+    * size of the chart being drawn. A store frame's `day` column prunes the
+    * read to the range's days, as in [[readRange]].
     */
   def readSeries(tiers: Map[String, DataFrame], startSec: Long, endSec: Long,
                  stepSeconds: Long,
@@ -319,9 +358,7 @@ object Rollup {
     require(usable.nonEmpty, s"no provided tier divides the $stepSeconds s step")
     val src = usable.maxBy(_.seconds)
     val merged = mergePartials(
-      tiers(src.name)
-        .filter(col("bucket_start") >= startSec && col("bucket_start") < endSec)
-        .select(partialCols(groupCols): _*),
+      inRanges(tiers(src.name), Seq((startSec, endSec))).select(partialCols(groupCols): _*),
       groupCols,
       bucketExpr = col("bucket_start") - pmod(col("bucket_start"), lit(stepSeconds)))
     val grid = merged.select(groupCols.map(col): _*).distinct()

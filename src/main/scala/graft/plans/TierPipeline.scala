@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import graft.operators.Rollup
 
 /** Checkpoint-resumable retention-tier pipeline with per-partition lineage +
@@ -40,6 +40,16 @@ import graft.operators.Rollup
   *     in parallel, which is what makes partition-granular resume sound.
   *   - metrics ride the same pass as the data write (one extra small agg),
   *     giving per-partition row counts + measure checksums for drift checks.
+  *   - every cascade tier is read with one declared schema ([[tierSchema]]),
+  *     derived from [[Rollup]]'s columns. A read plans with no Spark job:
+  *     there is no schema-inference job over the files' footers, and `day`
+  *     comes back as the lineage's yyyy-MM-dd string, not an inferred DATE.
+  *     The stream tier has its caller's columns and is read by inference
+  *     ([[readParts]]).
+  *   - `day` is `Rollup.dayOf(bucket_start)`, the UTC day whatever the
+  *     session time zone, so a time range is also a day range:
+  *     `Rollup.readRange`, `Rollup.readSeries` and the [[routes]] prune a
+  *     [[readTier]] frame to the range's day directories.
   *
   * One writer per root: nothing locks `_lineage`, so [[buildAll]],
   * [[enforceRetention]], [[invalidateLate]] and [[compact]] on one root must
@@ -115,15 +125,33 @@ object TierPipeline {
 
   private[graft] def withPartitionCols(tierDf: DataFrame, hostBuckets: Int): DataFrame =
     tierDf
-      .withColumn("day", date_format(timestamp_seconds(col("bucket_start")), "yyyy-MM-dd"))
+      .withColumn("day", Rollup.dayOf(col("bucket_start")))
       .withColumn("host_bucket", hostBucket(col("host"), hostBuckets))
 
-  /** The partition key of a stored tier read through [[readParts]]. */
+  /** The stored layout of a cascade tier: [[Rollup.tierSchema]] over the
+    * (string) hierarchy columns, then the partition columns `day`
+    * (yyyy-MM-dd string) and `host_bucket`.
+    */
+  private[graft] def tierSchema(spark: SparkSession, cfg: Config): StructType =
+    Rollup.tierSchema(spark, cfg.groupCols).add("day", StringType).add("host_bucket", IntegerType)
+
+  /** A stored cascade tier with its partition columns, read with the
+    * declared [[tierSchema]]: no Spark job to plan it.
+    */
+  private[graft] def readStored(spark: SparkSession, cfg: Config, tier: String): DataFrame =
+    spark.read.schema(tierSchema(spark, cfg)).parquet(tierPath(cfg.root, tier))
+
+  /** The partition key of a stored tier read through [[readStored]] or
+    * [[readParts]].
+    */
   private[graft] val storedPart: Seq[Column] = Seq(col("day"), col("host_bucket"))
 
-  /** The partition key raw pages' tier rows land under. */
+  /** The partition key raw pages' tier rows land under: the day of the
+    * epoch second [[Rollup.tier1m]] buckets, so it is the day of the row's
+    * `bucket_start` (a bucket never spans a day).
+    */
   private def pagePart(cfg: Config): Seq[Column] = Seq(
-    date_format(col("warc_ts"), "yyyy-MM-dd").as("day"),
+    Rollup.dayOf(unix_timestamp(col("warc_ts"))).as("day"),
     hostBucket(col("host"), cfg.hostBuckets).as("host_bucket"))
 
   /** `key ∈ parts` for a (day, host_bucket) key; false when `parts` is
@@ -137,8 +165,10 @@ object TierPipeline {
   private def partsOf(df: DataFrame, key: Seq[Column]): Set[Part] =
     df.select(key: _*).distinct().collect().map(r => (r.getString(0), r.getInt(1))).toSet
 
-  /** A stored tier with its partition columns; partition inference reads
-    * `day=` directories back as DATE, so `day` is normalized to the lineage's
+  /** A tier table of a layout with no declared schema (the stream tier,
+    * whose columns are its caller's) with its partition columns. Its schema
+    * is inferred from the files, and partition inference reads `day=`
+    * directories back as DATE, so `day` is normalized to the lineage's
     * yyyy-MM-dd string.
     */
   private[graft] def readParts(spark: SparkSession, path: String): DataFrame =
@@ -178,15 +208,19 @@ object TierPipeline {
     // evaluate the tier pipeline twice; the predicate prunes the read to
     // the written directories, so other partitions of the tier — complete
     // or orphaned — are neither read nor marked
-    val done = partitionMetrics(readParts(spark, path).filter(partIn(storedPart, todo)),
+    val done = partitionMetrics(readStored(spark, cfg, tier).filter(partIn(storedPart, todo)),
       tier, runId, "complete")
     appendLineage(spark, cfg.root, done)
     done
   }
 
-  /** Reads a stored tier table (data columns only, partition cols dropped). */
+  /** Reads a stored tier table: the tier's data columns and its `day`
+    * partition column (yyyy-MM-dd string, `Rollup.dayOf(bucket_start)`);
+    * `host_bucket` is dropped. `Rollup.readRange`/`readSeries` and the
+    * [[routes]] prune on `day`. Planning the read runs no Spark job.
+    */
   def readTier(spark: SparkSession, cfg: Config, tier: String): DataFrame =
-    spark.read.parquet(tierPath(cfg.root, tier)).drop("day", "host_bucket")
+    readStored(spark, cfg, tier).drop("host_bucket")
 
   /** Retention enforcement — the "retention" in retention tiers: each tier
     * keeps only its last `policy(tier)` days (e.g. 1m for 7 days, 1h for 90,
@@ -306,7 +340,7 @@ object TierPipeline {
       (d, hb) -> math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     }.toMap
     val slotFor = udf((d: String, hb: Int) => slots.getOrElse((d, hb), 1))
-    val selected = readParts(spark, tierPath(cfg.root, tier))
+    val selected = readStored(spark, cfg, tier)
       .filter(partIn(storedPart, slots.keySet)) // directory-level prune
     val nTasks = math.max(1, slots.values.sum)
     val slotted = selected
@@ -362,7 +396,7 @@ object TierPipeline {
         // finer partitions — an orphan finer partition (data with no lineage
         // row) sharing their day is never read
         val todo = parts(lin, finer.name) -- parts(lin, t.name)
-        def input = readParts(spark, tierPath(cfg.root, finer.name))
+        def input = readStored(spark, cfg, finer.name)
           .filter(partIn(storedPart, todo)).drop("day", "host_bucket")
         val w = writeParts(spark, Rollup.promote(input, t.seconds, cfg.groupCols), t.name, todo,
           cfg, runId)
@@ -374,7 +408,9 @@ object TierPipeline {
     * becomes a route over `raw` (the pages frame WITH hierarchy columns,
     * scanned from parquet), with `length(text)`/`utf8_char_count(text)`
     * measures, exact percentiles via the Gorilla block column, and
-    * `count(DISTINCT lang)` via the per-bucket lang sets. After
+    * `count(DISTINCT lang)` via the per-bucket lang sets. The tier frames
+    * carry their `day` partition column, so a time-bounded query reads only
+    * the day directories its range covers. After
     * {{{
     *   TierRoute.install(spark)
     *   TierPipeline.routes(spark, cfg, raw).foreach(TierRoute.register)

@@ -3,11 +3,13 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
+import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, TimestampNTZType, TimestampType}
 import graft.functions.codec.BlockAgg
+import graft.operators.Rollup
 
 /** Transparent continuous-aggregate routing: a Catalyst optimizer rule that
   * rewrites aggregates phrased against the RAW table onto its pre-computed
@@ -95,7 +97,11 @@ object TierRoute {
     *                       bucket width to be a multiple of it
     * @param tier           builds a FRESH tier DataFrame per rewrite (fresh
     *                       attribute ids — the same plan instance must not
-    *                       appear twice in one query)
+    *                       appear twice in one query). A `day` column, where
+    *                       the frame has one, must be `Rollup.dayOf` of the
+    *                       bucket start, as in the stored tiers: the
+    *                       query's time bounds then cut the scan to the days
+    *                       they cover
     * @param measureNonNull set true only when the measure column has no
     *                       nulls in the raw data; gates `avg` and
     *                       `count(measure)` rewrites, whose tier form
@@ -332,8 +338,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
   private def rewriteWith(agg: Aggregate, route: Route,
       dims: Seq[AttributeReference], width: Option[Long],
       preds: Seq[TimePred]): Option[LogicalPlan] = {
-    val tierDf = route.tier()
-    val tierPlan = tierDf.queryExecution.analyzed
+    val tierPlan = tierScan(route, preds)
     def tierAttr(name: String): Option[AttributeReference] =
       tierPlan.output.collectFirst { case a: AttributeReference if a.name == name => a }
     val bucketAttr = tierAttr(route.bucketStartCol).getOrElse(return None)
@@ -470,6 +475,18 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     logInfo(s"tier-route: rewrote aggregate over ${route.rawPaths.mkString(",")} " +
       s"onto tier '${route.name}' (${route.tierSeconds}s)")
     Some(Aggregate(newGroupExprs, newAggExprs, pruned))
+  }
+
+  /** The analyzed plan of a fresh tier frame, cut to the days the query's
+    * time bounds cover when the frame carries the store's `day` column
+    * (`Rollup.dayPruned`; over a partition column the cut prunes
+    * directories). Folded to literals because this rule may run after the
+    * optimizer's own folding.
+    */
+  private def tierScan(route: Route, preds: Seq[TimePred]): LogicalPlan = {
+    val lo = preds.collect { case TimeGe(s) => s }.maxOption
+    val hi = preds.collect { case TimeLt(s) => s }.minOption
+    ConstantFolding(Rollup.dayPruned(route.tier(), Seq((lo, hi))).queryExecution.analyzed)
   }
 
   private def traverseOpt[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {

@@ -86,11 +86,12 @@ object StreamingIngest {
       .foreachBatch((batch: DataFrame, id: Long) => ingestBatch(batch, cfg, runId, id))
       .start()
 
-  /** The streamed hot tier as a DataFrame (associative measures; `batch_id`
-    * and partition columns dropped, `day` normalized to yyyy-MM-dd).
+  /** The streamed hot tier as a DataFrame: the landed columns and the
+    * `day` (yyyy-MM-dd string) and `host_bucket` partition columns;
+    * `batch_id` is dropped. Its schema is inferred, not the cascade tiers'.
     */
   def readStreamTier(spark: SparkSession, cfg: TierPipeline.Config): DataFrame =
-    spark.read.parquet(streamTierPath(cfg.root)).drop("batch_id")
+    TierPipeline.readParts(spark, streamTierPath(cfg.root)).drop("batch_id")
 
   /** Hot-layer garbage collection: once the cold cascade marks a (day,
     * host_bucket) partition complete in `tier_1m`, the streamed rows for that
@@ -152,7 +153,7 @@ object StreamingIngest {
       // a crashed batch run that never reached its lineage append must not be
       // served (it will be overwritten on resume, and its partition is still
       // served from the hot layer by the filter above)
-      val cold = TierPipeline.readParts(spark, coldPath)
+      val cold = TierPipeline.readStored(spark, cfg, "1m")
         .filter(partIn(storedPart, batchDone))
         .select(serveCols: _*)
       cold.unionByName(hot)

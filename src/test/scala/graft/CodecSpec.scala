@@ -104,9 +104,21 @@ class BlockAggregatorSpec extends SparkSuite {
   import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
   import org.apache.spark.sql.functions._
   import graft.functions.codec.{BlockAgg, MergedStats, PointSort, TsCodec}
-  import graft.operators.Rollup
 
   private val FallbackConf = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
+
+  /** Point mode's reference: sort the collected points, then encode the
+    * block and take the exact p50/p95 in one pass.
+    */
+  private val encodeWithStatsUdf = udf { (points: Seq[org.apache.spark.sql.Row]) =>
+    val n = points.length
+    val ts = new Array[Long](n); val vs = new Array[Double](n)
+    var i = 0
+    points.foreach { r => ts(i) = r.getLong(0); vs(i) = r.getDouble(1); i += 1 }
+    PointSort.sortPairs(ts, vs, n)
+    MergedStats.ofSorted(ts, vs)
+  }
+
   private var fallbackForced = false
   private object Plans extends AdaptiveSparkPlanHelper
 
@@ -153,7 +165,7 @@ class BlockAggregatorSpec extends SparkSuite {
     val df = pts.toDF("g", "ts", "v").repartition(7) // force multi-partition merges
     val viaAgg = stats(df.groupBy("g").agg(BlockAgg.points(col("ts"), col("v")).as("m")))
     val viaUdf = stats(df.groupBy("g")
-      .agg(Rollup.encodeWithStatsUdf(collect_list(struct(col("ts"), col("v").cast("double")))).as("m")))
+      .agg(encodeWithStatsUdf(collect_list(struct(col("ts"), col("v").cast("double")))).as("m")))
     assert(viaAgg.size === 7 && viaAgg.keySet === viaUdf.keySet)
     viaAgg.foreach { case (g, m) => assertSame(m, viaUdf(g), g) }
   }

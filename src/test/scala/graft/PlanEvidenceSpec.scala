@@ -1,9 +1,17 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerShim
 import graft.sources.Pages
 import graft.functions.Hier
 import graft.operators.Rollup
+import graft.plans.{TierPipeline, TierRoute}
 
 /** Physical-plan evidence for the scale claims the correctness oracle can't
   * see: bucketed tables join WITHOUT a shuffle, the tier-store layout prunes
@@ -105,6 +113,156 @@ class PlanEvidenceSpec extends SparkSuite {
     assert(j.filter(col("cnt").isNull || col("d_cnt").isNull).count() == 0)
     assert(j.filter(col("cnt") =!= col("d_cnt") ||
       abs(col("p95_len") - col("d_p95")) > 1e-9).count() == 0)
+  }
+
+  /** A 2-day store (hostBuckets 2) built by `buildAll` from pages on disk —
+    * routes match their raw frame by its parquet path — and the page dir.
+    */
+  private lazy val store: (String, TierPipeline.Config) = {
+    val rawDir = Files.createTempDirectory("graft_store_raw").toString
+    Hier.withHierarchy(Pages.synthesize(spark, 6000L, seed = 23L, minutes = 2 * 1440))
+      .write.mode("overwrite").parquet(rawDir)
+    val cfg = TierPipeline.Config(Files.createTempDirectory("graft_store").toString, hostBuckets = 2)
+    TierPipeline.buildAll(spark.read.parquet(rawDir), cfg, runId = "store1")
+    (rawDir, cfg)
+  }
+
+  /** Fresh frames over every stored tier, as a dashboard refresh builds them. */
+  private def storeTiers(cfg: TierPipeline.Config): Map[String, DataFrame] =
+    Rollup.Tiers.map(t => t.name -> TierPipeline.readTier(spark, cfg, t.name)).toMap
+
+  private val uw = unix_timestamp(col("warc_ts"))
+
+  /** Daily-by-host panel over both days, phrased against the raw pages. */
+  private def dailyPanel(raw: DataFrame): DataFrame = raw
+    .filter(uw >= Pages.Epoch && uw < Pages.Epoch + 2 * 86400L)
+    .groupBy(col("host"), (uw - pmod(uw, lit(86400L))).as("bucket_start"))
+    .agg(count(lit(1)).as("cnt"), percentile(length(col("text")), lit(0.95)).as("p95_len"))
+
+  /** Hourly-by-host p50 over six hours of day 1, phrased against the raw pages. */
+  private def hourlyPanel(raw: DataFrame): DataFrame = raw
+    .filter(uw >= Pages.Epoch + 3 * 3600L && uw < Pages.Epoch + 9 * 3600L)
+    .groupBy(col("host"), (uw - pmod(uw, lit(3600L))).as("bucket_start"))
+    .agg(percentile(length(col("text")), lit(0.5)).as("p50_len"))
+    .orderBy("host", "bucket_start")
+
+  private def withStoreRoutes[A](raw: DataFrame, cfg: TierPipeline.Config)(body: => A): A = {
+    TierRoute.clear()
+    TierRoute.install(spark)
+    TierPipeline.routes(spark, cfg, raw).foreach(TierRoute.register)
+    try body finally TierRoute.clear()
+  }
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** The parquet scans of an executed frame's final plan. */
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] = {
+    df.collect()
+    Plans.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+  }
+
+  test("store reads plan with no Spark job: routed aggregate, readRange, readSeries") {
+    val (rawDir, cfg) = store
+    val raw = spark.read.parquet(rawDir)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    // jobs started while a fresh frame is analyzed, optimized and planned
+    def jobsToPlan(df: => DataFrame): Int = {
+      ListenerShim.drain(spark)
+      jobs.set(0)
+      df.queryExecution.executedPlan
+      ListenerShim.drain(spark)
+      jobs.get
+    }
+    val lo = Pages.Epoch + 3 * 3600L
+    spark.sparkContext.addSparkListener(listener)
+    try withStoreRoutes(raw, cfg) {
+      assert(jobsToPlan(dailyPanel(raw)) === 0, "routed daily panel")
+      assert(TierRoute.relationPaths(dailyPanel(raw).queryExecution.optimizedPlan)
+        .exists(_.contains("tier_1d")), "the daily panel must be routed")
+      assert(jobsToPlan(Rollup.readRange(storeTiers(cfg), lo + 7 * 60, lo + 86400L)) === 0, "readRange")
+      assert(jobsToPlan(Rollup.readSeries(storeTiers(cfg), lo, lo + 86400L, 3600L)) === 0, "readSeries")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("store reads prune by day: readRange, readSeries and a routed panel") {
+    val (rawDir, cfg) = store
+    val raw = spark.read.parquet(rawDir)
+    // every scan carries a partition filter on `day`, and opens only that
+    // day's hostBuckets partitions
+    def prunedTo(day: String, df: DataFrame, what: String): Unit = {
+      val ss = scans(df)
+      assert(ss.nonEmpty, s"$what: no parquet scan")
+      ss.foreach { s =>
+        assert(s.partitionFilters.exists(_.references.exists(_.name == "day")),
+          s"$what: no day partition filter on ${s.relation.location.rootPaths}:\n${s.simpleString(400)}")
+        val read = s.selectedPartitions
+        assert(read.filePartitionIterator.map(_.values.getUTF8String(0).toString).toSeq.distinct === Seq(day),
+          s"$what: scanned days of ${s.relation.location.rootPaths}")
+        assert(read.partitionCount === cfg.hostBuckets, s"$what: partitions read")
+      }
+    }
+    // a one-day range: 1m, 5m and 1h segments, all on day 1
+    prunedTo("2024-01-01",
+      Rollup.readRange(storeTiers(cfg), Pages.Epoch + 2 * 3600L + 11 * 60, Pages.Epoch + 5 * 3600L),
+      "readRange")
+    prunedTo("2024-01-02",
+      Rollup.readSeries(storeTiers(cfg), Pages.Epoch + 86400L, Pages.Epoch + 2 * 86400L, 3600L),
+      "readSeries")
+    TierRoute.clear()
+    val unrouted = hourlyPanel(raw).collect()
+    withStoreRoutes(raw, cfg) {
+      val routed = hourlyPanel(raw)
+      prunedTo("2024-01-01", routed, "routed hourly panel")
+      assert(TierRoute.relationPaths(routed.queryExecution.optimizedPlan).exists(_.contains("tier_1h")))
+      val got = routed.collect()
+      assert(got.length === unrouted.length && got.nonEmpty)
+      got.zip(unrouted).foreach { case (g, e) =>
+        assert(g.getString(0) === e.getString(0) && g.getLong(1) === e.getLong(1))
+        assert(approxEq(g.getDouble(2), e.getDouble(2)))
+      }
+    }
+  }
+
+  test("store reads give the same rows in any session time zone") {
+    val (rawDir, cfg) = store
+    val raw = spark.read.parquet(rawDir)
+    // 02:00–05:00 UTC of day 2: in Los Angeles both ends fall on day 1, so
+    // a cut computed in the session's zone would prune day 2 away
+    val lo = Pages.Epoch + 86400L + 2 * 3600L
+    val hi = lo + 3 * 3600L
+    def panel(): DataFrame = raw
+      .filter(uw >= lo && uw < hi)
+      .groupBy(col("host"), (uw - pmod(uw, lit(3600L))).as("bucket_start"))
+      .agg(count(lit(1)).as("cnt"), percentile(length(col("text")), lit(0.5)).as("p50_len"))
+    def rows(df: DataFrame): Set[Seq[Any]] = {
+      val out = df.drop("block").collect().map(_.toSeq.map {
+        case d: Double => math.round(d * 1e6) / 1e6
+        case v => v
+      }).toSet
+      assert(out.nonEmpty)
+      out
+    }
+    def reads(): Seq[Set[Seq[Any]]] = {
+      TierRoute.clear()
+      val unrouted = rows(panel())
+      val routed = withStoreRoutes(raw, cfg)(rows(panel()))
+      assert(routed === unrouted, "routed panel vs its unrouted answer")
+      Seq(rows(Rollup.readRange(storeTiers(cfg), lo + 7 * 60, hi)),
+        rows(Rollup.readSeries(storeTiers(cfg), lo, hi, 3600L)), routed)
+    }
+    val tz = "spark.sql.session.timeZone"
+    val prev = spark.conf.get(tz)
+    assert(prev === "UTC")
+    val utc = reads()
+    spark.conf.set(tz, "America/Los_Angeles")
+    try {
+      reads().zip(Seq("readRange", "readSeries", "routed panel")).zip(utc).foreach {
+        case ((got, what), expected) => assert(got === expected, what)
+      }
+    } finally spark.conf.set(tz, prev)
   }
 
   test("tier-1 continuous aggregate is a single-shuffle plan") {

@@ -49,6 +49,10 @@ class StreamingIngestSpec extends SparkSuite {
       val batch = Rollup.tier1m(Hier.withHierarchy(pages.toDF()))
         .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
       assert(landed === batch) // all 0-4m buckets closed and landed, once each
+      // partition columns as the lineage names them: `day` a yyyy-MM-dd string
+      val stream = StreamingIngest.readStreamTier(spark, cfg)
+      assert(stream.schema("day").dataType === org.apache.spark.sql.types.StringType)
+      assert(stream.select("day").distinct().collect().map(_.get(0)).toSeq === Seq("2024-01-01"))
 
       // physical layout: day= / host_bucket= / batch_id= subdirectories
       val dayDirs = new java.io.File(StreamingIngest.streamTierPath(root)).listFiles()

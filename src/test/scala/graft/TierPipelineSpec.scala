@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerShim
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.functions.Hier
 import graft.operators.Rollup
@@ -77,6 +78,31 @@ class TierPipelineSpec extends SparkSuite {
     assert(w2.values.forall(_.isEmpty))
     // no pages on a fresh root: nothing to write, no tier to read
     assert(TierPipeline.buildAll(pages.limit(0), Config(freshRoot()), "run0").values.forall(_.isEmpty))
+  }
+
+  test("declared tier schema: Rollup's tier columns plus the partition columns, as stored") {
+    val cfg = Config(freshRoot(), hostBuckets = 4)
+    TierPipeline.buildAll(pages, cfg, runId = "run1")
+    def named(s: StructType): Seq[(String, String)] =
+      s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
+    val partCols = Seq("day" -> "string", "host_bucket" -> "int")
+    val declared = named(TierPipeline.tierSchema(spark, cfg))
+    val t1m = Rollup.tier1m(pages)
+    assert(declared === named(t1m.schema) ++ partCols)
+    assert(declared === named(Rollup.promote(t1m, 300L).schema) ++ partCols)
+    // what schema inference reads from each stored tier's footers and
+    // directories, with the DATE it infers for `day` taken as the string
+    Rollup.Tiers.foreach { t =>
+      val inferred = named(spark.read.parquet(TierPipeline.tierPath(cfg.root, t.name)).schema)
+        .map { case ("day", "date") => "day" -> "string"; case f => f }
+      assert(declared === inferred, s"tier ${t.name}")
+    }
+    // readTier: the data columns and `day` as the lineage's string
+    val read = TierPipeline.readTier(spark, cfg, "1h")
+    assert(named(read.schema) === named(t1m.schema) :+ ("day" -> "string"))
+    assert(read.select("day").distinct().collect().map(_.getString(0)).toSet ===
+      TierPipeline.lineage(spark, cfg.root).filter(col("tier") === "1h")
+        .select("day").distinct().collect().map(_.getString(0)).toSet)
   }
 
   test("lineage: empty before any build, but a listing failure throws") {
