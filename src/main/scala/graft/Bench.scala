@@ -30,7 +30,7 @@ import graft.sources.Pages
 object Bench {
 
   /** Full evaluation of every row and column; writes nothing. */
-  private def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {

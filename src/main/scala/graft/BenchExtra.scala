@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
 /** Round-6 optimization harness — separate from the FROZEN graft.Bench.
   *
   * Usage (all via env, same contract style as Bench):
@@ -18,8 +16,7 @@ import org.apache.spark.sql.DataFrame
   * queries; reports min and median warm seconds per query as one JSON line.
   */
 object BenchExtra {
-  private def materialize(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
+  import Bench.materialize
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

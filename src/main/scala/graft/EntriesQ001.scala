@@ -257,7 +257,7 @@ private[graft] object EntriesQ001 extends EntryPart {
       val df = ev(s, dir)
       val maxDay = df.agg(unix_timestamp(date_trunc("day", max(col("ts")))).as("mx"))
       df.select(col("user_id")).distinct()
-        .crossJoin(broadcast(maxDay))
+        .crossJoin(maxDay)
         .select(col("user_id"),
           explode(sequence(col("mx") + 86400L, col("mx") + 3 * 86400L, lit(86400L))).as("day_sec"))
         .orderBy("user_id", "day_sec")
@@ -663,7 +663,7 @@ private[graft] object EntriesQ001 extends EntryPart {
       val scaled = daily.withColumn("v", p(col("v")))
       val mx = daily.agg(unix_timestamp(date_trunc("day", max(col("day")))).as("mx"))
       val future = daily.select(col("user_id")).distinct()
-        .crossJoin(broadcast(mx))
+        .crossJoin(mx)
         .select(col("user_id"),
           explode(sequence(col("mx") + 86400L, col("mx") + 3 * 86400L, lit(86400L))).as("_ds"))
         .select(col("user_id"), timestamp_seconds(col("_ds")).as("day"))

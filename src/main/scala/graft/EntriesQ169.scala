@@ -152,7 +152,7 @@ private[graft] object EntriesQ169 extends EntryPart {
         .agg(count(lit(1)).as("n"))
       val fromTot = pairs.groupBy("f").agg(sum(col("n")).as("nf"))
       val tot = pairs.agg(sum(col("n")).as("nt"))
-      pairs.join(broadcast(fromTot), "f").join(broadcast(tot))
+      pairs.join(broadcast(fromTot), "f").join(tot)
         .agg(sum((col("n") / col("nt")) *
           (-log(col("n") / col("nf")))).as("entropy_rate"),
           count(lit(1)).as("n_cells"), max(col("nt")).as("n_transitions"))
@@ -341,7 +341,7 @@ private[graft] object EntriesQ169 extends EntryPart {
       val colT = cells.groupBy("lang").agg(sum(col("o")).as("nc"))
       val tot = cells.agg(sum(col("o")).as("n"))
       cells.join(broadcast(rowT), "source").join(broadcast(colT), "lang")
-        .join(broadcast(tot))
+        .join(tot)
         .withColumn("_e", col("nr").cast("double") * col("nc") / col("n"))
         .agg(r6(sum((col("o") - col("_e")) * (col("o") - col("_e")) /
           col("_e"))).as("chi2"),

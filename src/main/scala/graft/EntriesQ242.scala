@@ -865,7 +865,7 @@ private[graft] object EntriesQ242 extends EntryPart {
       val e = ev(s, dir).filter(col("value").isNotNull &&
         col("event_type").isNotNull)
       val st = e.agg(min(col("value")).as("_lo"), max(col("value")).as("_hi"))
-      val scored = e.crossJoin(broadcast(st))
+      val scored = e.crossJoin(st)
         .withColumn("p", when(col("_hi") === col("_lo"), lit(0.0))
           .otherwise((col("value") - col("_lo")) / (col("_hi") - col("_lo"))))
         .withColumn("y", when(col("event_type") === "purchase", lit(1.0))

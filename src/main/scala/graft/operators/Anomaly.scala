@@ -263,7 +263,7 @@ object Anomaly {
     val colTot = cells.groupBy("b").agg(sum(col("o")).as("col_tot"))
     val n = cells.agg(sum(col("o")).as("n_tot"))
     cells.join(rowTot, "a").join(colTot, "b")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("expected",
         (col("row_tot") * col("col_tot")).cast("double") / col("n_tot").cast("double"))
       .withColumn("residual",

@@ -43,7 +43,7 @@ object Assoc {
     pairs
       .join(broadcast(supp.select(col("_it").as("item_a"), col("_c").as("c_a"))), "item_a")
       .join(broadcast(supp.select(col("_it").as("item_b"), col("_c").as("c_b"))), "item_b")
-      .join(broadcast(nB))
+      .join(nB)
       .withColumn("support", col("c_ab") / col("n_baskets"))
       .withColumn("conf_ab", col("c_ab") / col("c_a"))
       .withColumn("conf_ba", col("c_ab") / col("c_b"))

@@ -100,7 +100,7 @@ object Attribution {
     val pBase = pConv.filter(col("variant") === "base")
       .agg(coalesce(sum(col("_pc")), lit(0.0)).as("_pb"))
     variants.join(pConv, Seq("variant"), "left")
-      .crossJoin(broadcast(pBase))
+      .crossJoin(pBase)
       .select(col("variant").as("removed_channel"),
         coalesce(col("_pc"), lit(0.0)).as("p_conv"),
         when(col("variant") === "base" || col("_pb") === 0.0,

@@ -40,7 +40,7 @@ object Calibration {
       .agg(count(lit(1)).as("_nb"), avg(y).as("_acc"), avg(p).as("_conf"))
     val tot = binned.agg(count(lit(1)).as("_n"),
       avg((p - y) * (p - y)).as("brier"), avg(y).as("base_rate"))
-    per.join(broadcast(tot))
+    per.join(tot)
       .groupBy()
       .agg(sum((col("_nb") / col("_n")) * abs(col("_acc") - col("_conf")))
         .as("ece"),
@@ -76,7 +76,7 @@ object Calibration {
       .agg(count(lit(1)).as("_nb"), avg(y).as("_acc"), avg(p).as("_conf"))
     val tot = binned.agg(count(lit(1)).as("_n"),
       avg((p - y) * (p - y)).as("brier"), avg(y).as("_ybar"))
-    per.join(broadcast(tot))
+    per.join(tot)
       .groupBy()
       .agg(max(col("_n")).as("n"), max(col("brier")).as("brier"),
         sum(col("_nb") * (col("_conf") - col("_acc")) *

@@ -38,9 +38,10 @@ object Encoding {
     spark.createDataFrame(rdd, schema)
   }
 
-  /** Attach `<c>_code` by joining the dictionary (broadcast when it is small
-    * enough — Spark's auto-broadcast threshold applies; pass
-    * `broadcast(dict)` for an explicit hint). Unseen values get null codes.
+  /** Attach `<c>_code` by joining the dictionary. Unseen values get null
+    * codes. Spark sizes a fitted dictionary by its input, not by its
+    * category count, so pass `broadcast(dict)` to keep the join a broadcast
+    * at any input scale.
     */
   def encodeOrdinal(df: DataFrame, c: String, dict: DataFrame): DataFrame =
     df.join(dict.withColumnRenamed("code", s"${c}_code"), Seq(c), "left")
@@ -61,7 +62,7 @@ object Encoding {
     val nn = df.filter(col(c).isNotNull)
     val total = nn.agg(count(lit(1)).as("_total"))
     nn.groupBy(col(c)).agg(count(lit(1)).as("_n"))
-      .join(broadcast(total))
+      .join(total)
       .withColumn(s"${c}_freq", col("_n") / col("_total"))
       .select(col(c), col(s"${c}_freq"))
   }

@@ -41,7 +41,7 @@ object Experiment {
       sum(x * y).as("_sxy"), sum(x * x).as("_sxx"), sum(y * y).as("_syy"))
     val per = df.groupBy(col(segCol))
       .agg(count(lit(1)).as("n"), sum(x).as("_gx"), sum(y).as("_gy"))
-    per.crossJoin(broadcast(pooled))
+    per.crossJoin(pooled)
       .withColumn("_theta",
         (col("_sxy") - col("_sx") * col("_sy") / col("_pn")) /
           (col("_sxx") - col("_sx") * col("_sx") / col("_pn")))
@@ -132,7 +132,7 @@ object Experiment {
     val base = df.withColumn("_p", rate)
     val mom = base.agg(count(lit(1)).as("_k"), sum(col("_p")).as("_sp"),
       sum(col("_p") * col("_p")).as("_spp"))
-    base.crossJoin(broadcast(mom))
+    base.crossJoin(mom)
       .withColumn("_m", col("_sp") / col("_k"))
       .withColumn("_v",
         col("_spp") / col("_k") - col("_m") * col("_m"))
@@ -352,7 +352,7 @@ object Experiment {
     val w2 = col("n2").cast("double") / col("_t2").cast("double")
     val r1 = when(col("n1") > 0, col("_s1") / col("n1")).otherwise(lit(0.0))
     val r2 = when(col("n2") > 0, col("_s2") / col("n2")).otherwise(lit(0.0))
-    per.crossJoin(broadcast(tot))
+    per.crossJoin(tot)
       .withColumn("w1", w1).withColumn("w2", w2)
       .withColumn("r1", r1).withColumn("r2", r2)
       .withColumn("rate_effect", col("w2") * (col("r2") - col("r1")))
@@ -482,7 +482,7 @@ object Experiment {
     val tot = pooled.agg(sum(col("_ns")).as("_nt"))
     val cell = base.groupBy(col(armCol), col(strataCol))
       .agg(count(lit(1)).as("_na"), sum(y).as("_sa"))
-    cell.join(broadcast(pooled), strataCol).crossJoin(broadcast(tot))
+    cell.join(broadcast(pooled), strataCol).crossJoin(tot)
       .withColumn("_w", col("_ns").cast("double") / col("_nt"))
       .groupBy(col(armCol))
       .agg(sum(col("_na")).as("n"),

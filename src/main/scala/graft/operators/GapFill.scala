@@ -26,7 +26,7 @@ object GapFill {
     val bounds = df.agg(min(unix_timestamp(col(tsCol))).as("mn"),
       max(unix_timestamp(col(tsCol))).as("mx"))
     val grid = df.select(hierarchy.map(col): _*).distinct()
-      .crossJoin(broadcast(bounds))
+      .crossJoin(bounds)
       // snap bounds onto the step grid so generated instants align with data
       .withColumn("mn", col("mn") - pmod(col("mn"), lit(stepSeconds)))
       .select((hierarchy.map(col) :+

@@ -99,7 +99,7 @@ object Governance {
     val tot = counts.agg(sum(col("cnt")).as("n_total"))
     expected.join(counts, Seq("digit"), "left")
       .na.fill(0L, Seq("cnt"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("share", col("cnt").cast("double") / col("n_total").cast("double"))
       .withColumn("chi2_term", {
         val exp = col("expected_share") * col("n_total").cast("double")

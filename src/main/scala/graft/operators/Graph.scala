@@ -568,7 +568,7 @@ object Graph {
       .unionByName(tagged.select(col("y").as("id"), col("_cy").as("community")))
       .groupBy(col("community")).agg(count(lit(1)).as("_dc"))
     degrees.join(within, Seq("community"), "left")
-      .crossJoin(broadcast(m))
+      .crossJoin(m)
       .withColumn("_term",
         coalesce(col("_ec"), lit(0L)).cast("double") / col("m") -
           (col("_dc").cast("double") / (lit(2.0) * col("m"))) *

@@ -93,7 +93,7 @@ object OpsMath {
     val recent = base.select(col(tsCol).as("_t"), v.as("_v"))
       .orderBy(col("_t").desc).limit(recentN)
       .agg(avg(col("_v")).as("run_rate"))
-    total.crossJoin(broadcast(recent))
+    total.crossJoin(recent)
       .withColumn("runway_buckets",
         when(col("run_rate") > 0 && col("level") < capacity,
           (lit(capacity) - col("level")) / col("run_rate")))

@@ -56,7 +56,7 @@ object PathTree {
         when(col("depth") === 1, lit(null).cast("string"))
           .otherwise(regexp_replace(col("prefix"), "/[^/]+$", "")))
       .join(parents, Seq("depth", "_parent_prefix"), "left")
-      .crossJoin(broadcast(rootW))
+      .crossJoin(rootW)
       .withColumn("parent_w",
         when(col("depth") === 1, col("_root_w")).otherwise(col("parent_w")))
       .withColumn("parent_share",

@@ -231,13 +231,13 @@ object Profile {
     val tot = cells.agg(sum(col("_c")).as("_n"))
     val nd = col("_n").cast("double")
     val mi = cells.join(broadcast(ma), "_a").join(broadcast(mb), "_b")
-      .join(broadcast(tot))
+      .join(tot)
       .agg(sum((col("_c") / nd) *
         log(col("_c") * nd / (col("_ca") * col("_cb")))).as("mi"),
         count(lit(1)).as("n_cells"))
-    val ha = ma.join(broadcast(tot))
+    val ha = ma.join(tot)
       .agg((-sum((col("_ca") / nd) * log(col("_ca") / nd))).as("h_a"))
-    val hb = mb.join(broadcast(tot))
+    val hb = mb.join(tot)
       .agg((-sum((col("_cb") / nd) * log(col("_cb") / nd))).as("h_b"))
     mi.crossJoin(ha).crossJoin(hb).crossJoin(tot)
       .withColumn("mi_norm", when(least(col("h_a"), col("h_b")) > 0,
@@ -268,7 +268,7 @@ object Profile {
     val n = df.agg(count(lit(1)).as("n_total"))
     overall.join(tail, Seq(segmentCol), "left")
       .na.fill(0L, Seq("tail_cnt"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("tail_share", col("tail_cnt").cast("double") / lit(tailK.toDouble))
       .withColumn("overall_share",
         col("total_cnt").cast("double") / col("n_total").cast("double"))
@@ -301,7 +301,7 @@ object Profile {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val tot = agg.agg(sum(col("w_sum")).as("w_total")) // one bounded scalar row
     agg.withColumn("cum_w", sum(col("w_sum")).over(w))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("cum_share", col("cum_w").cast("double") / col("w_total").cast("double"))
       .withColumn("abc_class",
         when(col("cum_share") <= aCut, lit("A"))
@@ -529,7 +529,7 @@ object Profile {
     val per = pivoted(keys)
     val global = pivoted(Seq.empty).select(
       (col("n").as("_gn") +: cats.indices.map(i => col(s"_c$i").as(s"_g$i"))): _*)
-    val joined = per.crossJoin(broadcast(global))
+    val joined = per.crossJoin(global)
     val terms = cats.indices.map { i =>
       val p = col(s"_c$i").cast("double") / col("n").cast("double")
       val q = col(s"_g$i").cast("double") / col("_gn").cast("double")

@@ -531,7 +531,7 @@ object Robust {
     val complete = base
       .withColumn("_ba", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col(blockCol))))
-      .crossJoin(broadcast(k))
+      .crossJoin(k)
       .filter(col("_ba") === col("k"))
     val wBlk = org.apache.spark.sql.expressions.Window
       .partitionBy(col(blockCol)).orderBy(v)

@@ -72,7 +72,7 @@ object Segment {
     }
     val total = base.agg(count(lit(1)).as("_n"))
     def score(rk: String) = expr(s"1L + ($rk * $buckets) div _n")
-    ranked.join(broadcast(total))
+    ranked.join(total)
       .select(col(custCol), col("recency_us"), col("frequency"), col("monetary"),
         score("_r_rank").as("r_score"), score("_f_rank").as("f_score"),
         score("_m_rank").as("m_score"))

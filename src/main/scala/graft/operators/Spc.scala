@@ -45,7 +45,7 @@ object Spc {
       .withColumn("ucl_x", col("xbar") + lit(2.66) * col("mrbar"))
       .withColumn("lcl_x", col("xbar") - lit(2.66) * col("mrbar"))
       .withColumn("_ucl_mr", lit(3.267) * col("mrbar"))
-    staged.crossJoin(broadcast(limits))
+    staged.crossJoin(limits)
       .agg(max(col("n")).as("n"), max(col("xbar")).as("xbar"),
         max(col("mrbar")).as("mrbar"), max(col("ucl_x")).as("ucl_x"),
         max(col("lcl_x")).as("lcl_x"),
@@ -92,7 +92,7 @@ object Spc {
     val other = base.select(col("_i").as("_j"), col("_x").as("_xj"))
     // z_t = (1-l)^t * xbar + sum_{j<=t} l*(1-l)^(t-j) * x_j
     val zRows = base.join(other, col("_j") <= col("_i"))
-      .crossJoin(broadcast(mom))
+      .crossJoin(mom)
       .groupBy(col("_i"))
       .agg(max(col("xbar")).as("_xb"), max(col("sigma")).as("_sg"),
         (max(pow(lit(1.0 - lambda), col("_i"))) * max(col("xbar")) +

@@ -985,7 +985,7 @@ object StatTests {
     val joined = ra.crossJoin(cb)
       .join(cells, Seq("_a", "_b"), "left")
       .withColumn("_oc", coalesce(col("_o"), lit(0L)))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
     val e = col("_na").cast("double") * col("_nb").cast("double") /
       col("_n").cast("double")
     val chi2 = joined
@@ -1582,7 +1582,7 @@ object StatTests {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val lfm = lf.groupBy().agg(max(when(col("i") === col("_m"), col("v")))
       .as("lf_m"))
-    val ks = counts.crossJoin(broadcast(lfm))
+    val ks = counts.crossJoin(lfm)
       .withColumn("k", explode(sequence(lit(0L), col("_kmax"))))
     val terms = ks
       .join(lf.select(col("i").as("k"), col("v").as("lf_k")), "k")
@@ -1660,7 +1660,7 @@ object StatTests {
     // both, so carry them in as literal-free aggregates
     val na = a.agg(count(lit(1)).as("n_a"))
     val nb = b.agg(count(lit(1)).as("n_b"))
-    val withN = ranked.crossJoin(broadcast(na)).crossJoin(broadcast(nb))
+    val withN = ranked.crossJoin(na).crossJoin(nb)
     val sd = sqrt(col("n_a").cast("double") * col("n_b").cast("double") *
       (col("n_a").cast("double") + col("n_b").cast("double") + 1) / lit(12.0))
     val withIdx = withN
@@ -2254,7 +2254,7 @@ object StatTests {
     val complete = base
       .withColumn("_ba", count(lit(1)).over(
         Window.partitionBy(col(blockCol))))
-      .crossJoin(broadcast(k))
+      .crossJoin(k)
       .filter(col("_ba") === col("_k"))
     val wBlk = Window.partitionBy(col(blockCol)).orderBy(v)
     val tieBlk = Window.partitionBy(col(blockCol), v)
@@ -2350,7 +2350,7 @@ object StatTests {
       .groupBy(col("_v")).agg(sum(col("_nuv")).as("_nv"))
       .agg(sum(col("_nv") * col("_nv")).as("_snv"))
     val nD = col("n_ratings").cast("double")
-    omm.crossJoin(broadcast(nv))
+    omm.crossJoin(nv)
       .withColumn("alpha",
         when(nD * nD - col("_snv") > 0,
           lit(1.0) - (nD - 1) * col("_so") / (nD * nD - col("_snv"))))
@@ -2420,7 +2420,7 @@ object StatTests {
     val agged = pairs.agg(max(col("_r")).as("r"),
       sum(when(col("_bm"), 1L).otherwise(0L)).as("b_pairs"),
       sum(when(col("_am"), 1L).otherwise(0L)).as("a_pairs"))
-    counts.crossJoin(broadcast(agged))
+    agged.crossJoin(counts)
       .withColumn("sampen",
         when(col("a_pairs") > 0 && col("b_pairs") > 0,
           -log(col("a_pairs").cast("double") / col("b_pairs").cast("double"))))
@@ -2434,8 +2434,8 @@ object StatTests {
     * (c = the subsequence's diff count ⌊(n−m)/k⌋), L(k) = mean_m L_m(k);
     * FD = −slope of the OLS fit of ln L(k) on ln k — 1 for a smooth
     * trend, →2 for space-filling noise (a self-similarity companion of
-    * q282's Hurst). The (k, m) grid is a LITERAL broadcast cross join
-    * (≤ kMax(kMax+1)/2 combos, no lateral ranges); integer inputs keep
+    * q282's Hurst). The (k, m) grid is a LITERAL cross join, broadcast by
+    * size (≤ kMax(kMax+1)/2 combos, no lateral ranges); integer inputs keep
     * every length sum exact. Output: one row (n, fd).
     */
   def higuchiFd(df: DataFrame, tsCol: String, valCol: String,
@@ -2450,7 +2450,7 @@ object StatTests {
       .withColumn("_i", row_number().over(Window.orderBy(col(tsCol))))
       .withColumn("_n", count(lit(1)).over(Window.partitionBy()))
       .select(col("_i"), col("_n"), v.as("_x"))
-    val sub = indexed.crossJoin(broadcast(grid))
+    val sub = indexed.crossJoin(grid)
       .filter(col("_i") >= col("_m") &&
         pmod(col("_i") - col("_m"), col("_k")) === 0)
     val wSub = Window.partitionBy(col("_k"), col("_m")).orderBy(col("_i"))
@@ -4329,13 +4329,13 @@ object StatTests {
         (col("_m2") - col("raw_mean") * col("raw_mean")) / col("_ng"))
     val glob = per.agg(count(lit(1)).cast("double").as("_k"),
       avg(col("raw_mean")).as("_gm"), avg(col("_se2")).as("_sbar"))
-    val s = per.crossJoin(broadcast(glob))
+    val s = per.crossJoin(glob)
       .withColumn("_dev",
         (col("raw_mean") - col("_gm")) * (col("raw_mean") - col("_gm")))
     val s2 = s.groupBy().agg(max(col("_k")).as("_k2"),
       max(col("_gm")).as("_gm2"), max(col("_sbar")).as("_sbar2"),
       sum(col("_dev")).as("_ss"))
-    per.crossJoin(broadcast(s2))
+    per.crossJoin(s2)
       .withColumn("_c", when(col("_k2") >= 4 && col("_ss") > 0,
         greatest(lit(0.0), lit(1.0) -
           (col("_k2") - 3) * col("_sbar2") / col("_ss"))))
@@ -4381,7 +4381,7 @@ object StatTests {
     val agged = withMargins.agg(count(lit(1)).as("cells_"),
       sum(col("_res") * col("_res")).as("ss_res"),
       sum(col("_res") * col("_a") * col("_b")).as("_num"))
-      .crossJoin(broadcast(rowSq)).crossJoin(broadcast(colSq))
+      .crossJoin(rowSq).crossJoin(colSq)
     val ssNon = when(col("_sa2") > 0 && col("_sb2") > 0,
       col("_num") * col("_num") / (col("_sa2") * col("_sb2")))
     val dfRes = (col("_nr") - 1) * (col("_nc") - 1) - 1
@@ -4432,7 +4432,7 @@ object StatTests {
         signum(col("_gain")) * floor(abs(col("_gain")) * 1e6 + 0.5) / 1e6)
     val best = scored.agg(
       max(struct(col("_q").as("q"), (-col("_t")).as("negt"))).as("_b"))
-    scored.crossJoin(broadcast(best))
+    scored.crossJoin(best)
       .withColumn("best",
         col("_q") === col("_b.q") && col("_t") === -col("_b.negt"))
       .select(col("_t").as("thr"), col("_nl").cast("bigint").as("n_left"),
@@ -4458,7 +4458,7 @@ object StatTests {
       .withColumn("sd_d", sqrt(col("_m2") - col("bias") * col("bias")))
       .withColumn("loa_low", col("bias") - lit(1.96) * col("sd_d"))
       .withColumn("loa_high", col("bias") + lit(1.96) * col("sd_d"))
-    base.crossJoin(broadcast(mom))
+    base.crossJoin(mom)
       .agg(max(col("n")).as("n"), max(col("bias")).as("bias"),
         max(col("sd_d")).as("sd_d"), max(col("loa_low")).as("loa_low"),
         max(col("loa_high")).as("loa_high"),
@@ -4496,7 +4496,7 @@ object StatTests {
         .withColumn(s"lo$tag", (center - half) / denom)
         .withColumn(s"hi$tag", (center + half) / denom)
     }
-    val joined = wilson(armA, "1").crossJoin(broadcast(wilson(armB, "2")))
+    val joined = wilson(armA, "1").crossJoin(wilson(armB, "2"))
     joined
       .withColumn("diff", col("p1") - col("p2"))
       .withColumn("d_lo", col("diff") - sqrt(
@@ -4632,7 +4632,7 @@ object StatTests {
         signum(col("j")) * floor(abs(col("j")) * 1e6 + 0.5) / 1e6)
     val best = scored.agg(
       max(struct(col("_q").as("q"), (-col("_t")).as("negt"))).as("_b"))
-    scored.crossJoin(broadcast(best))
+    scored.crossJoin(best)
       .withColumn("best",
         col("_q") === col("_b.q") && col("_t") === -col("_b.negt"))
       .select(col("_t").as("thr"), col("sens"), col("spec"), col("j"),

@@ -304,7 +304,7 @@ object TextAnalysis {
       .filter(col("df") >= minDf)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     tf.join(dfTab, Seq("term"))
-      .join(broadcast(n))
+      .join(n)
       .withColumn("tfidf",
         col("tf") * (log((lit(1) + col("n_docs")) / (lit(1) + col("df"))) + 1))
       .select(col("id"), col("term"), col("tf"), col("df"), col("tfidf"))
@@ -333,7 +333,7 @@ object TextAnalysis {
       .groupBy("id", "len", "term").agg(count(lit(1)).as("tf"))
     val dfTab = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(broadcast(dfTab), Seq("term"))
-      .join(broadcast(stats))
+      .join(stats)
       .withColumn("idf",
         log(lit(1) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
       .withColumn("contrib", col("idf") * col("tf") * (k1 + 1) /
@@ -424,7 +424,7 @@ object TextAnalysis {
     val bits = docs
       .select(col(idCol).as("id"), explode(words(col(textCol))).as("tok"))
       .join(vocab, Seq("tok"), "left")
-      .join(broadcast(totals))
+      .join(totals)
       .withColumn("_bits",
         -(log((coalesce(col("c"), lit(0L)) + lit(1.0)) / (col("N") + col("V")))
           / log(lit(2.0))))
@@ -521,7 +521,7 @@ object TextAnalysis {
     bi
       .join(uni.select(col("term").as("term_a"), col("n").as("n_a")), "term_a")
       .join(uni.select(col("term").as("term_b"), col("n").as("n_b")), "term_b")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("lift",
         (col("n_ab").cast("double") / col("b_total").cast("double")) /
           ((col("n_a").cast("double") / col("t_total").cast("double")) *
@@ -608,7 +608,7 @@ object TextAnalysis {
       sum(when(col("_a"), 0L).otherwise(1L)).as("y_b"))
     val totals = perWord.agg(sum(col("y_a")).as("n_a"), sum(col("y_b")).as("n_b"))
     perWord.filter(col("y_a") + col("y_b") >= minCount)
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .withColumn("odds_ratio",
         ((col("y_a") + 1L).cast("double") / (col("n_a") - col("y_a") + 1L).cast("double")) /
           ((col("y_b") + 1L).cast("double") / (col("n_b") - col("y_b") + 1L).cast("double")))
@@ -808,7 +808,7 @@ object TextAnalysis {
     rs.join(broadcast(nr), Seq("r"), "left")
       .join(broadcast(nr.select((col("r") - 1L).as("r"),
         col("n_r").as("n_r_next"))), Seq("r"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .withColumn("n_r", coalesce(col("n_r"), lit(0L)))
       .withColumn("n_r_next", coalesce(col("n_r_next"), lit(0L)))
       .withColumn("r_star", when(col("n_r") > 0 && col("n_r_next") > 0,
@@ -851,7 +851,7 @@ object TextAnalysis {
     val termB = when(col("y_b") > 0,
       col("y_b").cast("double") * log(col("y_b").cast("double") / eb))
       .otherwise(lit(0.0))
-    tf.crossJoin(broadcast(tot))
+    tf.crossJoin(tot)
       .withColumn("g2", lit(2.0) * (termA + termB))
       .withColumn("over",
         when(col("y_a").cast("double") * nb > col("y_b").cast("double") * na,

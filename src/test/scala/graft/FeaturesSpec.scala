@@ -281,6 +281,17 @@ class FeaturesSpec extends SparkSuite {
     assert(m.getAs[Long]("n") == 2)
   }
 
+  test("pinball and asymmetric squared loss: hand values on both sides of the actual") {
+    // pinball q=0.25: under-prediction (a ≥ p) costs q·(a−p), over-prediction
+    // (1−q)·(p−a). asymmetricSe w=3: over-prediction costs w·(p−a)², else (a−p)².
+    val d = Seq((10.0, 8.0), (10.0, 14.0), (10.0, 10.0), (10.0, 12.0), (10.0, 7.0))
+      .toDF("a", "p")
+    val got = d.select(Metrics.pinball(col("a"), col("p"), 0.25),
+        Metrics.asymmetricSe(col("a"), col("p"), 3.0))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1))).toSeq
+    assert(got == Seq((0.5, 4.0), (3.0, 48.0), (0.0, 0.0), (1.5, 12.0), (0.75, 9.0)))
+  }
+
   test("purged CV: hand roles on 10 buckets, K=5, purge=embargo=1; no train inside guards") {
     // blocks of 2: fold 2 = idx {4,5} = days/ids {5,6}; purged id 4, embargo id 7
     val daily = (1 to 10).map(i => (ts(f"2020-01-$i%02d"), i.toLong)).toDF("day", "id")

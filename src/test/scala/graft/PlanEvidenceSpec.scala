@@ -27,6 +27,25 @@ class PlanEvidenceSpec extends SparkSuite {
     df.queryExecution.executedPlan.toString
   }
 
+  /** Runs `body` with both broadcast thresholds at 1 KiB. At the default
+    * 10 MB every test table is broadcast by size, hinted or not; at 1 KiB
+    * the planner broadcasts unhinted only what it sizes as constant (a
+    * no-grouping count/sum aggregate, literal rows), so a pin on a hinted
+    * join fails when its hint goes. Adaptive execution can still broadcast a
+    * side once its shuffled stage turns out small; its local shuffle read
+    * then shows the shuffle the hint avoids.
+    */
+  private def withTinyBroadcast[A](body: => A): A = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "1024"))
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("bucketed co-located join runs with ZERO exchanges; unbucketed control shuffles") {
     val dir = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
@@ -317,7 +336,7 @@ class PlanEvidenceSpec extends SparkSuite {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
       .selectExpr("event_type", "cast(user_id as string) as item")
     val hh = HeavyHitters.frequentItems(ev, Seq("event_type"), "item", k = 16)
-    val plan = finalPlan(hh).split("== Initial Plan ==")(0)
+    val plan = withTinyBroadcast(finalPlan(hh)).split("== Initial Plan ==")(0)
     assert(plan.contains("BroadcastHashJoin"),
       s"pass 2 must broadcast the bounded candidate set:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
@@ -331,12 +350,16 @@ class PlanEvidenceSpec extends SparkSuite {
     val b = a.filter(col("event_id") % 13 =!= 0)
     val diff = Reconcile.merkleDiff(a, b, "event_id", Seq("user_id", "value"),
       buckets = 32)
-    val plan = finalPlan(diff).split("== Initial Plan ==")(0)
+    val plan = withTinyBroadcast(finalPlan(diff)).split("== Initial Plan ==")(0)
     // both row-level sides must be pruned by a broadcast LeftSemi on the
     // (≤ buckets)-row differing-bucket list — at 100 TB this is what keeps
     // the pk-level full-outer join from shuffling the full snapshots
     val semis = "BroadcastHashJoin.*LeftSemi".r.findAllIn(plan).size
     assert(semis >= 2, s"expected 2 broadcast semi-join gates, got $semis:\n$plan")
+    // a local shuffle read marks a join AQE turned into a broadcast only
+    // after shuffling both sides: the snapshots must not pay that shuffle
+    assert(!plan.contains("AQEShuffleRead local"),
+      s"the row-level sides must not be shuffled for the gate:\n$plan")
   }
 
   test("overlapJoin is a bucket EQUI-join — no cartesian/nested-loop anywhere") {
@@ -393,10 +416,29 @@ class PlanEvidenceSpec extends SparkSuite {
       .withColumn("x1", expr("unix_timestamp(d) div 86400"))
       .withColumn("x2",
         when(dayofweek(col("d")).isin(1, 7), lit(1L)).otherwise(lit(0L)))
-    val plan = finalPlan(
-      graft.operators.Interpret.linearShap2(daily, Seq("user_id"), "x1", "x2", "vc"))
+    val plan = withTinyBroadcast(finalPlan(
+      graft.operators.Interpret.linearShap2(daily, Seq("user_id"), "x1", "x2", "vc")))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       s"the one-row-per-key fit must broadcast, never shuffle the fact side:\n$plan")
+    // a local shuffle read marks a join AQE turned into a broadcast only
+    // after shuffling the fact side on the key
+    assert(!plan.split("== Initial Plan ==")(0).contains("AQEShuffleRead local"),
+      s"the fact side must not be shuffled for the fit join:\n$plan")
+  }
+
+  test("blomqvistBeta joins its one-row median sides by BROADCAST, never a cartesian product") {
+    val daily = spark.read.parquet(s"$sfDir/events.parquet")
+      .groupBy(col("user_id"), date_trunc("day", col("ts")).as("d"))
+      .agg(count(lit(1)).as("x"), sum(col("value")).as("y"))
+    val plan = withTinyBroadcast(finalPlan(
+      graft.operators.StatTests.blomqvistBeta(daily, "x", "y")))
+      .split("== Initial Plan ==")(0)
+    // each median is one row picked by a filter, which the planner sizes by
+    // its input: only the hint keeps the pair loop off a CartesianProduct
+    assert(!plan.contains("CartesianProduct"),
+      s"the median sides must not be joined by a cartesian product:\n$plan")
+    assert("BroadcastNestedLoopJoin".r.findAllIn(plan).size >= 2,
+      s"both median sides must arrive by broadcast:\n$plan")
   }
 
   test("lmScore with maxVocab broadcasts the vocab — the token stream never shuffles for it") {
