@@ -593,8 +593,11 @@ private[graft] object EntriesQ099 extends EntryPart {
           wAll.orderBy(col("_r").desc, col("id"))))
         .select(col("id"), col("rank"))
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val dnRank = emb.filter(col("vec_id") === 1)
-        .select(col("embedding").as("qv"))
+      // the query side is one row picked by a filter, which the planner
+      // sizes by the whole table: without the hint a large table pairs it
+      // with every row through a CartesianProduct
+      val dnRank = broadcast(emb.filter(col("vec_id") === 1)
+        .select(col("embedding").as("qv")))
         .crossJoin(emb.select(col("vec_id").as("id"), col("embedding").as("cv")))
         .filter(col("id") =!= 1)
         .withColumn("sim", graft.operators.Similarity.cosine(col("qv"), col("cv")))

@@ -596,7 +596,8 @@ private[graft] object EntriesQ169 extends EntryPart {
     // the routing contract.
     "q202_tier_route" -> ((s, dir) => {
       import graft.plans.TierRoute
-      val tierPath = s"${System.getProperty("java.io.tmpdir")}/graft_route_tier_${Integer.toHexString(dir.hashCode)}"
+      val route = s"events_1m_$dir"
+      val tierPath = routeTierDir(route)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
       raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
@@ -605,7 +606,7 @@ private[graft] object EntriesQ169 extends EntryPart {
         .write.mode("overwrite").parquet(tierPath)
       TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
-        name = s"events_1m_$dir", raw = raw, tierSeconds = 60L,
+        name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),
         groupCols = Seq("user_id"), tsCol = "ts",
         measure = TierRoute.AttrMeasure("value"), measureNonNull = true))
@@ -635,7 +636,8 @@ private[graft] object EntriesQ169 extends EntryPart {
     // rounded on both sides.
     "q203_route_pctl" -> ((s, dir) => {
       import graft.plans.TierRoute
-      val tierPath = s"${System.getProperty("java.io.tmpdir")}/graft_route_blk_${Integer.toHexString(dir.hashCode)}"
+      val route = s"events_1m_blocks_$dir"
+      val tierPath = routeTierDir(route)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
       raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
@@ -646,7 +648,7 @@ private[graft] object EntriesQ169 extends EntryPart {
         .write.mode("overwrite").parquet(tierPath)
       TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
-        name = s"events_1m_blocks_$dir", raw = raw, tierSeconds = 60L,
+        name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),
         groupCols = Seq("user_id"), tsCol = "ts",
         measure = TierRoute.AttrMeasure("value"), measureNonNull = true,
@@ -702,7 +704,8 @@ private[graft] object EntriesQ169 extends EntryPart {
     // exact set re-merge (size(array_distinct(flatten(collect_list(set))))).
     "q206_route_distinct" -> ((s, dir) => {
       import graft.plans.TierRoute
-      val tierPath = s"${System.getProperty("java.io.tmpdir")}/graft_route_set_${Integer.toHexString(dir.hashCode)}"
+      val route = s"events_1m_sets_$dir"
+      val tierPath = routeTierDir(route)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
       raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
@@ -712,7 +715,7 @@ private[graft] object EntriesQ169 extends EntryPart {
         .write.mode("overwrite").parquet(tierPath)
       TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
-        name = s"events_1m_sets_$dir", raw = raw, tierSeconds = 60L,
+        name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),
         groupCols = Seq("user_id"), tsCol = "ts",
         measure = TierRoute.AttrMeasure("value"), measureNonNull = true,

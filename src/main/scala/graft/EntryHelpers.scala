@@ -23,6 +23,23 @@ private[graft] object EntryHelpers {
   def li(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
 
+  /** A fresh directory for the tier behind TierRoute `route`, so two runs,
+    * in one JVM or in two over the same sf dir, never share its files. The
+    * directory of the route's previous run is deleted here: registering the
+    * route again replaces the only reader of it. The last one is deleted
+    * when the JVM exits, since the route stays live for later queries.
+    */
+  def routeTierDir(route: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_route_tier").toString
+    routeTierDirs.put(route, dir).foreach(deleteDir)
+    dir
+  }
+
+  private val routeTierDirs = scala.collection.concurrent.TrieMap.empty[String, String]
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  sys.addShutdownHook(routeTierDirs.values.foreach(deleteDir))
+
   /** Round to 6 dp, binary-faithfully (matches DuckDB's round-of-the-actual-
     * double). Spark's `round` goes through BigDecimal.valueOf(double) — the
     * SHORTEST decimal repr — so a value whose true binary form is

@@ -140,5 +140,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimization batch, so pruning/pushdown keep running on the rewritten
     // tier subtree; a no-op until a Route is registered
     ext.injectOptimizerRule(_ => graft.plans.TierRouteRule())
+    // a partial/final aggregate pair with no exchange between them runs as
+    // one Complete-mode aggregate (the tier cascade's reduce stage)
+    ext.injectQueryStagePrepRule(_ => graft.plans.LocalCompleteAggregate)
   }
 }

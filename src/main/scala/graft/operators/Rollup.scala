@@ -20,8 +20,12 @@ import graft.functions.codec.BlockAgg
   *     points on the hierarchy columns alone, and every later merge groups
   *     by (hierarchy, coarser bucket), a clustering that partitioning already
   *     satisfies — so `tier1m → promote × 3` plans as one exchange followed
-  *     by one stage of chained aggregates (PlanEvidenceSpec). The exchange
-  *     moves lean raw points; the aggregation runs after it.
+  *     by one stage of four chained aggregates, one per tier level
+  *     (PlanEvidenceSpec). The exchange moves lean raw points; the
+  *     aggregation runs after it. With no exchange between a level's
+  *     partial and final aggregate, [[graft.plans.LocalCompleteAggregate]]
+  *     runs the pair as one Complete-mode aggregate, so each level is one
+  *     hash-map pass over its input with no buffer serialized in between.
   *   - promotion NEVER re-reads raw pages: count/sum/min/max re-aggregate
   *     associatively, mean = sum/count, p50/p95 + the promoted point block are
   *     recomputed exactly from the decoded finer-tier blocks by the block
@@ -40,7 +44,9 @@ import graft.functions.codec.BlockAgg
   *     benchmark input (100k pages, the top host holds 10% of them) at
   *     local[4], AQE coalesced the stage to 3 tasks and the largest took
   *     34-41% of the stage's summed task time, near an even third, so the
-  *     three saved shuffles outweigh it there (CHANGES.md). Many-core boxes
+  *     three saved shuffles outweigh it there (CHANGES.md). Three tasks, not
+  *     four, come from AQE's 1 MiB minimum coalesced partition size; at
+  *     256 KiB the stage ran 5 tasks and was no faster. Many-core boxes
   *     were not measured: once the cores outnumber the work outside the hot
   *     host, its task bounds the stage. Partitioning on (hierarchy, minute)
   *     instead spreads a hot host but costs one shuffle per promotion.
@@ -60,9 +66,10 @@ object Rollup {
     * [[graft.functions.Utf8CharCountExpr]] — `length()`'s numChars loop was
     * ~65% of the tier-1 scan cost on the 64 GB bench corpus.
     */
-  def textLen(df: DataFrame): DataFrame =
-    df.withColumn("text_len",
-      graft.functions.Utf8CharCountExpr(col("text")).cast("double"))
+  def textLen(df: DataFrame): DataFrame = df.withColumn("text_len", textLenOf(col("text")))
+
+  private def textLenOf(text: Column): Column =
+    graft.functions.Utf8CharCountExpr(text).cast("double")
 
   /** Tier-1 (1-minute) continuous aggregate from raw pages.
     *
@@ -71,9 +78,11 @@ object Rollup {
     * @param groupCols hierarchy grouping (finest level, e.g. host..tld)
     */
   def tier1m(pages: DataFrame, groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
-    val df = textLen(pages)
-      .withColumn("ts_sec", unix_timestamp(col("warc_ts")))
-      .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
+    // one projection per step, not a withColumn each: every DataFrame call
+    // re-analyzes the whole plan built so far
+    val hier = groupCols.map(col)
+    val points = pages.select((hier ++ Seq(unix_timestamp(col("warc_ts")).as("ts_sec"),
+      textLenOf(col("text")).as("text_len"), col("lang"))): _*)
     // EXPLICIT repartition on the hierarchy BEFORE the aggregate, so the
     // shuffle moves lean raw points (~60 B/row) and the aggregation runs
     // once, post-shuffle. Letting Catalyst insert the exchange instead puts
@@ -85,10 +94,10 @@ object Rollup {
     // 1.23M groups). Hierarchy only, not (hierarchy, bucket): promotions
     // group by (hierarchy, coarser bucket), which this partitioning already
     // satisfies, so they add no shuffle (hot-host trade-off: see above).
-    val keys = groupCols.map(col) :+ col("bucket_start")
-    finish(df.select((keys :+ col("ts_sec") :+ col("text_len") :+ col("lang")): _*)
-      .repartition(groupCols.map(col): _*)
-      .groupBy(keys: _*)
+    val bucket = (col("ts_sec") - pmod(col("ts_sec"), lit(60L))).as("bucket_start")
+    finish(points.select((hier ++ Seq(bucket, col("ts_sec"), col("text_len"), col("lang"))): _*)
+      .repartition(hier: _*)
+      .groupBy((hier :+ col("bucket_start")): _*)
       .agg(rawPartial.head, rawPartial.tail: _*))
   }
 
@@ -114,14 +123,17 @@ object Rollup {
     array_distinct(flatten(collect_list(col("lang_set")))).as("lang_set"),
     BlockAgg.blocks(col("block")).as("m"))
 
-  /** Derived tier columns over either aggregate above. */
-  private def finish(agg: DataFrame): DataFrame = agg
-    .withColumn("mean_len", col("sum_len") / col("cnt"))
-    .withColumn("lang_card", size(col("lang_set")).cast("long"))
-    .withColumn("p50_len", col("m.p50"))
-    .withColumn("p95_len", col("m.p95"))
-    .withColumn("block", col("m.block"))
-    .drop("m")
+  /** Derived tier columns over either aggregate above, in one projection:
+    * the aggregate's columns but `m`, then mean, lang count, p50, p95 and
+    * the block.
+    */
+  private def finish(agg: DataFrame): DataFrame =
+    agg.select((agg.columns.filter(_ != "m").map(col).toSeq ++ Seq(
+      (col("sum_len") / col("cnt")).as("mean_len"),
+      size(col("lang_set")).cast("long").as("lang_card"),
+      col("m.p50").as("p50_len"),
+      col("m.p95").as("p95_len"),
+      col("m.block").as("block"))): _*)
 
   /** The columns a tier row needs to be merged again: group keys, bucket,
     * the associative measures, the lang set and the point block.

@@ -96,7 +96,10 @@ class CodecSpec extends AnyFunSuite {
   * k-way merge of the decoded blocks. Null points and blocks are skipped.
   * Every check runs twice: on the ObjectHashAggregate path, and with the
   * sort-based fallback forced (threshold 1), which serializes every partial
-  * buffer and merges the deserialized copies.
+  * buffer and merges the deserialized copies. Those inputs are shuffled
+  * between partial and final; one more check groups an input already
+  * clustered on the key, where both run as one Complete-mode aggregate, with
+  * the fallback forced.
   */
 class BlockAggregatorSpec extends SparkSuite {
   import org.apache.spark.sql.DataFrame
@@ -215,6 +218,36 @@ class BlockAggregatorSpec extends SparkSuite {
       .select(col("m.block"), col("m.p50"), col("m.p95")).head()
     assertSame(MergedStats(none.getAs[Array[Byte]](0), none.getDouble(1), none.getDouble(2)),
       empty, "global")
+  }
+
+  test("Complete-mode aggregate over a clustered input == reference (sort-based fallback)") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Complete
+    val pts = (1 to 500).map(i => (i % 7L, 1704067200L + (i * 37) % 1000, (i % 13) * 1.5, s"l${i % 5}"))
+    val want = pts.groupBy(_._1).map { case (g, ps) =>
+      val ts = ps.map(_._2).toArray; val vs = ps.map(_._3).toArray
+      PointSort.sortPairs(ts, vs, ts.length)
+      g -> (MergedStats.ofSorted(ts, vs), ps.map(_._4).distinct.sorted)
+    }
+    withFallback(true) {
+      // clustered on g, so no exchange goes between partial and final: they
+      // run as one Complete-mode aggregate (LocalCompleteAggregate)
+      val df = pts.toDF("g", "ts", "v", "lang").repartition(col("g")).groupBy("g")
+        .agg(BlockAgg.points(col("ts"), col("v")).as("m"), collect_set(col("lang")).as("langs"))
+        // a forced fallback reorders the set, so it is compared sorted
+        .select(col("g"), col("m.block"), col("m.p50"), col("m.p95"), array_sort(col("langs")))
+      val got = df.collect().map(r => r.getLong(0) ->
+        (MergedStats(r.getAs[Array[Byte]](1), r.getDouble(2), r.getDouble(3)), r.getSeq[String](4))).toMap
+      val aggs = Plans.collect(df.queryExecution.executedPlan) { case a: ObjectHashAggregateExec => a }
+      assert(aggs.nonEmpty && aggs.forall(_.aggregateExpressions.forall(_.mode == Complete)),
+        s"expected only Complete-mode aggregates:\n${df.queryExecution.executedPlan}")
+      assert(aggs.map(_.metrics("numTasksFallBacked").value).sum > 0, "the sort-based fallback did not run")
+      assert(got.keySet === want.keySet)
+      got.foreach { case (g, (m, langs)) =>
+        assertSame(m, want(g)._1, g)
+        assert(langs === want(g)._2, s"group $g: lang set")
+      }
+    }
   }
 
   for ((suffix, fallback) <- Seq("" -> false, " (sort-based fallback)" -> true)) {

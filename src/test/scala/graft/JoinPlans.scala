@@ -37,9 +37,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * From the repository root:
   *   sbt "Test/runMain graft.JoinPlans <sfDir> <out> <thresholdBytes>"
   * e.g. `... testdata/sf0.01 /tmp/joins_1k.txt 1024`. SPARK_GRAFT_CPUS
-  * sets the local core count and shuffle partitions (default 4). Run one
-  * dump at a time per machine: the routed-tier queries write fixed paths
-  * under the temp directory, so a second JVM overwrites their files.
+  * sets the local core count and shuffle partitions (default 4).
   */
 object JoinPlans extends AdaptiveSparkPlanHelper {
 

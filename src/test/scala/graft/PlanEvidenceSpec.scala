@@ -4,8 +4,12 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Complete, Final, Partial}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerShim
 import graft.sources.Pages
@@ -295,6 +299,19 @@ class PlanEvidenceSpec extends SparkSuite {
       s"tier-1 rollup should shuffle exactly once (got $exchanges):\n$plan")
   }
 
+  /** The final plan's `ObjectHashAggregateExec`s, by the mode of their
+    * functions, read through cached relations (a frame another suite cached
+    * stands in for part of the plan).
+    */
+  private def objectAggModes(df: DataFrame): Seq[Set[AggregateMode]] = {
+    def modes(plan: SparkPlan): Seq[Set[AggregateMode]] = Plans.collect(plan) {
+      case a: ObjectHashAggregateExec => Seq(a.aggregateExpressions.map(_.mode).toSet)
+      case m: InMemoryTableScanExec => modes(m.relation.cachedPlan)
+    }.flatten
+    df.collect()
+    modes(df.queryExecution.executedPlan)
+  }
+
   test("tier1m -> 5m -> 1h -> 1d cascade is a single-shuffle plan") {
     val pages = Hier.withHierarchy(Pages.synthesize(spark, 5000L, seed = 7L))
     val t1d = Seq(300L, 3600L, 86400L).foldLeft(Rollup.tier1m(pages))(Rollup.promote(_, _))
@@ -302,6 +319,25 @@ class PlanEvidenceSpec extends SparkSuite {
     val exchanges = "(?<!Broadcast)Exchange".r.findAllIn(plan).size
     assert(exchanges == 1,
       s"the tier cascade should shuffle exactly once (got $exchanges):\n$plan")
+    // no exchange between a level's partial and final: each level runs as
+    // ONE Complete-mode aggregate (LocalCompleteAggregate)
+    assert(objectAggModes(t1d) === Seq.fill(4)(Set(Complete)),
+      s"expected 4 Complete-mode aggregates, one per tier level:\n$plan")
+  }
+
+  test("an aggregate over an unpartitioned scan keeps its map-side Partial before the exchange") {
+    val agg = spark.read.parquet(s"$sfDir/events.parquet")
+      .groupBy(col("user_id")).agg(collect_set(col("event_type")).as("types"))
+    val modes = objectAggModes(agg)
+    assert(modes === Seq(Set(Final), Set(Partial)),
+      s"expected a Final over an exchange over a Partial:\n${agg.queryExecution.executedPlan}")
+    val belowExchange = Plans.collect(agg.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.child
+    }
+    assert(belowExchange.exists {
+      case a: ObjectHashAggregateExec => a.aggregateExpressions.forall(_.mode == Partial)
+      case _ => false
+    }, s"the Partial must feed the exchange:\n${agg.queryExecution.executedPlan}")
   }
 
   test("zipfSlope cuts top-K with a distributed TakeOrdered, never a vocab-wide window") {
