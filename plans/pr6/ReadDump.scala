@@ -70,7 +70,6 @@ object ReadDump extends AdaptiveSparkPlanHelper {
       Rollup.Tiers.map(t => t.name -> TierPipeline.readTier(spark, cfg, t.name)).toMap,
       day2 + 2 * 3600L + 11 * 60, day2 + 86400L + 5 * 3600L))
 
-    TierRoute.install(spark)
     TierPipeline.routes(spark, cfg, raw).foreach(TierRoute.register)
     val uw = unix_timestamp(col("warc_ts"))
     dump("daily_panel", raw

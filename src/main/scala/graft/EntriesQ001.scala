@@ -712,16 +712,7 @@ private[graft] object EntriesQ001 extends EntryPart {
     // the oracle computes quantile_cont directly from raw at 1h grain, so a
     // green row proves block encode/merge/percentile exactness end-to-end
     "q62_block_pctl_promote" -> ((s, dir) => {
-      val t1m = ev(s, dir)
-        .withColumn("ts_sec", unix_timestamp(col("ts")))
-        .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
-        .groupBy(col("user_id"), col("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
-          min(col("value")).as("min_len"), max(col("value")).as("max_len"),
-          collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
-        .withColumn("block", col("m.block")).drop("m")
-      Rollup.promote(t1m, 3600L, groupCols = Seq("user_id"))
+      Rollup.promote(userTier1m(ev(s, dir)), 3600L, groupCols = Seq("user_id"))
         .select(col("user_id"), col("bucket_start"), col("cnt"),
           r6(col("sum_len")).as("sum_value"), r6(col("min_len")).as("min_value"),
           r6(col("max_len")).as("max_value"),
@@ -733,23 +724,14 @@ private[graft] object EntriesQ001 extends EntryPart {
     // block-merged percentiles at EVERY level) vs a DuckDB GROUPING SETS
     // twin — closes the round-2 gap where this ran only inside entry()
     "q63_hier_rollup" -> ((s, dir) => {
-      val t1h = ev(s, dir)
-        .withColumn("ts_sec", unix_timestamp(col("ts")))
-        .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(3600L)))
-        .withColumn("user_id_s", col("user_id").cast("string"))
-        .groupBy(col("event_type"), col("user_id_s"), col("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
-          min(col("value")).as("min_len"), max(col("value")).as("max_len"),
-          collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
-        .withColumn("mean_len", col("sum_len") / col("cnt"))
-        .withColumn("lang_card", size(col("lang_set")).cast("long"))
-        .withColumn("p50_len", col("m.p50")).withColumn("p95_len", col("m.p95"))
-        .withColumn("block", col("m.block")).drop("m")
+      val levels = Seq("event_type", "user_id_s")
+      val t1h = Rollup.promote(Rollup.tier1mOfPoints(ev(s, dir).select(col("event_type"),
+          col("user_id").cast("string").as("user_id_s"), unix_timestamp(col("ts")).as("ts_sec"),
+          col("value").as("text_len"), col("event_type").as("lang")), levels), 3600L, levels)
       // mean derived from the ROUNDED sum on both engines: the raw sums
       // differ by summation order below 1e-6 (they round equal), but the
       // raw quotient can straddle a rounding boundary (seen at sf0.1)
-      Rollup.rollupHierarchy(t1h, Seq("event_type", "user_id_s"))
+      Rollup.rollupHierarchy(t1h, levels)
         .select(col("event_type"), col("user_id_s"), col("grouping_level"),
           col("bucket_start"), col("cnt"), r6(col("sum_len")).as("sum_value"),
           r6(r6(col("sum_len")) / col("cnt")).as("mean_value"),
@@ -770,14 +752,10 @@ private[graft] object EntriesQ001 extends EntryPart {
         .orderBy("lang", "id_a", "id_b")
     }),
 
-    // the SQL surface end-to-end: a pure spark.sql query through the
-    // FunctionRegistry-registered native expression (GraftExtensions —
-    // utf8_char_count == length for valid UTF-8), oracled by DuckDB length()
+    // the SQL surface end-to-end: a pure spark.sql query through the native
+    // expression that GraftExtensions registers at session build
+    // (utf8_char_count == length for valid UTF-8), oracled by DuckDB length()
     "q65_sql_surface" -> ((s, dir) => {
-      // the driver's Verify session is NOT built by GraftSession.builder, so
-      // register on the live session (idempotent) — also exactly what a user
-      // attaching to a foreign session does
-      GraftFunctions.register(s)
       docs(s, dir).createOrReplaceTempView("docs_q65")
       s.sql("""SELECT lang, count(*) AS n_docs,
               |  sum(utf8_char_count(text)) AS sum_chars,

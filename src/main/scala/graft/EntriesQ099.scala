@@ -136,15 +136,7 @@ private[graft] object EntriesQ099 extends EntryPart {
     // EXACT via k-way Gorilla-block merge across tiers; the oracle computes
     // straight from raw points over the same window
     "q110_range_read" -> ((s, dir) => {
-      val t1m = ev(s, dir)
-        .withColumn("ts_sec", unix_timestamp(col("ts")))
-        .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
-        .groupBy(col("user_id"), col("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
-          min(col("value")).as("min_len"), max(col("value")).as("max_len"),
-          collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
-        .withColumn("block", col("m.block")).drop("m")
+      val t1m = userTier1m(ev(s, dir))
       val t1h = Rollup.promote(t1m, 3600L, groupCols = Seq("user_id"))
       val t1d = Rollup.promote(t1h, 86400L, groupCols = Seq("user_id"))
       // [2024-01-03 05:23, 2024-01-27 19:41): misaligned on both ends so the
@@ -311,15 +303,7 @@ private[graft] object EntriesQ099 extends EntryPart {
     // step), DENSE grid with explicit empty buckets, p50/p95 exact from
     // merged blocks; the oracle re-aggregates raw points per step bucket
     "q121_range_series" -> ((s, dir) => {
-      val t1m = ev(s, dir)
-        .withColumn("ts_sec", unix_timestamp(col("ts")))
-        .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
-        .groupBy(col("user_id"), col("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
-          min(col("value")).as("min_len"), max(col("value")).as("max_len"),
-          collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
-        .withColumn("block", col("m.block")).drop("m")
+      val t1m = userTier1m(ev(s, dir))
       val t5m = Rollup.promote(t1m, 300L, groupCols = Seq("user_id"))
       Rollup.readSeries(Map("1m" -> t1m, "5m" -> t5m),
           1704412800L, 1705789800L, stepSeconds = 5400L,

@@ -604,7 +604,6 @@ private[graft] object EntriesQ169 extends EntryPart {
         .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
           min("value").as("min_value"), max("value").as("max_value"))
         .write.mode("overwrite").parquet(tierPath)
-      TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
         name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),
@@ -646,7 +645,6 @@ private[graft] object EntriesQ169 extends EntryPart {
           graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
         .withColumn("block", col("m.block")).drop("m")
         .write.mode("overwrite").parquet(tierPath)
-      TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
         name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),
@@ -713,7 +711,6 @@ private[graft] object EntriesQ169 extends EntryPart {
           min("value").as("min_value"), max("value").as("max_value"),
           collect_set(col("event_type")).as("type_set"))
         .write.mode("overwrite").parquet(tierPath)
-      TierRoute.install(s)
       TierRoute.register(TierRoute.Route(
         name = route, raw = raw, tierSeconds = 60L,
         tier = () => s.read.parquet(tierPath),

@@ -560,21 +560,9 @@ private[graft] object EntriesQ242 extends EntryPart {
     // proving upsert(tier(base), late) == tier(base ∪ late) through the
     // Gorilla block path)
     "q284_late_upsert" -> ((s, dir) => {
-      def t1m(d: DataFrame): DataFrame = d
-        .withColumn("ts_sec", unix_timestamp(col("ts").cast("timestamp")))
-        .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
-        .groupBy(col("user_id"), col("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
-          min(col("value")).as("min_len"), max(col("value")).as("max_len"),
-          collect_set(col("event_type")).as("lang_set"),
-          graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
-        .withColumn("mean_len", col("sum_len") / col("cnt"))
-        .withColumn("lang_card", size(col("lang_set")).cast("long"))
-        .withColumn("p50_len", col("m.p50")).withColumn("p95_len", col("m.p95"))
-        .withColumn("block", col("m.block")).drop("m")
       val all = ev(s, dir)
-      val tier = t1m(all.filter(pmod(col("event_id"), lit(5L)) =!= 0L))
-      val late = t1m(all.filter(pmod(col("event_id"), lit(5L)) === 0L))
+      val tier = userTier1m(all.filter(pmod(col("event_id"), lit(5L)) =!= 0L))
+      val late = userTier1m(all.filter(pmod(col("event_id"), lit(5L)) === 0L))
       Rollup.upsertPoints(tier, late, groupCols = Seq("user_id"))
         .select(col("user_id"), col("bucket_start"), col("cnt"),
           r6(col("sum_len")).as("sum_value"), r6(col("min_len")).as("min_value"),

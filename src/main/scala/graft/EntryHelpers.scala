@@ -23,6 +23,15 @@ private[graft] object EntryHelpers {
   def li(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/lineitem.parquet")
 
+  /** The per-user 1m tier of an events frame: `Rollup`'s tier-1 aggregate
+    * with `value` as the measure and `event_type` as the distinct-counted
+    * attribute (its `lang_set`).
+    */
+  def userTier1m(events: DataFrame): DataFrame =
+    graft.operators.Rollup.tier1mOfPoints(events.select(col("user_id"),
+      unix_timestamp(col("ts")).as("ts_sec"), col("value").as("text_len"),
+      col("event_type").as("lang")), Seq("user_id"))
+
   /** A fresh directory for the tier behind TierRoute `route`, so two runs,
     * in one JVM or in two over the same sf dir, never share its files. The
     * directory of the route's previous run is deleted here: registering the

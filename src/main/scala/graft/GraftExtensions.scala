@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
@@ -17,13 +17,12 @@ import graft.operators.Similarity
   * utf8_char_count(text) ...")` works with no Scala imports, and the
   * functions show up in `SHOW FUNCTIONS` / `DESCRIBE FUNCTION`.
   *
-  * Two registration paths, same function list:
-  *   - [[GraftExtensions]] for session build time — `GraftSession.builder`
-  *     wires it in, and external apps can use
-  *     `--conf spark.sql.extensions=graft.GraftExtensions` (the standard
-  *     extension-injection mechanism, zero-arg constructor required).
-  *   - [[GraftFunctions.register]] for an already-running session (e.g. a
-  *     spark-shell the user attaches to mid-flight). Idempotent.
+  * One registration path: [[GraftExtensions]], at session build time.
+  * `GraftSession.builder` wires it in, and external apps use
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (the standard
+  * extension-injection mechanism, zero-arg constructor required). The same
+  * extension injects the engine's planner rules, so a session has all of
+  * the engine or none of it.
   *
   * Only expressions whose non-column parameters are scalars are exposed —
   * `k`/`n`/`bits` arrive as integer LITERALS in the SQL text and are bound
@@ -124,12 +123,6 @@ object GraftFunctions {
         JaroWinklerExpr(args.head, args(1))
       })
   )
-
-  /** Register on a live session (idempotent — re-registration overwrites). */
-  def register(spark: SparkSession): Unit =
-    all.foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
 }
 
 /** `spark.sql.extensions`-compatible injector (zero-arg constructor). */

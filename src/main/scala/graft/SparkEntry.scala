@@ -28,7 +28,7 @@ object SparkEntry {
     val pages = Hier.withHierarchy(Pages.synthesize(spark, 20000L, seed = 42L))
     val t1m = Rollup.tier1m(pages)
     val t1h = Rollup.promote(t1m, 3600L)
-    Rollup.rollupHierarchy(t1h, Seq("tld", "registered_domain", "host"))
+    Rollup.rollupHierarchy(t1h, Hier.Levels)
       .drop("block", "lang_set")
   }
 

@@ -73,7 +73,7 @@ object StreamSoak {
     val ingestSec = (System.nanoTime() - t0) / 1e9
 
     // ---- parity audit: every landed bucket must equal its batch twin ----
-    val assoc = Seq("tld", "registered_domain", "host", "bucket_start",
+    val assoc = Hier.Levels ++ Seq("bucket_start",
       "cnt", "sum_len", "min_len", "max_len", "mean_len")
     val landed = StreamingIngest.readStreamTier(spark, cfg).select(assoc.map(col): _*)
     val batch = graft.operators.Rollup.tier1m(

@@ -16,6 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Hier {
 
+  /** The page hierarchy, coarse to fine: the grouping columns of every tier. */
+  val Levels: Seq[String] = Seq("tld", "registered_domain", "host")
+
   /** Full host from url: strips the scheme and everything from the first '/'. */
   def host(url: Column): Column = parse_url(url, lit("HOST"))
 

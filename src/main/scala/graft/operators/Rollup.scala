@@ -71,18 +71,27 @@ object Rollup {
   private def textLenOf(text: Column): Column =
     graft.functions.Utf8CharCountExpr(text).cast("double")
 
-  /** Tier-1 (1-minute) continuous aggregate from raw pages.
+  /** Tier-1 (1-minute) continuous aggregate from raw pages: the page
+    * projection to points, then [[tier1mOfPoints]].
     *
     * @param pages     page table with hierarchy columns already attached
     *                  ([[graft.functions.Hier.withHierarchy]])
     * @param groupCols hierarchy grouping (finest level, e.g. host..tld)
     */
-  def tier1m(pages: DataFrame, groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
+  def tier1m(pages: DataFrame, groupCols: Seq[String] = Hier.Levels): DataFrame =
     // one projection per step, not a withColumn each: every DataFrame call
     // re-analyzes the whole plan built so far
+    tier1mOfPoints(pages.select((groupCols.map(col) ++ Seq(
+      unix_timestamp(col("warc_ts")).as("ts_sec"), textLenOf(col("text")).as("text_len"),
+      col("lang"))): _*), groupCols)
+
+  /** Tier-1 (1-minute) continuous aggregate of points of any domain: rows of
+    * (`groupCols`, `ts_sec` epoch seconds, `text_len` the measure, `lang`
+    * the distinct-counted attribute), one tier row per (group, minute) with
+    * every tier column of [[tier1m]].
+    */
+  def tier1mOfPoints(points: DataFrame, groupCols: Seq[String]): DataFrame = {
     val hier = groupCols.map(col)
-    val points = pages.select((hier ++ Seq(unix_timestamp(col("warc_ts")).as("ts_sec"),
-      textLenOf(col("text")).as("text_len"), col("lang"))): _*)
     // EXPLICIT repartition on the hierarchy BEFORE the aggregate, so the
     // shuffle moves lean raw points (~60 B/row) and the aggregation runs
     // once, post-shuffle. Letting Catalyst insert the exchange instead puts
@@ -198,8 +207,7 @@ object Rollup {
     * property-tested). Not used by [[graft.plans.TierPipeline]]: at minute
     * grain the merge still sends a hot group's every block to one task.
     */
-  def tier1mSalted(pages: DataFrame, s: Int = 16,
-                   groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame =
+  def tier1mSalted(pages: DataFrame, s: Int = 16, groupCols: Seq[String] = Hier.Levels): DataFrame =
     mergePartials(tier1m(pages.withColumn("_salt", Hier.salt(col("url"), s)), groupCols :+ "_salt"),
       groupCols)
 
@@ -218,7 +226,7 @@ object Rollup {
     * decoded finer blocks. Input bucket widths must divide `tierSeconds`.
     */
   def promote(finer: DataFrame, tierSeconds: Long,
-              groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame =
+              groupCols: Seq[String] = Hier.Levels): DataFrame =
     mergePartials(finer, groupCols,
       bucketExpr = (col("bucket_start") - pmod(col("bucket_start"), lit(tierSeconds))))
 
@@ -226,7 +234,7 @@ object Rollup {
     * promoted from the previous one. Returns tierName → DataFrame.
     */
   def allTiers(pages: DataFrame,
-               groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): Map[String, DataFrame] = {
+               groupCols: Seq[String] = Hier.Levels): Map[String, DataFrame] = {
     val t1 = tier1m(pages, groupCols)
     val ordered = Tiers.tail.scanLeft("1m" -> t1) { case ((_, prev), t) =>
       t.name -> promote(prev, t.seconds, groupCols)
@@ -236,7 +244,7 @@ object Rollup {
 
   /** Hierarchy rollup of a tier table across levels host → domain → tld →
     * global, GROUPING-SETS-style. Exact percentiles at every level via block
-    * merge. `levels` is ordered coarse→fine, e.g. Seq("tld","registered_domain","host").
+    * merge. `levels` is ordered coarse→fine, e.g. [[graft.functions.Hier.Levels]].
     */
   def rollupHierarchy(tier: DataFrame, levels: Seq[String]): DataFrame = {
     // grouping sets: (), (l1), (l1,l2), ... (all) — the reference's on-demand
@@ -326,7 +334,7 @@ object Rollup {
     *         measures, exact `p50_len`/`p95_len`, and the merged block
     */
   def readRange(tiers: Map[String, DataFrame], startSec: Long, endSec: Long,
-                groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
+                groupCols: Seq[String] = Hier.Levels): DataFrame = {
     val segs = coverage(startSec, endSec, Tiers.filter(t => tiers.contains(t.name)))
     // ONE plan subtree per tier, its (disjoint) segment ranges OR-combined:
     // a tier usually covers two edge segments, and referencing the tier
@@ -361,7 +369,7 @@ object Rollup {
     */
   def readSeries(tiers: Map[String, DataFrame], startSec: Long, endSec: Long,
                  stepSeconds: Long,
-                 groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
+                 groupCols: Seq[String] = Hier.Levels): DataFrame = {
     require(stepSeconds >= 1, s"stepSeconds must be >= 1, got $stepSeconds")
     require(startSec % stepSeconds == 0 && endSec % stepSeconds == 0,
       s"range endpoints must align to the $stepSeconds s step")
@@ -398,10 +406,10 @@ object Rollup {
     * @param tier        existing tier table (tier1m/promote output schema)
     * @param latePartial the late points pre-aggregated to the SAME tier
     *                    grain and partial schema (run them through
-    *                    [[tier1m]] / the q62-shaped aggregate first)
+    *                    [[tier1m]] / [[tier1mOfPoints]] first)
     */
   def upsertPoints(tier: DataFrame, latePartial: DataFrame,
-                   groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
+                   groupCols: Seq[String] = Hier.Levels): DataFrame = {
     val keys = groupCols :+ "bucket_start"
     val affected = latePartial.select(keys.map(col): _*).distinct()
     val touched = tier.join(affected, keys, "left_semi").select(partialCols(groupCols): _*)

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
+import graft.functions.Hier
 import graft.operators.Rollup
 
 /** Checkpoint-resumable retention-tier pipeline with per-partition lineage +
@@ -57,10 +58,11 @@ import graft.operators.Rollup
   */
 object TierPipeline {
 
-  case class Config(
-      root: String,
-      groupCols: Seq[String] = Seq("tld", "registered_domain", "host"),
-      hostBuckets: Int = 8)
+  /** A store at `root`, grouped by the page hierarchy
+    * ([[graft.functions.Hier.Levels]]), each tier's rows spread over
+    * `hostBuckets` host directories per day.
+    */
+  case class Config(root: String, hostBuckets: Int = 8)
 
   /** A (day, host_bucket) partition of a tier; `day` is yyyy-MM-dd. */
   type Part = (String, Int)
@@ -129,17 +131,17 @@ object TierPipeline {
       .withColumn("host_bucket", hostBucket(col("host"), hostBuckets))
 
   /** The stored layout of a cascade tier: [[Rollup.tierSchema]] over the
-    * (string) hierarchy columns, then the partition columns `day`
+    * page hierarchy, then the partition columns `day`
     * (yyyy-MM-dd string) and `host_bucket`.
     */
-  private[graft] def tierSchema(spark: SparkSession, cfg: Config): StructType =
-    Rollup.tierSchema(spark, cfg.groupCols).add("day", StringType).add("host_bucket", IntegerType)
+  private[graft] def tierSchema(spark: SparkSession): StructType =
+    Rollup.tierSchema(spark, Hier.Levels).add("day", StringType).add("host_bucket", IntegerType)
 
   /** A stored cascade tier with its partition columns, read with the
     * declared [[tierSchema]]: no Spark job to plan it.
     */
   private[graft] def readStored(spark: SparkSession, cfg: Config, tier: String): DataFrame =
-    spark.read.schema(tierSchema(spark, cfg)).parquet(tierPath(cfg.root, tier))
+    spark.read.schema(tierSchema(spark)).parquet(tierPath(cfg.root, tier))
 
   /** The partition key of a stored tier read through [[readStored]] or
     * [[readParts]].
@@ -388,7 +390,7 @@ object TierPipeline {
     // fully-complete resume must not pay a full-width scan (text bytes
     // dominate the source) to learn nothing is pending
     val todo1m = partsOf(raw, pagePart(cfg))
-    val w1m = writeParts(spark, Rollup.tier1m(raw, cfg.groupCols), "1m", todo1m, cfg, runId)
+    val w1m = writeParts(spark, Rollup.tier1m(raw), "1m", todo1m, cfg, runId)
     Rollup.Tiers.sliding(2).foldLeft((Map("1m" -> w1m.map(_.part)), snap ++ w1m)) {
       case ((written, lin), Seq(finer, t)) =>
         // promotion preserves (day, host_bucket): the pending partitions are
@@ -398,7 +400,7 @@ object TierPipeline {
         val todo = parts(lin, finer.name) -- parts(lin, t.name)
         def input = readStored(spark, cfg, finer.name)
           .filter(partIn(storedPart, todo)).drop("day", "host_bucket")
-        val w = writeParts(spark, Rollup.promote(input, t.seconds, cfg.groupCols), t.name, todo,
+        val w = writeParts(spark, Rollup.promote(input, t.seconds), t.name, todo,
           cfg, runId)
         (written + (t.name -> w.map(_.part)), lin ++ w)
     }._1
@@ -410,9 +412,9 @@ object TierPipeline {
     * measures, exact percentiles via the Gorilla block column, and
     * `count(DISTINCT lang)` via the per-bucket lang sets. The tier frames
     * carry their `day` partition column, so a time-bounded query reads only
-    * the day directories its range covers. After
+    * the day directories its range covers. In a session with the engine's
+    * extension ([[graft.GraftSession]]), after
     * {{{
-    *   TierRoute.install(spark)
     *   TierPipeline.routes(spark, cfg, raw).foreach(TierRoute.register)
     * }}}
     * raw-phrased aggregates are served by the coarsest eligible stored tier
@@ -425,9 +427,9 @@ object TierPipeline {
         name = s"${cfg.root}:${t.name}",
         raw = raw, tierSeconds = t.seconds,
         tier = () => readTier(spark, cfg, t.name),
-        groupCols = cfg.groupCols, tsCol = "warc_ts",
+        groupCols = Hier.Levels, tsCol = "warc_ts",
         measure = TierRoute.CharLenMeasure("text"), measureNonNull = true,
-        cntCol = "cnt", sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
+        sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
         blockCol = Some("block"), distinctCol = Some(("lang", "lang_set")))
     }
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
-import org.apache.spark.sql.catalyst.optimizer.ConstantFolding
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -54,14 +53,14 @@ import graft.operators.Rollup
   *   - measures: a plain column, or `length(text)` /
   *     `utf8_char_count(text)` (optionally cast to double) for page routes.
   *
-  * Install on any live session via [[TierRoute.install]]
-  * (`spark.experimental.extraOptimizations` — runs after the main batches;
-  * the rewrite emits an explicit Project+Filter over the tier relation, so
-  * `FileSourceStrategy`'s `PhysicalOperation` still prunes columns and
-  * pushes the bucket/dim predicates into the tier's parquet scan), or get
-  * it automatically from `GraftSession` / `--conf
-  * spark.sql.extensions=graft.GraftExtensions`
-  * (`injectOptimizerRule` — runs inside the operator-optimization batch).
+  * The rule comes from [[graft.GraftExtensions]] (`GraftSession`, or
+  * `--conf spark.sql.extensions=graft.GraftExtensions`), which injects it
+  * into the operator-optimization batch. The batch's later rules then run
+  * over the rewritten tier subtree: constant folding turns the day cut into
+  * literals, column pruning cuts the tier scan to the partial columns the
+  * aggregate reads, and the bucket/dim predicates are pushed into the
+  * tier's parquet scan. Registering a [[TierRoute.Route]] is all a session
+  * needs to route.
   */
 object TierRoute {
 
@@ -89,7 +88,9 @@ object TierRoute {
     }
   }
 
-  /** One raw-table → tier-table routing declaration.
+  /** One raw-table → tier-table routing declaration. The tier's bucket
+    * column is `bucket_start` (epoch seconds, long) and its row-count
+    * partial is `cnt`, as in every tier the engine writes.
     *
     * @param raw            the raw DataFrame (its parquet root path is the
     *                       match key)
@@ -121,8 +122,6 @@ object TierRoute {
       tsCol: String,
       measure: MeasureSpec,
       measureNonNull: Boolean = false,
-      bucketStartCol: String = "bucket_start",
-      cntCol: String = "cnt",
       sumCol: String = "sum_value",
       minCol: String = "min_value",
       maxCol: String = "max_value",
@@ -149,15 +148,6 @@ object TierRoute {
   def unregister(name: String): Unit = routes.remove(name)
   def clear(): Unit = routes.clear()
   private[plans] def registered: Seq[Route] = routes.values.toSeq
-
-  /** Idempotently attach the rule to a live session (for sessions not
-    * built with `GraftExtensions`).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[TierRouteRule]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TierRouteRule()
-  }
 }
 
 case class TierRouteRule() extends Rule[LogicalPlan] {
@@ -341,8 +331,8 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     val tierPlan = tierScan(route, preds)
     def tierAttr(name: String): Option[AttributeReference] =
       tierPlan.output.collectFirst { case a: AttributeReference if a.name == name => a }
-    val bucketAttr = tierAttr(route.bucketStartCol).getOrElse(return None)
-    val cntAttr = tierAttr(route.cntCol).getOrElse(return None)
+    val bucketAttr = tierAttr("bucket_start").getOrElse(return None)
+    val cntAttr = tierAttr("cnt").getOrElse(return None)
     val sumAttr = tierAttr(route.sumCol).getOrElse(return None)
     val minAttr = tierAttr(route.minCol).getOrElse(return None)
     val maxAttr = tierAttr(route.maxCol).getOrElse(return None)
@@ -465,28 +455,21 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
       }
     }.reduceOption(And.apply)
 
-    val filtered = newCond.map(Filter(_, tierPlan)).getOrElse(tierPlan)
-    // explicit attribute-only Project so FileSourceStrategy prunes the tier
-    // scan to the referenced partial columns even though the main pruning
-    // batches have already run
-    val needed = AttributeSet(newAggExprs.flatMap(_.references) ++
-      newGroupExprs.flatMap(_.references) ++ newCond.toSeq.flatMap(_.references))
-    val pruned = Project(tierPlan.output.filter(needed.contains), filtered)
     logInfo(s"tier-route: rewrote aggregate over ${route.rawPaths.mkString(",")} " +
       s"onto tier '${route.name}' (${route.tierSeconds}s)")
-    Some(Aggregate(newGroupExprs, newAggExprs, pruned))
+    Some(Aggregate(newGroupExprs, newAggExprs,
+      newCond.map(Filter(_, tierPlan)).getOrElse(tierPlan)))
   }
 
   /** The analyzed plan of a fresh tier frame, cut to the days the query's
     * time bounds cover when the frame carries the store's `day` column
     * (`Rollup.dayPruned`; over a partition column the cut prunes
-    * directories). Folded to literals because this rule may run after the
-    * optimizer's own folding.
+    * directories).
     */
   private def tierScan(route: Route, preds: Seq[TimePred]): LogicalPlan = {
     val lo = preds.collect { case TimeGe(s) => s }.maxOption
     val hi = preds.collect { case TimeLt(s) => s }.minOption
-    ConstantFolding(Rollup.dayPruned(route.tier(), Seq((lo, hi))).queryExecution.analyzed)
+    Rollup.dayPruned(route.tier(), Seq((lo, hi))).queryExecution.analyzed
   }
 
   private def traverseOpt[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.plans.TierPipeline
 import graft.plans.TierPipeline.{parts, partIn, snapshot, storedPart}
+import graft.functions.Hier
 
 /** Durable landing of the streaming 1-minute tier into the
   * [[graft.plans.TierPipeline]] store — the ingestion half of a
@@ -132,7 +133,7 @@ object StreamingIngest {
     * double-counts.
     */
   def readHot(spark: SparkSession, cfg: TierPipeline.Config,
-              groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame = {
+              groupCols: Seq[String] = Hier.Levels): DataFrame = {
     val serveCols = (groupCols ++ Seq("bucket_start", "cnt", "sum_len",
       "min_len", "max_len", "mean_len")).map(col)
     def empty: DataFrame = spark.createDataFrame(

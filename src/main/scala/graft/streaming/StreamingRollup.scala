@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Hier
 
 /** Structured Streaming variant of the tier-1 continuous aggregate.
   *
@@ -28,7 +29,7 @@ object StreamingRollup {
     *                  this delay the bucket is final and appendable downstream
     */
   def tier1mStream(pages: DataFrame, watermark: String = "5 minutes",
-                   groupCols: Seq[String] = Seq("tld", "registered_domain", "host")): DataFrame =
+                   groupCols: Seq[String] = Hier.Levels): DataFrame =
     pages
       .withColumn("text_len", length(col("text")).cast("double"))
       .withWatermark("warc_ts", watermark)

@@ -171,7 +171,6 @@ class PlanEvidenceSpec extends SparkSuite {
 
   private def withStoreRoutes[A](raw: DataFrame, cfg: TierPipeline.Config)(body: => A): A = {
     TierRoute.clear()
-    TierRoute.install(spark)
     TierPipeline.routes(spark, cfg, raw).foreach(TierRoute.register)
     try body finally TierRoute.clear()
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.Pages
 import graft.functions.Hier
@@ -232,5 +233,45 @@ class RollupSpec extends SparkSuite {
       abs(col("sum_len") - col("d_sum")) > 1e-9 ||
       abs(col("p95_len") - col("d_p95")) > 1e-9).count() == 0)
     series.unpersist(); pages.unpersist()
+  }
+
+  /** The per-user 1m aggregate the events entries (q62, q110, q121, q284)
+    * each wrote out by hand before [[Rollup.tier1mOfPoints]]; kept here as
+    * the reference that tier-1 over non-page points is held to.
+    */
+  private def entryTier1m(events: DataFrame): DataFrame = events
+    .withColumn("ts_sec", unix_timestamp(col("ts")))
+    .withColumn("bucket_start", col("ts_sec") - pmod(col("ts_sec"), lit(60L)))
+    .groupBy(col("user_id"), col("bucket_start"))
+    .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_len"),
+      min(col("value")).as("min_len"), max(col("value")).as("max_len"),
+      collect_set(col("event_type")).as("lang_set"),
+      graft.functions.codec.BlockAgg.points(col("ts_sec"), col("value")).as("m"))
+    .withColumn("mean_len", col("sum_len") / col("cnt"))
+    .withColumn("lang_card", size(col("lang_set")).cast("long"))
+    .withColumn("p50_len", col("m.p50")).withColumn("p95_len", col("m.p95"))
+    .withColumn("block", col("m.block")).drop("m")
+
+  test("tier1mOfPoints over events equals the hand-written per-user aggregate") {
+    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    def rows(t: DataFrame): DataFrame = t.select(col("user_id"), col("bucket_start"),
+      col("cnt"), col("sum_len"), col("min_len"), col("max_len"), col("mean_len"),
+      col("lang_card"), col("p50_len"), col("p95_len"), sha2(col("block"), 256).as("block_sha"),
+      array_sort(col("lang_set")).as("langs"))
+    val ref = rows(entryTier1m(events)).cache()
+    val j = rows(EntryHelpers.userTier1m(events)).alias("a")
+      .join(ref.alias("b"), Seq("user_id", "bucket_start"), "full_outer")
+    assert(ref.count() > 0)
+    assert(j.filter(col("a.cnt").isNull || col("b.cnt").isNull).count() == 0)
+    // the sums follow the shuffle's row order, so they match to 1e-9 as
+    // elsewhere in this suite; everything else matches exactly
+    assert(j.filter(col("a.cnt") =!= col("b.cnt") ||
+      abs(col("a.sum_len") - col("b.sum_len")) > 1e-9 ||
+      abs(col("a.mean_len") - col("b.mean_len")) > 1e-9 ||
+      col("a.min_len") =!= col("b.min_len") || col("a.max_len") =!= col("b.max_len") ||
+      col("a.lang_card") =!= col("b.lang_card") ||
+      col("a.p50_len") =!= col("b.p50_len") || col("a.p95_len") =!= col("b.p95_len") ||
+      col("a.block_sha") =!= col("b.block_sha") || col("a.langs") =!= col("b.langs")).count() == 0)
+    ref.unpersist()
   }
 }

@@ -86,7 +86,7 @@ class TierPipelineSpec extends SparkSuite {
     def named(s: StructType): Seq[(String, String)] =
       s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
     val partCols = Seq("day" -> "string", "host_bucket" -> "int")
-    val declared = named(TierPipeline.tierSchema(spark, cfg))
+    val declared = named(TierPipeline.tierSchema(spark))
     val t1m = Rollup.tier1m(pages)
     assert(declared === named(t1m.schema) ++ partCols)
     assert(declared === named(Rollup.promote(t1m, 300L).schema) ++ partCols)

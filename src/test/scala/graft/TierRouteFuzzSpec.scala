@@ -52,7 +52,6 @@ class TierRouteFuzzSpec extends SparkSuite {
     val rnd = new scala.util.Random(20260820L)
     val base = 1704067200L // 2024-01-01T00:00:00Z, 60s-aligned
     TierRoute.clear()
-    TierRoute.install(spark)
     val route = mkRoute
     // touch the lazy tier build once before the loop
     assert(new java.io.File(tierPath).exists())
@@ -194,7 +193,6 @@ class TierRouteFuzzSpec extends SparkSuite {
   test("fuzz: block-percentile + distinct-set route arms (400 shapes)") {
     val rnd = new scala.util.Random(4042026L)
     TierRoute.clear()
-    TierRoute.install(spark)
     // tier that carries the Gorilla block AND the per-bucket value set, so
     // percentile(0.5/0.95) and count(DISTINCT event_type) become eligible
     val dir = Files.createTempDirectory("graft_route_fuzz_blk").toString

@@ -57,7 +57,6 @@ class TierRouteSpec extends SparkSuite {
 
   private def withRoutes(rs: Route*)(body: => Unit): Unit = {
     TierRoute.clear() // q202/q203 (run by EntrySpec) leave their routes registered
-    TierRoute.install(spark)
     rs.foreach(TierRoute.register)
     try body finally TierRoute.clear()
   }
@@ -217,7 +216,7 @@ class TierRouteSpec extends SparkSuite {
       tier = () => spark.read.parquet(tierDir),
       groupCols = Seq("tld", "registered_domain", "host"), tsCol = "warc_ts",
       measure = TierRoute.CharLenMeasure("text"), measureNonNull = true,
-      cntCol = "cnt", sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
+      sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
       blockCol = Some("block"))
     val uw = unix_timestamp(col("warc_ts"))
     def q(src: DataFrame): DataFrame = src
