@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Pages
 import graft.functions.Hier
+import graft.plans.TierRoute
 import graft.operators.{Conformal, CrossVal, Dedup, Encoding, Ewma, Features, GapFill, Hist, Intervals, Metrics, Multimodal, Profile, Rollup, Sax, Scalers, Similarity, TextAnalysis}
 import graft.EntryHelpers._
 
@@ -586,29 +587,19 @@ private[graft] object EntriesQ169 extends EntryPart {
         .orderBy("id")
     }),
 
-    // transparent continuous-aggregate routing (plans.TierRoute): a 1m tier
-    // is materialized once, a Route registered, and the HOURLY aggregate
-    // below is phrased AGAINST THE RAW events table — the optimizer rule
-    // rewrites it onto the tier (count->sum(cnt), sum->sum(sum),
-    // avg->sum/sum, min/max of partials) and the require() proves the
-    // rewrite actually fired (the optimized plan must scan the tier
-    // parquet, not events). The oracle aggregates raw directly — parity IS
-    // the routing contract.
+    // transparent continuous-aggregate routing (plans.TierRoute): the
+    // per-user 1m tier of the events is materialized and routed
+    // (routeEvents, the one events route q202, q203 and q206 share), and
+    // the HOURLY aggregate below is phrased AGAINST THE RAW events table —
+    // the optimizer rule rewrites it onto the tier (count->sum(cnt),
+    // sum->sum(sum_len), avg->sum/sum, min/max of partials) and the
+    // require() proves the rewrite actually fired (the optimized plan must
+    // scan the tier parquet, not events). The oracle aggregates raw
+    // directly — parity IS the routing contract.
     "q202_tier_route" -> ((s, dir) => {
-      import graft.plans.TierRoute
-      val route = s"events_1m_$dir"
-      val tierPath = routeTierDir(route)
+      val tierPath = routeEvents(s, dir)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
-      raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-          min("value").as("min_value"), max("value").as("max_value"))
-        .write.mode("overwrite").parquet(tierPath)
-      TierRoute.register(TierRoute.Route(
-        name = route, raw = raw, tierSeconds = 60L,
-        tier = () => s.read.parquet(tierPath),
-        groupCols = Seq("user_id"), tsCol = "ts",
-        measure = TierRoute.AttrMeasure("value"), measureNonNull = true))
       val cut = 1704240000L // 2024-01-03T00:00:00Z, hour-aligned
       val routed = raw
         .filter(u >= lit(cut))
@@ -626,31 +617,17 @@ private[graft] object EntriesQ169 extends EntryPart {
       routed
     }),
 
-    // percentile routing: the tier additionally carries Gorilla point
-    // blocks (BlockAgg point mode), and the raw-phrased HOURLY
+    // percentile routing: the events route's tier (routeEvents) carries
+    // Gorilla point blocks, and the raw-phrased HOURLY
     // percentile(value, .5/.95) is rewritten onto the block merge
     // (BlockAgg block mode -> struct fields) — the
     // optimizer meeting the engine's signature exact-percentile promotion.
     // Oracle: quantile_cont on raw at the same grain; parity is exact, 6-dp
     // rounded on both sides.
     "q203_route_pctl" -> ((s, dir) => {
-      import graft.plans.TierRoute
-      val route = s"events_1m_blocks_$dir"
-      val tierPath = routeTierDir(route)
+      val tierPath = routeEvents(s, dir)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
-      raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-          min("value").as("min_value"), max("value").as("max_value"),
-          graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
-        .withColumn("block", col("m.block")).drop("m")
-        .write.mode("overwrite").parquet(tierPath)
-      TierRoute.register(TierRoute.Route(
-        name = route, raw = raw, tierSeconds = 60L,
-        tier = () => s.read.parquet(tierPath),
-        groupCols = Seq("user_id"), tsCol = "ts",
-        measure = TierRoute.AttrMeasure("value"), measureNonNull = true,
-        blockCol = Some("block")))
       val routed = raw
         .groupBy(col("user_id"), (u - pmod(u, lit(3600L))).as("bucket_start"))
         .agg(percentile(col("value"), lit(0.5)).as("p50_v"),
@@ -696,27 +673,15 @@ private[graft] object EntriesQ169 extends EntryPart {
         .orderBy("id")
     }),
 
-    // distinct-count routing: the tier carries per-bucket value SETS
-    // (collect_set — the lang_set pattern at page scale), and the
-    // raw-phrased hourly count(DISTINCT event_type) is rewritten onto the
-    // exact set re-merge (size(array_distinct(flatten(collect_list(set))))).
+    // distinct-count routing: the events route's tier (routeEvents)
+    // carries per-bucket event_type SETS in its lang_set (collect_set, as
+    // at page scale), and the raw-phrased hourly count(DISTINCT event_type)
+    // is rewritten onto the exact set re-merge
+    // (size(array_distinct(flatten(collect_list(set))))).
     "q206_route_distinct" -> ((s, dir) => {
-      import graft.plans.TierRoute
-      val route = s"events_1m_sets_$dir"
-      val tierPath = routeTierDir(route)
+      val tierPath = routeEvents(s, dir)
       val raw = ev(s, dir)
       val u = unix_timestamp(col("ts"))
-      raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-        .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-          min("value").as("min_value"), max("value").as("max_value"),
-          collect_set(col("event_type")).as("type_set"))
-        .write.mode("overwrite").parquet(tierPath)
-      TierRoute.register(TierRoute.Route(
-        name = route, raw = raw, tierSeconds = 60L,
-        tier = () => s.read.parquet(tierPath),
-        groupCols = Seq("user_id"), tsCol = "ts",
-        measure = TierRoute.AttrMeasure("value"), measureNonNull = true,
-        distinctCol = Some(("event_type", "type_set"))))
       val routed = raw
         .groupBy(col("user_id"), (u - pmod(u, lit(3600L))).as("bucket_start"))
         .agg(countDistinct(col("event_type")).as("n_types"),

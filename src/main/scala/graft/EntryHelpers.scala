@@ -32,13 +32,35 @@ private[graft] object EntryHelpers {
       unix_timestamp(col("ts")).as("ts_sec"), col("value").as("text_len"),
       col("event_type").as("lang")), Seq("user_id"))
 
+  /** Registers the one TierRoute over `dir`'s events table and returns its
+    * tier path: [[userTier1m]] of the events, written to a fresh
+    * [[routeTierDir]]. `value` is the measure (never null in the events
+    * table), the tier's blocks serve exact p50/p95 and its `lang_set`
+    * serves `count(DISTINCT event_type)`. Calling it again rebuilds the
+    * tier and replaces the route.
+    */
+  def routeEvents(s: SparkSession, dir: String): String = {
+    import graft.plans.TierRoute
+    val route = s"events_1m_$dir"
+    val tierPath = routeTierDir(route)
+    val raw = ev(s, dir)
+    userTier1m(raw).write.mode("overwrite").parquet(tierPath)
+    TierRoute.register(TierRoute.Route(
+      name = route, raw = raw, tierSeconds = 60L,
+      tier = () => s.read.parquet(tierPath),
+      groupCols = Seq("user_id"), tsCol = "ts",
+      measure = TierRoute.AttrMeasure("value"), measureNonNull = true,
+      distinctCol = Some("event_type")))
+    tierPath
+  }
+
   /** A fresh directory for the tier behind TierRoute `route`, so two runs,
     * in one JVM or in two over the same sf dir, never share its files. The
     * directory of the route's previous run is deleted here: registering the
     * route again replaces the only reader of it. The last one is deleted
     * when the JVM exits, since the route stays live for later queries.
     */
-  def routeTierDir(route: String): String = {
+  private def routeTierDir(route: String): String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_route_tier").toString
     routeTierDirs.put(route, dir).foreach(deleteDir)
     dir
@@ -48,6 +70,16 @@ private[graft] object EntryHelpers {
   private def deleteDir(dir: String): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   sys.addShutdownHook(routeTierDirs.values.foreach(deleteDir))
+
+  /** Oracle-SQL sum of `terms`, folded left to right as `((a + b) + c)`:
+    * the fixed order the engine's literal chains add in.
+    */
+  private def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
+
+  /** A double as a 17-significant-digit SQL literal, so both engines read
+    * the same JVM double.
+    */
+  private def lit17(x: Double): String = "%.17g".format(x)
 
   /** Round to 6 dp, binary-faithfully (matches DuckDB's round-of-the-actual-
     * double). Spark's `round` goes through BigDecimal.valueOf(double) — the
@@ -87,9 +119,7 @@ private[graft] object EntryHelpers {
     * identical values.
     */
   def harmonicFitSql(period: Int): String = {
-    def lit17(x: Double): String = "%.17g".format(x)
     val idx = 0 until period
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val pivDefs = idx.map(b =>
       s"coalesce(sum(CASE WHEN b = $b THEN m END), 0.0) AS m$b")
       .mkString(",\n    ")
@@ -125,7 +155,6 @@ private[graft] object EntryHelpers {
     */
   def weightedKappaSql(k: Int): String = {
     val idx = 0 until k
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val cells = (for { i <- idx; j <- idx } yield
       s"sum(CASE WHEN ta = ${i + 1} AND tb = ${j + 1} THEN 1 ELSE 0 END) AS o_${i}_$j")
       .mkString(",\n    ")
@@ -156,7 +185,6 @@ private[graft] object EntryHelpers {
     * parity contract and the identical fixed-order estimator fold.
     */
   def amsF2Sql(rows: Int): String = {
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val counters = (0 until rows).map { r =>
       s"sum(cnt * ((('0x' || substr(md5('$r:' || term), 1, 15))::BIGINT % 2) * 2 - 1)) AS c$r"
     }.mkString(",\n    ")
@@ -180,7 +208,6 @@ private[graft] object EntryHelpers {
   def bartlettSql(arms: Seq[String]): String = {
     val idx = arms.indices
     val k = arms.size
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val pivDefs = (Seq("count(*) AS n") ++ idx.flatMap { i =>
       Seq(
         s"sum(CASE WHEN event_type = '${arms(i)}' THEN 1 ELSE 0 END) AS n$i",
@@ -212,7 +239,6 @@ private[graft] object EntryHelpers {
     * round, damping constants emitted with the exact JVM doubles.
     */
   def textRankSql(topN: Int, iterations: Int, damping: Double): String = {
-    def lit17(x: Double): String = "%.17g".format(x)
     val sb = new StringBuilder
     sb.append(
       s"""WITH w AS (SELECT list_filter(regexp_split_to_array(trim(lower(text)),
@@ -255,7 +281,6 @@ private[graft] object EntryHelpers {
     */
   def moodMedianSql(arms: Seq[String]): String = {
     val idx = arms.indices
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val aDefs = idx.flatMap { i =>
       Seq(
         s"sum(CASE WHEN arm = '${arms(i)}' AND v > (SELECT median FROM med) THEN 1 ELSE 0 END) AS a$i",
@@ -292,7 +317,6 @@ private[graft] object EntryHelpers {
     */
   def markovEntropySql(states: Seq[String]): String = {
     val idx = states.indices
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val pivDefs = (for { i <- idx; j <- idx } yield
       s"sum(CASE WHEN f = '${states(i)}' AND t = '${states(j)}' THEN 1 ELSE 0 END) AS n_${i}_$j")
       .mkString(",\n    ")
@@ -326,7 +350,6 @@ private[graft] object EntryHelpers {
   def tukeyHsdSql(arms: Seq[String]): String = {
     val idx = arms.indices
     val k = arms.size
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val pivDefs = (Seq("count(*) AS n") ++ idx.flatMap { i =>
       Seq(
         s"sum(CASE WHEN event_type = '${arms(i)}' THEN 1 ELSE 0 END) AS n$i",
@@ -361,7 +384,6 @@ private[graft] object EntryHelpers {
   def btSql(types: Seq[String], iterations: Int): String = {
     val k = types.size
     val idx = types.indices
-    def chain(terms: Seq[String]): String = terms.reduce((a, b) => s"($a + $b)")
     val wDefs = (for { i <- idx; j <- idx if i != j } yield
       s"coalesce(max(CASE WHEN i = '${types(i)}' AND j = '${types(j)}' THEN w END), 0.0) AS w_${i}_$j")
       .mkString(",\n    ")
@@ -415,7 +437,6 @@ private[graft] object EntryHelpers {
     val ms = Seq(1, 2, 4)
     val bucketSec = 86400L
     val lnM = ms.map(m => math.log(m.toDouble))
-    def lit17(x: Double): String = "%.17g".format(x)
     val blocks = ms.zipWithIndex.map { case (m, i) =>
       s"""b$i AS (SELECT event_type, idx // $m AS b, sum(v) AS s, count(*) AS c
          |  FROM h GROUP BY 1, 2),
@@ -543,7 +564,6 @@ private[graft] object EntryHelpers {
   def dtwRefSql(ref: Seq[Double], band: Int): String = {
     val m = ref.size
     val w = math.max(band, 0) // n == m, so |n−m| never widens the band
-    def lit17(x: Double): String = "%.17g".format(x)
     def inBand(i: Int, j: Int): Boolean = math.abs(i - j) <= w
     val cells = for {
       i <- 1 to m

@@ -24,6 +24,22 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
+  /** The undirected simple projection of `edges(src, dst)`: self loops
+    * dropped, each edge once as (x, y) with x < y.
+    */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("x"),
+        greatest(col("src"), col("dst")).as("y"))
+      .distinct()
+
+  /** Both orientations (v, n) of undirected edges (x, y): each vertex `v`
+    * with one row per neighbor `n`.
+    */
+  private def adjacency(und: DataFrame): DataFrame =
+    und.select(col("x").as("v"), col("y").as("n"))
+      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+
   /** PageRank over `edges(src, dst)` (long ids, duplicates = parallel
     * edges that contribute twice). Returns (id, rank) after `iterations`
     * synchronous updates of
@@ -167,10 +183,7 @@ object Graph {
     * coeff = 2·T / (deg·(deg−1)) (0 when deg < 2).
     */
   def triangles(edges: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
     val deg = und.select(col("x").as("id")).unionByName(und.select(col("y").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
     // orient x→y iff (deg(x), x) < (deg(y), y): lexicographic struct compare
@@ -215,13 +228,9 @@ object Graph {
     */
   def commonNeighbors(edges: DataFrame, minCommon: Long = 1L,
                       maxDegree: Option[Long] = None): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
       .localCheckpoint() // consumed 4× below (both adj sides, anti, degrees)
-    val adj = und.select(col("x").as("v"), col("y").as("n"))
-      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+    val adj = adjacency(und)
     val deg = adj.groupBy("v").agg(count(lit(1)).as("degree"))
     val centers = maxDegree.fold(adj.select(col("n"), col("v")))(cap =>
       adj.join(deg.filter(col("degree") <= cap).select(col("v").as("n")), "n")
@@ -263,13 +272,9 @@ object Graph {
     */
   def adamicAdar(edges: DataFrame, minCommon: Long = 1L,
                  maxDegree: Option[Long] = None): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
       .localCheckpoint() // consumed 3× (adjacency, anti-join, degrees)
-    val adj = und.select(col("x").as("v"), col("y").as("n"))
-      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+    val adj = adjacency(und)
     val deg = adj.groupBy("v").agg(count(lit(1)).as("degree"))
     val centers0 = maxDegree.fold(deg)(cap => deg.filter(col("degree") <= cap))
       .filter(col("degree") >= 2L) // a 1-degree node is never a common neighbor
@@ -360,13 +365,9 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
       .localCheckpoint()
-    val adj = und.select(col("x").as("v"), col("y").as("n"))
-      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+    val adj = adjacency(und)
     var labels = und.select(col("x").as("id")).unionByName(und.select(col("y").as("id")))
       .distinct().withColumn("label", col("id")).localCheckpoint()
     val w = org.apache.spark.sql.expressions.Window
@@ -401,14 +402,10 @@ object Graph {
   def kTruss(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    var e = undirected(edges)
       .localCheckpoint()
     def support(ed: DataFrame): DataFrame = {
-      val adj = ed.select(col("x").as("v"), col("y").as("n"))
-        .unionByName(ed.select(col("y").as("v"), col("x").as("n")))
+      val adj = adjacency(ed)
       // cn adjacent to BOTH endpoints: join x's neighbor list, then require
       // the same cn in y's — the (y, cn) using-join is the triangle close
       ed.join(adj.toDF("x", "cn"), "x")
@@ -446,10 +443,7 @@ object Graph {
   def kCore(edges: DataFrame, k: Long, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
     var e = und.localCheckpoint()
     for (_ <- 1 to rounds) {
       val adj = e.select(col("x").as("v")).unionByName(e.select(col("y").as("v")))
@@ -554,10 +548,7 @@ object Graph {
     * Output: one row (m, n_communities, modularity).
     */
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
+    val und = undirected(edges)
     val lx = labels.select(col("id").as("x"), col("community").as("_cx"))
     val ly = labels.select(col("id").as("y"), col("community").as("_cy"))
     val tagged = und.join(lx, "x").join(ly, "y")
@@ -587,12 +578,8 @@ object Graph {
     * aggregates. Output: (degree, n_nodes, avg_nbr_degree).
     */
   def avgNeighborDegree(edges: DataFrame): DataFrame = {
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
-    val adj = und.select(col("x").as("v"), col("y").as("n"))
-      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+    val und = undirected(edges)
+    val adj = adjacency(und)
     val deg = adj.groupBy("v").agg(count(lit(1)).as("degree"))
     val perNode = adj
       .join(deg.select(col("v").as("n"), col("degree").as("_nd")), "n")
@@ -615,12 +602,8 @@ object Graph {
     */
   def richClub(edges: DataFrame, ks: Seq[Long]): DataFrame = {
     require(ks.nonEmpty, "richClub needs at least one degree cut")
-    val und = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("x"),
-        greatest(col("src"), col("dst")).as("y"))
-      .distinct()
-    val adj = und.select(col("x").as("v"), col("y").as("n"))
-      .unionByName(und.select(col("y").as("v"), col("x").as("n")))
+    val und = undirected(edges)
+    val adj = adjacency(und)
     val deg = adj.groupBy("v").agg(count(lit(1)).as("degree"))
     val tagged = und
       .join(deg.select(col("v").as("x"), col("degree").as("_dx")), "x")

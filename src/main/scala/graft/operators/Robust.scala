@@ -523,20 +523,20 @@ object Robust {
     * rank window + two bounded aggregates.
     * Output: one row (n_blocks, k, chi2).
     */
-  def friedman(df: DataFrame, blockCol: String, armCol: String,
+  def friedman(df: DataFrame, blockKey: String, armCol: String,
                valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
     val base = df.filter(v.isNotNull && col(armCol).isNotNull)
     val k = base.agg(countDistinct(col(armCol)).as("k"))
     val complete = base
       .withColumn("_ba", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col(blockCol))))
+        org.apache.spark.sql.expressions.Window.partitionBy(col(blockKey))))
       .crossJoin(k)
       .filter(col("_ba") === col("k"))
     val wBlk = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(blockCol)).orderBy(v)
+      .partitionBy(col(blockKey)).orderBy(v)
     val tiePart = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(blockCol), v)
+      .partitionBy(col(blockKey), v)
     val ranked = complete
       .withColumn("_mid", rank().over(wBlk).cast("double") +
         (count(lit(1)).over(tiePart) - 1).cast("double") / 2)

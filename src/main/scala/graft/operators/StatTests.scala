@@ -190,7 +190,7 @@ object StatTests {
     * [[mcnemar]]. Output: one row (n_blocks, k, q); q null when every
     * block is all-0 or all-1 (denominator 0).
     */
-  def cochranQ(df: DataFrame, blockCol: String, treatCol: String,
+  def cochranQ(df: DataFrame, blockKey: String, treatCol: String,
                treatments: Seq[String], xCol: String): DataFrame = {
     require(treatments.size >= 2,
       s"cochranQ: need >= 2 treatments, got ${treatments.size}")
@@ -202,7 +202,7 @@ object StatTests {
       }
     val base = df
       .filter(col(treatCol).cast("string").isin(treatments.map(a => a: Any): _*))
-      .groupBy(col(blockCol))
+      .groupBy(col(blockKey))
       .agg(bAggs.head, bAggs.tail: _*)
       .filter(col("_kc") === k.toLong)
     val tAggs = Seq(count(lit(1)).as("n_blocks"),
@@ -329,20 +329,20 @@ object StatTests {
     * Blocks missing any arm are dropped ([[Robust.friedman]] discipline).
     * Output: one row (n_blocks, k, l_stat, z).
     */
-  def pageL(df: DataFrame, blockCol: String, armCol: String,
+  def pageL(df: DataFrame, blockKey: String, armCol: String,
             orderedArms: Seq[String], valCol: String): DataFrame = {
     require(orderedArms.size >= 3, "pageL: need >= 3 ordered arms")
     val k = orderedArms.size
     val v = col(valCol).cast("double")
     val base = df.filter(v.isNotNull &&
       col(armCol).cast("string").isin(orderedArms.map(a => a: Any): _*))
-      .withColumn("_ba", count(lit(1)).over(Window.partitionBy(col(blockCol))))
+      .withColumn("_ba", count(lit(1)).over(Window.partitionBy(col(blockKey))))
       .filter(col("_ba") === k.toLong)
-    val wBlk = Window.partitionBy(col(blockCol)).orderBy(v)
-    val tiePart = Window.partitionBy(col(blockCol), v)
+    val wBlk = Window.partitionBy(col(blockKey)).orderBy(v)
+    val tiePart = Window.partitionBy(col(blockKey), v)
     val ranked = base.withColumn("_mid", rank().over(wBlk).cast("double") +
       (count(lit(1)).over(tiePart) - 1).cast("double") / 2)
-    val aggs = Seq(countDistinct(col(blockCol)).as("n_blocks")) ++
+    val aggs = Seq(countDistinct(col(blockKey)).as("n_blocks")) ++
       orderedArms.zipWithIndex.map { case (a, i) =>
         sum(when(col(armCol).cast("string") === a, col("_mid"))
           .otherwise(lit(0.0))).as(s"_r$i")
@@ -2246,26 +2246,26 @@ object StatTests {
     * perfectly concordant). Two rank windows + bounded aggregates.
     * Output: one row (n_blocks, k, a_term, b_term, f_stat).
     */
-  def quade(df: DataFrame, blockCol: String, armCol: String,
+  def quade(df: DataFrame, blockKey: String, armCol: String,
             valCol: String): DataFrame = {
     val v = col(valCol).cast("double")
     val base = df.filter(v.isNotNull && col(armCol).isNotNull)
     val k = base.agg(countDistinct(col(armCol)).as("_k"))
     val complete = base
       .withColumn("_ba", count(lit(1)).over(
-        Window.partitionBy(col(blockCol))))
+        Window.partitionBy(col(blockKey))))
       .crossJoin(k)
       .filter(col("_ba") === col("_k"))
-    val wBlk = Window.partitionBy(col(blockCol)).orderBy(v)
-    val tieBlk = Window.partitionBy(col(blockCol), v)
+    val wBlk = Window.partitionBy(col(blockKey)).orderBy(v)
+    val tieBlk = Window.partitionBy(col(blockKey), v)
     val ranked = complete
       .withColumn("_mid", rank().over(wBlk).cast("double") +
         (count(lit(1)).over(tieBlk) - 1).cast("double") / 2)
       .withColumn("_rng",
-        max(v).over(Window.partitionBy(col(blockCol))) -
-          min(v).over(Window.partitionBy(col(blockCol))))
+        max(v).over(Window.partitionBy(col(blockKey))) -
+          min(v).over(Window.partitionBy(col(blockKey))))
     // block-range midranks: rank the DISTINCT block rows, re-attach
-    val blocks = ranked.select(col(blockCol).as("_blk"), col("_rng"))
+    val blocks = ranked.select(col(blockKey).as("_blk"), col("_rng"))
       .distinct()
     val wRng = Window.orderBy(col("_rng"))
     val tieRng = Window.partitionBy(col("_rng"))
@@ -2273,7 +2273,7 @@ object StatTests {
       rank().over(wRng).cast("double") +
         (count(lit(1)).over(tieRng) - 1).cast("double") / 2)
     val scored = ranked.join(broadcast(q),
-        ranked(blockCol) === q("_blk"))
+        ranked(blockKey) === q("_blk"))
       .withColumn("_s",
         col("_q") * (col("_mid") - (col("_k").cast("double") + 1) / 2))
     val perArm = scored.groupBy(col(armCol))

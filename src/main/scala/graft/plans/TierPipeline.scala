@@ -409,8 +409,9 @@ object TierPipeline {
   /** [[TierRoute]] registrations for a durable store: every stored tier
     * becomes a route over `raw` (the pages frame WITH hierarchy columns,
     * scanned from parquet), with `length(text)`/`utf8_char_count(text)`
-    * measures, exact percentiles via the Gorilla block column, and
-    * `count(DISTINCT lang)` via the per-bucket lang sets. The tier frames
+    * measures and `count(DISTINCT lang)`. The rule reads the stored tier
+    * layout itself: exact percentiles come from its `block` column,
+    * distinct counts from its `lang_set`. The tier frames
     * carry their `day` partition column, so a time-bounded query reads only
     * the day directories its range covers. In a session with the engine's
     * extension ([[graft.GraftSession]]), after
@@ -429,7 +430,6 @@ object TierPipeline {
         tier = () => readTier(spark, cfg, t.name),
         groupCols = Hier.Levels, tsCol = "warc_ts",
         measure = TierRoute.CharLenMeasure("text"), measureNonNull = true,
-        sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
-        blockCol = Some("block"), distinctCol = Some(("lang", "lang_set")))
+        distinctCol = Some("lang"))
     }
 }

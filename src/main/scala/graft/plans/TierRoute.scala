@@ -17,15 +17,16 @@ import graft.operators.Rollup
   * rewrite), done the Spark-native way as a `Rule[LogicalPlan]`.
   *
   * A registered [[TierRoute.Route]] declares the raw source (by parquet
-  * root path), the tier table (bucket width + partial columns), the
-  * hierarchy columns, and the measure. The rule then rewrites
+  * root path), the tier table (its bucket width; its columns are the tier
+  * layout `Rollup` writes), the hierarchy columns, and the measure. The
+  * rule then rewrites
   *
   * {{{ raw.filter(tsRange && dims).groupBy(dims, u - u % W).agg(count/sum/min/max/avg(measure)) }}}
   *
   * into the equivalent merge aggregate over the tier — `count → sum(cnt)`,
-  * `sum → sum(sum_col)`, `min/max → min/max of the partial`, `avg →
-  * sum(sum_col)/sum(cnt)`, and (when the tier carries a Gorilla point-block
-  * column) `percentile(m, 0.5/0.95) → ` the EXACT percentile recomputed
+  * `sum → sum(sum_len)`, `min/max → min/max of the partial`, `avg →
+  * sum(sum_len)/sum(cnt)`, and (when the tier carries a Gorilla point
+  * `block`) `percentile(m, 0.5/0.95) → ` the EXACT percentile recomputed
   * from the merged decoded blocks (`codec.BlockAgg`'s block mode) —
   * whenever the bucket width is a multiple of the tier width and every
   * time predicate is tier-aligned. At 10^12 raw rows an hourly-by-host
@@ -88,9 +89,12 @@ object TierRoute {
     }
   }
 
-  /** One raw-table → tier-table routing declaration. The tier's bucket
-    * column is `bucket_start` (epoch seconds, long) and its row-count
-    * partial is `cnt`, as in every tier the engine writes.
+  /** One raw-table → tier-table routing declaration. The tier has the
+    * layout [[graft.operators.Rollup]] writes: `bucket_start` (epoch
+    * seconds, long), the partials `cnt`, `sum_len`, `min_len`, `max_len`
+    * of the measure, and, where present, the point `block` (binary) and
+    * the per-bucket value set `lang_set`. A route whose tier lacks
+    * `bucket_start`, `cnt` or a measure partial never rewrites.
     *
     * @param raw            the raw DataFrame (its parquet root path is the
     *                       match key)
@@ -104,14 +108,15 @@ object TierRoute {
     *                       query's time bounds then cut the scan to the days
     *                       they cover
     * @param measureNonNull set true only when the measure column has no
-    *                       nulls in the raw data; gates `avg` and
-    *                       `count(measure)` rewrites, whose tier form
-    *                       divides/counts by the ALL-rows `cnt` partial
-    * @param blockCol       tier column carrying the Gorilla point block;
-    *                       enables exact `percentile(m, 0.5/0.95)` routing
-    * @param distinctCol    (rawColumn, tierSetColumn): enables exact
-    *                       `count(DISTINCT rawColumn)` routing via set
-    *                       re-merge over the tier's per-bucket value sets
+    *                       nulls in the raw data; gates `avg`,
+    *                       `count(measure)` and percentile rewrites, whose
+    *                       tier form divides/counts by the ALL-rows `cnt`
+    *                       partial. Exact `percentile(m, 0.5/0.95)` routes
+    *                       onto the tier's `block` column
+    * @param distinctCol    the raw column whose values the tier's
+    *                       `lang_set` holds: enables exact
+    *                       `count(DISTINCT distinctCol)` routing via set
+    *                       re-merge
     */
   case class Route(
       name: String,
@@ -122,11 +127,7 @@ object TierRoute {
       tsCol: String,
       measure: MeasureSpec,
       measureNonNull: Boolean = false,
-      sumCol: String = "sum_value",
-      minCol: String = "min_value",
-      maxCol: String = "max_value",
-      blockCol: Option[String] = None,
-      distinctCol: Option[(String, String)] = None) {
+      distinctCol: Option[String] = None) {
     require(tierSeconds >= 1, s"tierSeconds must be >= 1, got $tierSeconds")
     private[plans] val rawPaths: Set[String] = relationPaths(raw.queryExecution.analyzed)
     require(rawPaths.nonEmpty, "raw frame must scan a file-source relation")
@@ -333,9 +334,9 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
       tierPlan.output.collectFirst { case a: AttributeReference if a.name == name => a }
     val bucketAttr = tierAttr("bucket_start").getOrElse(return None)
     val cntAttr = tierAttr("cnt").getOrElse(return None)
-    val sumAttr = tierAttr(route.sumCol).getOrElse(return None)
-    val minAttr = tierAttr(route.minCol).getOrElse(return None)
-    val maxAttr = tierAttr(route.maxCol).getOrElse(return None)
+    val sumAttr = tierAttr("sum_len").getOrElse(return None)
+    val minAttr = tierAttr("min_len").getOrElse(return None)
+    val maxAttr = tierAttr("max_len").getOrElse(return None)
     if (bucketAttr.dataType != LongType) return None
 
     // grouping rewrite map (original expr -> tier expr)
@@ -358,7 +359,7 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
     // of the native BlockAgg over the block column; p50/p95 are struct
     // fields 1/2 of its output. One aggregate expression is shared by both
     // percentile outputs (same resultId -> planned once).
-    lazy val mergedStats: Option[Expression] = route.blockCol.flatMap(tierAttr)
+    lazy val mergedStats: Option[Expression] = tierAttr("block")
       .filter(_.dataType == BinaryType)
       .map(b => BlockAgg(Seq(b)).toAggregateExpression())
 
@@ -380,8 +381,8 @@ case class TierRouteRule() extends Rule[LogicalPlan] {
         // full per-bucket set, and null raw values are absent from both
         // sides (collect_set drops them, as does count distinct)
         return (ae.aggregateFunction, route.distinctCol) match {
-          case (c: Count, Some((rawCol, setCol))) =>
-            (c.children, tierAttr(setCol)) match {
+          case (c: Count, Some(rawCol)) =>
+            (c.children, tierAttr("lang_set")) match {
               case (Seq(a: AttributeReference), Some(setAttr)) if a.name == rawCol =>
                 Some(Cast(Size(ArrayDistinct(Flatten(
                   CollectList(setAttr).toAggregateExpression()))), LongType))

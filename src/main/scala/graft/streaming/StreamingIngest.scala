@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.plans.TierPipeline
 import graft.plans.TierPipeline.{parts, partIn, snapshot, storedPart}
 import graft.functions.Hier
+import graft.operators.Rollup
 
 /** Durable landing of the streaming 1-minute tier into the
   * [[graft.plans.TierPipeline]] store — the ingestion half of a
@@ -136,12 +137,8 @@ object StreamingIngest {
               groupCols: Seq[String] = Hier.Levels): DataFrame = {
     val serveCols = (groupCols ++ Seq("bucket_start", "cnt", "sum_len",
       "min_len", "max_len", "mean_len")).map(col)
-    def empty: DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        groupCols.map(c => s"$c string").mkString(", ") +
-        ", bucket_start long, cnt long, sum_len double, min_len double" +
-        ", max_len double, mean_len double"))
+    def empty: DataFrame = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      Rollup.tierSchema(spark, groupCols)).select(serveCols: _*)
     val batchDone = parts(snapshot(spark, cfg.root), "1m")
     val hot = if (!TierPipeline.exists(spark, streamTierPath(cfg.root))) empty else
       TierPipeline.readParts(spark, streamTierPath(cfg.root))

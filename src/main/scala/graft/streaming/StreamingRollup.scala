@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Hier
+import graft.operators.Rollup
 
 /** Structured Streaming variant of the tier-1 continuous aggregate.
   *
@@ -30,8 +31,7 @@ object StreamingRollup {
     */
   def tier1mStream(pages: DataFrame, watermark: String = "5 minutes",
                    groupCols: Seq[String] = Hier.Levels): DataFrame =
-    pages
-      .withColumn("text_len", length(col("text")).cast("double"))
+    Rollup.textLen(pages)
       .withWatermark("warc_ts", watermark)
       .groupBy((groupCols.map(col) :+ window(col("warc_ts"), "1 minute").as("w")): _*)
       .agg(

@@ -152,4 +152,26 @@ class StreamingIngestSpec extends SparkSuite {
     val hotOnly = StreamingIngest.readHot(spark, TierPipeline.Config(tmp("empty_cold")))
     assert(hotOnly.collect().isEmpty) // empty stream store + no cold layer
   }
+
+  test("readHot over a store with no stream tier serves exactly its complete 1m rows") {
+    val cfg = TierPipeline.Config(tmp("ingest_cold_only"))
+    // two days, so the store has partitions on both
+    val pages = (0 until 12).map { i =>
+      StreamPage(s"https://w$i.site${i % 3}.com/c/$i", ts(i % 5 + 1500 * (i % 2), i),
+        "c" * (1 + i), Seq("en", "de")(i % 2))
+    }
+    TierPipeline.buildAll(Hier.withHierarchy(pages.toDF()), cfg, "cold-only")
+    assert(!TierPipeline.exists(spark, StreamingIngest.streamTierPath(cfg.root)))
+
+    val served = StreamingIngest.readHot(spark, cfg)
+    val cols = Hier.Levels ++ assoc.tail
+    val stored = TierPipeline.readStored(spark, cfg, "1m").select(cols.map(col): _*)
+    assert(served.schema.map(f => (f.name, f.dataType)) ===
+      stored.schema.map(f => (f.name, f.dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(rows(served) === rows(stored))
+    assert(rows(served) === rows(Rollup.tier1m(Hier.withHierarchy(pages.toDF()))))
+    assert(rows(served).length === pages.length) // one host per page
+  }
 }

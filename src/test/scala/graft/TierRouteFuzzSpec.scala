@@ -34,14 +34,17 @@ class TierRouteFuzzSpec extends SparkSuite {
   private lazy val raw: DataFrame = spark.read.parquet(s"$sfDir/events.parquet")
   private def u = unix_timestamp(col("ts"))
 
-  private lazy val tierPath: String = {
-    val dir = Files.createTempDirectory("graft_route_fuzz").toString
-    raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-        min("value").as("min_value"), max("value").as("max_value"))
-      .write.mode("overwrite").parquet(dir)
+  /** The engine's per-user 1m tier of the raw events, written to a fresh
+    * directory without the columns in `drop`.
+    */
+  private def writeTier(name: String, drop: String*): String = {
+    val dir = Files.createTempDirectory(name).toString
+    EntryHelpers.userTier1m(raw).drop(drop: _*).write.mode("overwrite").parquet(dir)
     dir
   }
+
+  // no block and no lang_set: percentiles and distinct counts fall through
+  private lazy val tierPath: String = writeTier("graft_route_fuzz", "block", "lang_set")
 
   private def mkRoute: Route = Route(name = "fuzz1m", raw = raw,
     tierSeconds = 60L, tier = () => spark.read.parquet(tierPath),
@@ -193,18 +196,11 @@ class TierRouteFuzzSpec extends SparkSuite {
   test("fuzz: block-percentile + distinct-set route arms (400 shapes)") {
     val rnd = new scala.util.Random(4042026L)
     TierRoute.clear()
-    // tier that carries the Gorilla block AND the per-bucket value set, so
-    // percentile(0.5/0.95) and count(DISTINCT event_type) become eligible
-    val dir = Files.createTempDirectory("graft_route_fuzz_blk").toString
-    raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-        min("value").as("min_value"), max("value").as("max_value"),
-        collect_set(col("event_type")).as("type_set"),
-        graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
-      .withColumn("block", col("m.block")).drop("m")
-      .write.mode("overwrite").parquet(dir)
+    // the full tier carries the Gorilla block AND the per-bucket value set,
+    // so percentile(0.5/0.95) and count(DISTINCT event_type) become eligible
+    val dir = writeTier("graft_route_fuzz_blk")
     val route = mkRoute.copy(name = "fuzzblk", tier = () => spark.read.parquet(dir),
-      blockCol = Some("block"), distinctCol = Some(("event_type", "type_set")))
+      distinctCol = Some("event_type"))
 
     var nRewritten = 0
     var nKept = 0

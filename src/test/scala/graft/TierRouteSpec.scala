@@ -16,17 +16,20 @@ class TierRouteSpec extends SparkSuite {
 
   private def u = unix_timestamp(col("ts"))
 
-  private def buildTier(seconds: Long): String = {
-    val dir = Files.createTempDirectory(s"graft_route_$seconds").toString
-    raw.groupBy(col("user_id"), (u - pmod(u, lit(seconds))).as("bucket_start"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-        min("value").as("min_value"), max("value").as("max_value"))
-      .write.mode("overwrite").parquet(dir)
+  /** Writes `tier` to a fresh directory and returns its path. */
+  private def write(tier: DataFrame, name: String): String = {
+    val dir = Files.createTempDirectory(s"graft_route_$name").toString
+    tier.write.mode("overwrite").parquet(dir)
     dir
   }
 
-  private lazy val tier1mPath = buildTier(60L)
-  private lazy val tier1hPath = buildTier(3600L)
+  /** The engine's per-user tiers of the raw events: the 1m tier and its 1h
+    * promotion, each with the point block and the event_type set.
+    */
+  private lazy val tier1m: DataFrame = EntryHelpers.userTier1m(raw)
+  private lazy val tier1mPath = write(tier1m, "1m")
+  private lazy val tier1hPath =
+    write(graft.operators.Rollup.promote(tier1m, 3600L, Seq("user_id")), "1h")
 
   private def route(name: String, path: String, seconds: Long): Route =
     Route(name = name, raw = raw, tierSeconds = seconds,
@@ -152,24 +155,15 @@ class TierRouteSpec extends SparkSuite {
   }
 
   test("percentiles route onto Gorilla blocks: exact parity + plan evidence + fallback") {
-    // a 1m tier that also carries the point block
-    val dir = Files.createTempDirectory("graft_route_blk").toString
-    raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-        min("value").as("min_value"), max("value").as("max_value"),
-        graft.functions.codec.BlockAgg.points(u, col("value")).as("m"))
-      .withColumn("block", col("m.block")).drop("m")
-      .write.mode("overwrite").parquet(dir)
-    val blockRoute = route("tblk", dir, 60L).copy(blockCol = Some("block"))
     def q(src: DataFrame): DataFrame = src
       .groupBy(col("user_id"), (u - pmod(u, lit(3600L))).as("bucket_start"))
       .agg(percentile(col("value"), lit(0.5)).as("p50_v"),
         percentile(col("value"), lit(0.95)).as("p95_v"),
         count(lit(1)).as("cnt"))
       .orderBy("user_id", "bucket_start")
-    withRoutes(blockRoute) {
+    withRoutes(route("t1m", tier1mPath, 60L)) {
       val routed = q(raw)
-      assert(scannedPaths(routed).exists(_.contains(dir)), "percentile query not routed")
+      assert(scannedPaths(routed).exists(_.contains(tier1mPath)), "percentile query not routed")
       val got = routed.collect()
       TierRoute.clear()
       val exp = q(raw).collect()
@@ -181,22 +175,27 @@ class TierRouteSpec extends SparkSuite {
       }
     }
     // unsupported percentage falls back to raw
-    withRoutes(blockRoute) {
+    withRoutes(route("t1m", tier1mPath, 60L)) {
       val p90 = raw.groupBy(col("user_id"))
         .agg(percentile(col("value"), lit(0.9)).as("p90"))
       assert(scannedPaths(p90).exists(_.contains("events.parquet")))
     }
-    // a block-less route cannot serve percentiles (no silent wrong answer) —
-    // but with BOTH registered the block route picks up the query
-    withRoutes(route("t1m", tier1mPath, 60L)) {
+    // a block-less tier cannot serve percentiles (no silent wrong answer) —
+    // but with the 1m block tier registered too, the coarser block-less
+    // route falls through to it
+    val noBlock1h = write(spark.read.parquet(tier1hPath).drop("block"), "1h_noblock")
+    withRoutes(route("t1h", noBlock1h, 3600L)) {
       val p50 = raw.groupBy(col("user_id"))
         .agg(percentile(col("value"), lit(0.5)).as("p50"))
       assert(scannedPaths(p50).exists(_.contains("events.parquet")))
     }
-    withRoutes(route("t1m", tier1mPath, 60L), blockRoute) {
+    withRoutes(route("t1h", noBlock1h, 3600L), route("t1m", tier1mPath, 60L)) {
       val p50 = raw.groupBy(col("user_id"))
         .agg(percentile(col("value"), lit(0.5)).as("p50"))
-      assert(scannedPaths(p50).exists(_.contains(dir)))
+      assert(scannedPaths(p50).exists(_.contains(tier1mPath)))
+      // a query the block-less tier can serve still reads the coarser one
+      val sums = raw.groupBy(col("user_id")).agg(sum("value").as("s"))
+      assert(scannedPaths(sums).exists(_.contains(noBlock1h)))
     }
   }
 
@@ -215,9 +214,7 @@ class TierRouteSpec extends SparkSuite {
       name = "pages_1m", raw = rawPages, tierSeconds = 60L,
       tier = () => spark.read.parquet(tierDir),
       groupCols = Seq("tld", "registered_domain", "host"), tsCol = "warc_ts",
-      measure = TierRoute.CharLenMeasure("text"), measureNonNull = true,
-      sumCol = "sum_len", minCol = "min_len", maxCol = "max_len",
-      blockCol = Some("block"))
+      measure = TierRoute.CharLenMeasure("text"), measureNonNull = true)
     val uw = unix_timestamp(col("warc_ts"))
     def q(src: DataFrame): DataFrame = src
       .groupBy(col("host"), (uw - pmod(uw, lit(3600L))).as("bucket_start"))
@@ -249,27 +246,26 @@ class TierRouteSpec extends SparkSuite {
   }
 
   test("count(DISTINCT col) routes onto the tier's per-bucket value sets") {
-    val dir = Files.createTempDirectory("graft_route_set").toString
-    raw.groupBy(col("user_id"), (u - pmod(u, lit(60L))).as("bucket_start"))
-      .agg(count(lit(1)).as("cnt"), sum("value").as("sum_value"),
-        min("value").as("min_value"), max("value").as("max_value"),
-        collect_set(col("event_type")).as("type_set"))
-      .write.mode("overwrite").parquet(dir)
-    val setRoute = route("tset", dir, 60L)
-      .copy(distinctCol = Some(("event_type", "type_set")))
+    val setRoute = route("tset", tier1mPath, 60L).copy(distinctCol = Some("event_type"))
     def q(src: DataFrame): DataFrame = src
       .groupBy(col("user_id"), (u - pmod(u, lit(3600L))).as("bucket_start"))
       .agg(countDistinct(col("event_type")).as("n_types"), count(lit(1)).as("cnt"))
       .orderBy("user_id", "bucket_start")
     withRoutes(setRoute) {
       val routed = q(raw)
-      assert(scannedPaths(routed).exists(_.contains(dir)), "distinct query not routed")
+      assert(scannedPaths(routed).exists(_.contains(tier1mPath)), "distinct query not routed")
       val got = routed.collect()
       TierRoute.clear()
       assert(got.map(_.toSeq).toSeq === q(raw).collect().map(_.toSeq).toSeq)
     }
-    // without distinctCol the distinct aggregate stays on raw
-    withRoutes(route("tset2", dir, 60L)) {
+    // without distinctCol the distinct aggregate stays on raw, though the
+    // tier has its lang_set
+    withRoutes(route("tset2", tier1mPath, 60L)) {
+      assert(scannedPaths(q(raw)).exists(_.contains("events.parquet")))
+    }
+    // and so it does over a tier without a lang_set, distinctCol or not
+    val noSet = write(spark.read.parquet(tier1mPath).drop("lang_set"), "1m_noset")
+    withRoutes(route("tset3", noSet, 60L).copy(distinctCol = Some("event_type"))) {
       assert(scannedPaths(q(raw)).exists(_.contains("events.parquet")))
     }
   }
