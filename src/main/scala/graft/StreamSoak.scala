@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hier
+import graft.operators.Rollup
 import graft.plans.TierPipeline
 import graft.sources.Pages
 import graft.streaming.{StreamingIngest, StreamingRollup}
@@ -10,16 +11,18 @@ import graft.streaming.{StreamingIngest, StreamingRollup}
 /** Streaming-ingest soak: pages replayed through a file-source micro-batch
   * stream → watermarked 1m aggregate (append mode, closed buckets only) →
   * [[StreamingIngest]] durable landing, then a batch-parity audit of every
-  * landed bucket. Records sustained streaming throughput + end-to-end
-  * correctness of the hot layer at a scale the unit specs don't reach
-  * (numbers land in BASELINE.md).
+  * landed bucket. Records sustained streaming throughput, the state
+  * operators' memory at the last micro-batch (`state_bytes`: an open bucket
+  * holds its point buffer) and end-to-end correctness of the hot layer at a
+  * scale the unit specs don't reach (numbers land in BASELINE.md).
   *
   * The page corpus spans a fixed day and arrives out of ts order (Pages
   * scaladoc), so the watermark trails the max event time: buckets close
   * progressively across micro-batches and the LAST `watermark` minutes of
   * buckets stay open when the source drains — exactly the steady state of a
-  * live ingest. The parity audit therefore checks landed ⊆ batch and
-  * exact equality on the closed range.
+  * live ingest. The parity audit therefore checks landed ⊆ batch on every
+  * tier column ([[Rollup.comparable]]: the block's SHA-256, the sorted lang
+  * set, exact p50/p95 included).
   *
   * Usage: SPARK_GRAFT_CPUS=8 sbt "runMain graft.StreamSoak [nPages] [root]"
   */
@@ -69,16 +72,14 @@ object StreamSoak {
     val t0 = System.nanoTime()
     val q = StreamingIngest.startTierSink(closed, cfg, s"$root/ckpt", "stream-soak")
     q.processAllAvailable()
+    val stateBytes = q.lastProgress.stateOperators.map(_.memoryUsedBytes).sum
     q.stop()
     val ingestSec = (System.nanoTime() - t0) / 1e9
 
     // ---- parity audit: every landed bucket must equal its batch twin ----
-    val assoc = Hier.Levels ++ Seq("bucket_start",
-      "cnt", "sum_len", "min_len", "max_len", "mean_len")
-    val landed = StreamingIngest.readStreamTier(spark, cfg).select(assoc.map(col): _*)
-    val batch = graft.operators.Rollup.tier1m(
-        Hier.withHierarchy(spark.read.parquet(srcDir)))
-      .select(assoc.map(col): _*)
+    val landed = Rollup.comparable(
+      StreamingIngest.readStreamTier(spark, cfg).drop("day", "host_bucket"))
+    val batch = Rollup.comparable(Rollup.tier1m(Hier.withHierarchy(spark.read.parquet(srcDir))))
     val landedCnt = landed.count()
     val batchCnt = batch.count()
     val mismatched = landed.exceptAll(batch).count() // landed ⊆ batch, exact
@@ -90,7 +91,7 @@ object StreamSoak {
 
     println(s"[stream-soak] {" +
       s""""pages":$nPages,"ingest_sec":${f"$ingestSec%.1f"},""" +
-      s""""pages_per_sec":${(nPages / ingestSec).toLong},""" +
+      s""""pages_per_sec":${(nPages / ingestSec).toLong},"state_bytes":$stateBytes,""" +
       s""""micro_batches":$nBatches,"buckets_landed":$landedCnt,""" +
       s""""buckets_batch":$batchCnt,"pages_landed":$landedPages,""" +
       s""""mismatched_buckets":$mismatched,"cpus":$cpus}""")

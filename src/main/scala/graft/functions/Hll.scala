@@ -134,7 +134,14 @@ object Hll {
   def slidingDistinct(df: DataFrame, keys: Seq[String], tsCol: String,
                       itemCol: String, bucketSeconds: Long, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // the columns this function names itself: a key of the same name would
+    // be duplicated or silently replaced
+    val clash = keys.filter(Set("bucket_start", "bucket_distinct", "window_distinct_est",
+      "_sd_item", "_regs", "_wregs"))
+    require(clash.isEmpty, s"slidingDistinct: key column(s) ${clash.mkString(", ")} clash with " +
+      "the function's own output or internal columns; rename them first")
     val kcols = keys.map(col)
+    val tsSec = unix_timestamp(col(tsCol).cast("timestamp"))
     // Distinct (key, bucket, item) FIRST, then sketch + count the survivors.
     // Register-byte-identical to sketching the raw rows (register max is
     // duplicate-insensitive) and count(item) over distinct rows == the old
@@ -143,10 +150,10 @@ object Hll {
     // twice through a 3-level aggregate) for two plain hash aggregations,
     // and the per-row MD5 digest runs once per distinct item instead of
     // once per event row (guide §2.3: aggregate before you shuffle).
+    // one projection, so no internal column can shadow a caller's column
     val dedup = df
-      .withColumn("_ts_sec", unix_timestamp(col(tsCol).cast("timestamp")))
-      .withColumn("bucket_start", col("_ts_sec") - pmod(col("_ts_sec"), lit(bucketSeconds)))
-      .select(kcols :+ col("bucket_start") :+ col(itemCol).as("_sd_item"): _*)
+      .select(kcols :+ (tsSec - pmod(tsSec, lit(bucketSeconds))).as("bucket_start") :+
+        col(itemCol).as("_sd_item"): _*)
       .distinct()
     val bucketed = dedup
       .groupBy(kcols :+ col("bucket_start"): _*)

@@ -81,9 +81,14 @@ object Rollup {
   def tier1m(pages: DataFrame, groupCols: Seq[String] = Hier.Levels): DataFrame =
     // one projection per step, not a withColumn each: every DataFrame call
     // re-analyzes the whole plan built so far
-    tier1mOfPoints(pages.select((groupCols.map(col) ++ Seq(
-      unix_timestamp(col("warc_ts")).as("ts_sec"), textLenOf(col("text")).as("text_len"),
-      col("lang"))): _*), groupCols)
+    tier1mOfPoints(pages.select((groupCols.map(col) ++ pagePoints): _*), groupCols)
+
+  /** The point columns of a page (`warc_ts, text, lang`): `ts_sec` epoch
+    * seconds, `text_len` the measure and `lang`, as [[rawPartial]] reads
+    * them.
+    */
+  private[graft] def pagePoints: Seq[Column] = Seq(
+    unix_timestamp(col("warc_ts")).as("ts_sec"), textLenOf(col("text")).as("text_len"), col("lang"))
 
   /** Tier-1 (1-minute) continuous aggregate of points of any domain: rows of
     * (`groupCols`, `ts_sec` epoch seconds, `text_len` the measure, `lang`
@@ -111,9 +116,11 @@ object Rollup {
   }
 
   /** Partial measures of one group of raw points (`ts_sec`, `text_len`,
-    * `lang`); the point block and its percentiles ride in struct `m`.
+    * `lang`); the point block and its percentiles ride in struct `m`. The
+    * one raw-point measure list: the batch 1m tier and the streaming one
+    * ([[graft.streaming.StreamingRollup]]) both aggregate it.
     */
-  private def rawPartial: Seq[Column] = Seq(
+  private[graft] def rawPartial: Seq[Column] = Seq(
     count(lit(1)).as("cnt"),
     sum(col("text_len")).as("sum_len"),
     min(col("text_len")).as("min_len"),
@@ -136,7 +143,7 @@ object Rollup {
     * the aggregate's columns but `m`, then mean, lang count, p50, p95 and
     * the block.
     */
-  private def finish(agg: DataFrame): DataFrame =
+  private[graft] def finish(agg: DataFrame): DataFrame =
     agg.select((agg.columns.filter(_ != "m").map(col).toSeq ++ Seq(
       (col("sum_len") / col("cnt")).as("mean_len"),
       size(col("lang_set")).cast("long").as("lang_card"),
@@ -166,6 +173,18 @@ object Rollup {
     })
 
   private val tierSchemas = scala.collection.concurrent.TrieMap.empty[Seq[String], StructType]
+
+  /** `tier`'s rows in a form two tiers compare in, by `===` on collected
+    * rows or by `exceptAll`: every column, with `block` as its SHA-256 and
+    * `lang_set` sorted (a collected binary compares by reference, and
+    * `collect_set` fixes no order).
+    */
+  private[graft] def comparable(tier: DataFrame): DataFrame =
+    tier.select(tier.columns.toSeq.map {
+      case "block"    => sha2(col("block"), 256).as("block")
+      case "lang_set" => array_sort(col("lang_set")).as("lang_set")
+      case c          => col(c)
+    }: _*)
 
   /** The yyyy-MM-dd UTC day of epoch second `sec`, whatever the session
     * time zone: the store's `day` partition of a tier row is

@@ -45,8 +45,8 @@ import graft.operators.Rollup
   *     derived from [[Rollup]]'s columns. A read plans with no Spark job:
   *     there is no schema-inference job over the files' footers, and `day`
   *     comes back as the lineage's yyyy-MM-dd string, not an inferred DATE.
-  *     The stream tier has its caller's columns and is read by inference
-  *     ([[readParts]]).
+  *     The stream tier (`graft.streaming.StreamingIngest`) has the same
+  *     layout and is read with the same schema.
   *   - `day` is `Rollup.dayOf(bucket_start)`, the UTC day whatever the
   *     session time zone, so a time range is also a day range:
   *     `Rollup.readRange`, `Rollup.readSeries` and the [[routes]] prune a
@@ -143,9 +143,7 @@ object TierPipeline {
   private[graft] def readStored(spark: SparkSession, cfg: Config, tier: String): DataFrame =
     spark.read.schema(tierSchema(spark)).parquet(tierPath(cfg.root, tier))
 
-  /** The partition key of a stored tier read through [[readStored]] or
-    * [[readParts]].
-    */
+  /** The partition key of a stored tier read with [[tierSchema]]. */
   private[graft] val storedPart: Seq[Column] = Seq(col("day"), col("host_bucket"))
 
   /** The partition key raw pages' tier rows land under: the day of the
@@ -166,15 +164,6 @@ object TierPipeline {
 
   private def partsOf(df: DataFrame, key: Seq[Column]): Set[Part] =
     df.select(key: _*).distinct().collect().map(r => (r.getString(0), r.getInt(1))).toSet
-
-  /** A tier table of a layout with no declared schema (the stream tier,
-    * whose columns are its caller's) with its partition columns. Its schema
-    * is inferred from the files, and partition inference reads `day=`
-    * directories back as DATE, so `day` is normalized to the lineage's
-    * yyyy-MM-dd string.
-    */
-  private[graft] def readParts(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("day", date_format(col("day"), "yyyy-MM-dd"))
 
   /** One lineage row per (day, host_bucket) partition of `df`: its row count
     * and its page and length checksums.

@@ -44,6 +44,22 @@ import graft.operators.Rollup
   * parent operators (sorts, projections, joins above the aggregate) are
   * oblivious to the swap.
   *
+  * One exception, in the last bits of an interpolated percentile: between
+  * the sorted neighbours `lo ≤ hi` at rank fraction `f`, the block path
+  * (`PointSort.percentiles`) computes `lo + f·(hi − lo)` and Spark's
+  * `percentile` computes `(1 − f)·lo + f·hi`, from the same double `f`
+  * (`1 − f` is exact at p = 0.5 and 0.95). Let u = 2⁻⁵³ and x the exact
+  * value. For a nonnegative measure each rounding moves a result by at
+  * most u·x: the block path rounds `f·(hi − lo)` and the sum, so
+  * |routed − x| ≤ 2u·x(1 + u); Spark rounds the two products (together by
+  * at most u·x, as they sum to x) and the sum, so |spark − x| ≤
+  * 2u·x(1 + u). Hence |routed − spark| ≤ 4u·x(1 + u), at most 4 ulps of
+  * the larger result, when `hi − lo` is exact, as for integer-valued
+  * measures such as the page character counts. A rounded `hi − lo` adds
+  * u·x, so 5 ulps for any nonnegative measure; a measure of mixed sign
+  * gives < 8u·max(|lo|, |hi|).
+  * Counts, and sums of integer-valued measures, are exact (TierRouteSpec).
+  *
   * Recognized shapes (the engine's canonical idioms, documented in
   * COVERAGE.md):
   *   - bucket expr: `u - pmod(u, W)` where `u` is `unix_timestamp(tsCol)`

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.plans.TierPipeline
-import graft.plans.TierPipeline.{parts, partIn, snapshot, storedPart}
-import graft.functions.Hier
-import graft.operators.Rollup
+import graft.plans.TierPipeline.{parts, partIn, snapshot, storedPart, tierSchema}
 
 /** Durable landing of the streaming 1-minute tier into the
   * [[graft.plans.TierPipeline]] store — the ingestion half of a
@@ -18,9 +17,10 @@ import graft.operators.Rollup
   *     `tier_1m/` .. `tier_1d/` with exact percentiles and point blocks.
   *   - HOT: this sink lands watermark-CLOSED streaming buckets
   *     ([[StreamingRollup.tier1mStream]] in append mode) into
-  *     `tier_1m_stream/` within seconds of bucket close, carrying the
-  *     associative measures. [[readHot]] serves the union: batch partitions
-  *     where the cold layer has caught up, streamed rows elsewhere.
+  *     `tier_1m_stream/` within seconds of bucket close, in the cascade
+  *     tiers' layout (exact percentiles and point blocks included).
+  *     [[readHot]] serves the union: batch partitions where the cold layer
+  *     has caught up, streamed rows elsewhere.
   *
   * Exactly-once without a transactional table format (same constraint as
   * TierPipeline — no Iceberg/Delta jar on the box): each micro-batch writes
@@ -88,12 +88,20 @@ object StreamingIngest {
       .foreachBatch((batch: DataFrame, id: Long) => ingestBatch(batch, cfg, runId, id))
       .start()
 
-  /** The streamed hot tier as a DataFrame: the landed columns and the
-    * `day` (yyyy-MM-dd string) and `host_bucket` partition columns;
-    * `batch_id` is dropped. Its schema is inferred, not the cascade tiers'.
+  /** The streamed hot tier as a DataFrame, read with the cascade tiers'
+    * declared schema ([[TierPipeline.tierSchema]]: the tier columns and the
+    * `day` (yyyy-MM-dd string) and `host_bucket` partition columns);
+    * `batch_id` is dropped. Empty when nothing has landed yet.
     */
   def readStreamTier(spark: SparkSession, cfg: TierPipeline.Config): DataFrame =
-    TierPipeline.readParts(spark, streamTierPath(cfg.root)).drop("batch_id")
+    landed(spark, streamTierPath(cfg.root), tierSchema(spark).add("batch_id", LongType))
+      .drop("batch_id")
+
+  /** The table at `path` read with `schema`, so planning it runs no Spark
+    * job; empty when nothing has been written there.
+    */
+  private def landed(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(Seq(path).filter(TierPipeline.exists(spark, _)): _*)
 
   /** Hot-layer garbage collection: once the cold cascade marks a (day,
     * host_bucket) partition complete in `tier_1m`, the streamed rows for that
@@ -125,36 +133,24 @@ object StreamingIngest {
     todo
   }
 
-  /** Serving view over the associative measures: batch `tier_1m` rows for
-    * every (day, host_bucket) partition the cold layer has marked complete,
-    * streamed rows for everything else. The split is the complete 1m set of
-    * the lineage [[TierPipeline.snapshot]] taken when the frame is built,
-    * applied to both layers as a partition filter — a partition is served
-    * from exactly one layer, so catch-up of the cold cascade never
-    * double-counts.
+  /** Serving view over the 1m tier, with [[graft.operators.Rollup.tierSchema]]'s
+    * columns: batch `tier_1m` rows for every (day, host_bucket) partition
+    * the cold layer has marked complete, streamed rows for everything else.
+    * Both layers carry the full tier row, so either serves exact p50/p95
+    * and the point block. The split is the complete 1m set of the lineage
+    * [[TierPipeline.snapshot]] taken when the frame is built, applied to
+    * both layers as a partition filter — a partition is served from exactly
+    * one layer, so catch-up of the cold cascade never double-counts.
     */
-  def readHot(spark: SparkSession, cfg: TierPipeline.Config,
-              groupCols: Seq[String] = Hier.Levels): DataFrame = {
-    val serveCols = (groupCols ++ Seq("bucket_start", "cnt", "sum_len",
-      "min_len", "max_len", "mean_len")).map(col)
-    def empty: DataFrame = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      Rollup.tierSchema(spark, groupCols)).select(serveCols: _*)
+  def readHot(spark: SparkSession, cfg: TierPipeline.Config): DataFrame = {
     val batchDone = parts(snapshot(spark, cfg.root), "1m")
-    val hot = if (!TierPipeline.exists(spark, streamTierPath(cfg.root))) empty else
-      TierPipeline.readParts(spark, streamTierPath(cfg.root))
-        .filter(!partIn(storedPart, batchDone))
-        .select(serveCols: _*)
-    val coldPath = TierPipeline.tierPath(cfg.root, "1m")
-    if (!TierPipeline.exists(spark, coldPath)) hot
-    else {
-      // cold side restricted to lineage-COMPLETE partitions: data written by
-      // a crashed batch run that never reached its lineage append must not be
-      // served (it will be overwritten on resume, and its partition is still
-      // served from the hot layer by the filter above)
-      val cold = TierPipeline.readStored(spark, cfg, "1m")
-        .filter(partIn(storedPart, batchDone))
-        .select(serveCols: _*)
-      cold.unionByName(hot)
-    }
+    val hot = readStreamTier(spark, cfg).filter(!partIn(storedPart, batchDone))
+    // cold side restricted to lineage-COMPLETE partitions: data written by a
+    // crashed batch run that never reached its lineage append must not be
+    // served (it will be overwritten on resume, and its partition is still
+    // served from the hot layer by the filter above)
+    val cold = landed(spark, TierPipeline.tierPath(cfg.root, "1m"), tierSchema(spark))
+      .filter(partIn(storedPart, batchDone))
+    cold.unionByName(hot).drop("day", "host_bucket")
   }
 }

@@ -14,33 +14,32 @@ import graft.operators.Rollup
   * and tier promotion (batch, [[graft.plans.TierPipeline]]) picks up only
   * closed buckets.
   *
-  * Measures are the associative subset (count/sum/min/max/mean + approximate
-  * lang cardinality): exact percentiles and Gorilla blocks are computed at
-  * promotion time from the closed 1m buckets, exactly as the batch path
-  * recomputes them from decoded blocks — streaming state stays tiny.
+  * Measures are [[Rollup]]'s raw-point list and finishing projection, so a
+  * closed bucket is the batch [[Rollup.tier1m]] row: exact p50/p95, the
+  * lang set and the point block included. The state of an open bucket is
+  * therefore its point buffer (as in the batch aggregate), held until the
+  * watermark closes the bucket.
   */
 object StreamingRollup {
 
-  /** 1-minute streaming aggregate. `pages` must be a streaming DataFrame with
-    * `warc_ts, text, lang` and the hierarchy columns already derived
+  /** 1-minute streaming aggregate with [[Rollup.tierSchema]]'s columns over
+    * [[graft.functions.Hier.Levels]]. `pages` must be a streaming DataFrame
+    * with `warc_ts, text, lang` and the hierarchy columns already derived
     * ([[graft.functions.Hier.withHierarchy]] works on streaming frames — pure
     * projections).
     *
     * @param watermark how long to keep a bucket open for late pages; after
     *                  this delay the bucket is final and appendable downstream
     */
-  def tier1mStream(pages: DataFrame, watermark: String = "5 minutes",
-                   groupCols: Seq[String] = Hier.Levels): DataFrame =
-    Rollup.textLen(pages)
+  def tier1mStream(pages: DataFrame, watermark: String = "5 minutes"): DataFrame = {
+    val hier = Hier.Levels.map(col)
+    val agg = pages.select((hier ++ (col("warc_ts") +: Rollup.pagePoints)): _*)
       .withWatermark("warc_ts", watermark)
-      .groupBy((groupCols.map(col) :+ window(col("warc_ts"), "1 minute").as("w")): _*)
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum(col("text_len")).as("sum_len"),
-        min(col("text_len")).as("min_len"),
-        max(col("text_len")).as("max_len"),
-        approx_count_distinct(col("lang")).as("lang_card_approx"))
-      .withColumn("bucket_start", unix_timestamp(col("w.start")))
-      .withColumn("mean_len", col("sum_len") / col("cnt"))
-      .drop("w")
+      .groupBy((hier :+ window(col("warc_ts"), "1 minute").as("w")): _*)
+      .agg(Rollup.rawPartial.head, Rollup.rawPartial.tail: _*)
+    Rollup.finish(agg.select(agg.columns.toSeq.map {
+      case "w" => unix_timestamp(col("w.start")).as("bucket_start")
+      case c   => col(c)
+    }: _*))
+  }
 }

@@ -293,29 +293,39 @@ class PipelineOpsSpec extends SparkSuite {
   test("HLL slidingDistinct: windowed estimate == direct union build; exact per bucket") {
     val rnd = new scala.util.Random(41L)
     val t0 = 1700000000L - 1700000000L % 600
-    val rows = (0 until 4000).map { i =>
+    val input = (0 until 4000).map { i =>
       ("g" + (i % 2), t0 + (i.toLong * 11) % 3600, s"u${rnd.nextInt(300)}")
-    }.toDF("g", "sec", "item").withColumn("ts", timestamp_seconds(col("sec")))
-    val out = Hll.slidingDistinct(rows, Seq("g"), "ts", "item",
-        bucketSeconds = 600L, k = 3)
-      .collect().map(r => ((r.getString(0), r.getLong(1)),
-        (r.getLong(2), r.getDouble(3)))).toMap
-    assert(out.nonEmpty)
-    val raw = rows.collect().map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-    out.foreach { case ((g, b), (bucketDistinct, est)) =>
-      val inBucket = raw.filter(x => x._1 == g && x._2 - x._2 % 600 == b)
-      assert(bucketDistinct == inBucket.map(_._3).distinct.length)
-      // direct union build over the trailing range — register-deterministic,
-      // so the estimate must match the windowed merge EXACTLY
-      val inWin = raw.filter(x =>
-        x._1 == g && x._2 - x._2 % 600 >= b - 1200 && x._2 - x._2 % 600 <= b)
-      val regs = new Array[Byte](Hll.M)
-      inWin.map(_._3).distinct.foreach(Hll.update(regs, _))
-      assert(Hll.estimate(regs) == est, s"($g,$b)")
-      // ...and the estimate is actually close to truth
-      val truth = inWin.map(_._3).distinct.length.toDouble
-      assert(math.abs(est - truth) / truth < 0.10, s"($g,$b) est=$est truth=$truth")
     }
+    val raw = input.toArray
+    // an item column named like a column the function could use inside must
+    // still be counted as the items
+    for (itemCol <- Seq("item", "_ts_sec")) {
+      val rows = input.toDF("g", "sec", itemCol).withColumn("ts", timestamp_seconds(col("sec")))
+      val out = Hll.slidingDistinct(rows, Seq("g"), "ts", itemCol,
+          bucketSeconds = 600L, k = 3)
+        .collect().map(r => ((r.getString(0), r.getLong(1)),
+          (r.getLong(2), r.getDouble(3)))).toMap
+      assert(out.nonEmpty)
+      out.foreach { case ((g, b), (bucketDistinct, est)) =>
+        val inBucket = raw.filter(x => x._1 == g && x._2 - x._2 % 600 == b)
+        assert(bucketDistinct == inBucket.map(_._3).distinct.length)
+        // direct union build over the trailing range — register-deterministic,
+        // so the estimate must match the windowed merge EXACTLY
+        val inWin = raw.filter(x =>
+          x._1 == g && x._2 - x._2 % 600 >= b - 1200 && x._2 - x._2 % 600 <= b)
+        val regs = new Array[Byte](Hll.M)
+        inWin.map(_._3).distinct.foreach(Hll.update(regs, _))
+        assert(Hll.estimate(regs) == est, s"($g,$b)")
+        // ...and the estimate is actually close to truth
+        val truth = inWin.map(_._3).distinct.length.toDouble
+        assert(math.abs(est - truth) / truth < 0.10, s"($g,$b) est=$est truth=$truth")
+      }
+    }
+    // a key named like the output bucket column is refused by name
+    val clash = intercept[IllegalArgumentException](Hll.slidingDistinct(
+      input.toDF("bucket_start", "sec", "item").withColumn("ts", timestamp_seconds(col("sec"))),
+      Seq("bucket_start"), "ts", "item", bucketSeconds = 600L, k = 3))
+    assert(clash.getMessage.contains("bucket_start"))
   }
 
   // ------------------------------------------------------ connected components

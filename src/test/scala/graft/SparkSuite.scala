@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
@@ -15,4 +15,11 @@ trait SparkSuite extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   def approxEq(a: Double, b: Double, tol: Double = 1e-9): Boolean =
     (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
+
+  /** `tier`'s rows on every column ([[graft.operators.Rollup.comparable]]),
+    * in a fixed order: two tiers' rows compare with `===`, and a row that
+    * appears twice shows.
+    */
+  def tierRows(tier: DataFrame): Seq[Seq[Any]] =
+    graft.operators.Rollup.comparable(tier).collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
 }

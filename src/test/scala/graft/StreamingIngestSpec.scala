@@ -24,8 +24,11 @@ class StreamingIngestSpec extends SparkSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  private val assoc = Seq("host", "bucket_start", "cnt", "sum_len", "min_len",
-    "max_len", "mean_len")
+  /** A schema's column names and SQL types: a file read reports every column
+    * nullable, so nullability is left out.
+    */
+  private def layout(s: org.apache.spark.sql.types.StructType): Seq[(String, String)] =
+    s.map(f => f.name -> f.dataType.sql)
 
   test("sink lands exactly the closed buckets, batch-parity, partitioned layout") {
     implicit val sqlCtx = spark.sqlContext
@@ -44,13 +47,12 @@ class StreamingIngestSpec extends SparkSuite {
       mem.addData(StreamPage("https://w0.site0.com/p/zz", ts(60), "y", "en"))
       q.processAllAvailable()
 
-      val landed = StreamingIngest.readStreamTier(spark, cfg)
-        .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
-      val batch = Rollup.tier1m(Hier.withHierarchy(pages.toDF()))
-        .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
-      assert(landed === batch) // all 0-4m buckets closed and landed, once each
-      // partition columns as the lineage names them: `day` a yyyy-MM-dd string
+      // all 0-4m buckets closed and landed, once each, equal to batch on
+      // every tier column
       val stream = StreamingIngest.readStreamTier(spark, cfg)
+      assert(tierRows(stream.drop("day", "host_bucket")) ===
+        tierRows(Rollup.tier1m(Hier.withHierarchy(pages.toDF()))))
+      // partition columns as the lineage names them: `day` a yyyy-MM-dd string
       assert(stream.schema("day").dataType === org.apache.spark.sql.types.StringType)
       assert(stream.select("day").distinct().collect().map(_.get(0)).toSeq === Seq("2024-01-01"))
 
@@ -79,21 +81,16 @@ class StreamingIngestSpec extends SparkSuite {
       StreamPage("https://a.one.com/1", ts(0, 10), "aaaa", "en"),
       StreamPage("https://b.two.com/2", ts(1, 20), "bb", "de"))
     val buckets = Rollup.tier1m(Hier.withHierarchy(pages.toDF()))
-      .drop("p50_len", "p95_len", "lang_set", "points_blob")
 
-    // Array-valued columns (point blobs) use reference equality — normalize
-    // to Seq so set comparison is structural
-    def rows(): Set[Seq[Any]] = StreamingIngest.readStreamTier(spark, cfg)
-      .collect().map(_.toSeq.map {
-        case a: Array[Byte] => a.toSeq
-        case x => x
-      }).toSet
+    def rows(): Seq[Seq[Any]] =
+      tierRows(StreamingIngest.readStreamTier(spark, cfg).drop("day", "host_bucket"))
     StreamingIngest.ingestBatch(buckets, cfg, "runB", batchId = 7L)
     val once = rows()
     // crash-replay of the SAME micro-batch: same id, same data
     StreamingIngest.ingestBatch(buckets, cfg, "runB", batchId = 7L)
     val twice = rows()
     assert(twice === once)
+    assert(once === tierRows(buckets))
     // lineage not double-appended either
     val lin = TierPipeline.lineage(spark, root)
       .filter(col("run_id") === "runB#7").collect()
@@ -128,18 +125,17 @@ class StreamingIngestSpec extends SparkSuite {
     TierPipeline.buildAll(Hier.withHierarchy(day1.toDF()), cfg, "cold-run")
 
     val served = StreamingIngest.readHot(spark, cfg)
-      .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
-    val expected = Rollup.tier1m(Hier.withHierarchy((day1 ++ day2).toDF()))
-      .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
-    assert(served === expected) // no partition dropped, none double-counted
+    assert(layout(served.schema) === layout(Rollup.tierSchema(spark, Hier.Levels)))
+    val expected = tierRows(Rollup.tier1m(Hier.withHierarchy((day1 ++ day2).toDF())))
+    // no partition dropped, none double-counted, every tier column (exact
+    // p50/p95 and blocks included) equal to batch from either layer
+    assert(tierRows(served) === expected)
 
     // hot-layer GC: day-1 stream partitions are superseded by the cold layer
     // — pruning deletes them without changing any served result
     val prunedParts = StreamingIngest.pruneStreamTier(spark, cfg, "gc-run")
     assert(prunedParts.nonEmpty && prunedParts.forall(_._1 == "2024-01-01"))
-    val afterPrune = StreamingIngest.readHot(spark, cfg)
-      .select(assoc.map(col): _*).collect().map(_.toSeq).toSet
-    assert(afterPrune === expected)
+    assert(tierRows(StreamingIngest.readHot(spark, cfg)) === expected)
     // day-1 dirs are physically gone; day-2 (hot-only) dirs remain
     val streamDays = new java.io.File(StreamingIngest.streamTierPath(root))
       .listFiles().filter(_.isDirectory).map(_.getName).toSet
@@ -151,6 +147,7 @@ class StreamingIngestSpec extends SparkSuite {
     // anti-joined away because batch lineage marks those partitions complete
     val hotOnly = StreamingIngest.readHot(spark, TierPipeline.Config(tmp("empty_cold")))
     assert(hotOnly.collect().isEmpty) // empty stream store + no cold layer
+    assert(layout(hotOnly.schema) === layout(Rollup.tierSchema(spark, Hier.Levels)))
   }
 
   test("readHot over a store with no stream tier serves exactly its complete 1m rows") {
@@ -164,14 +161,9 @@ class StreamingIngestSpec extends SparkSuite {
     assert(!TierPipeline.exists(spark, StreamingIngest.streamTierPath(cfg.root)))
 
     val served = StreamingIngest.readHot(spark, cfg)
-    val cols = Hier.Levels ++ assoc.tail
-    val stored = TierPipeline.readStored(spark, cfg, "1m").select(cols.map(col): _*)
-    assert(served.schema.map(f => (f.name, f.dataType)) ===
-      stored.schema.map(f => (f.name, f.dataType)))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
-    assert(rows(served) === rows(stored))
-    assert(rows(served) === rows(Rollup.tier1m(Hier.withHierarchy(pages.toDF()))))
-    assert(rows(served).length === pages.length) // one host per page
+    assert(layout(served.schema) === layout(Rollup.tierSchema(spark, Hier.Levels)))
+    assert(tierRows(served) === tierRows(TierPipeline.readTier(spark, cfg, "1m").drop("day")))
+    assert(tierRows(served) === tierRows(Rollup.tier1m(Hier.withHierarchy(pages.toDF()))))
+    assert(served.count() === pages.length) // one host per page
   }
 }

@@ -4,10 +4,12 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.functions.Hier
+import graft.operators.Rollup
 import graft.streaming.StreamingRollup
 
-/** Streaming 1m aggregate == batch 1m aggregate on the same pages (for the
-  * associative measures), including a late-arrival update within watermark.
+/** Streaming 1m aggregate == batch 1m aggregate on the same pages, on every
+  * tier column (exact percentiles, lang set and point block included),
+  * including a late-arrival update within watermark.
   */
 case class StreamPage(url: String, warc_ts: Timestamp, text: String, lang: String)
 
@@ -37,14 +39,8 @@ class StreamingRollupSpec extends SparkSuite {
       mem.addData(late)
       q.processAllAvailable()
 
-      val streamed = spark.table("t1m_stream")
-        .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "mean_len")
-        .collect().map(r => r.toSeq).toSet
-      val batch = graft.operators.Rollup.tier1m(
-          Hier.withHierarchy((batch1 :+ late).toDF()))
-        .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "mean_len")
-        .collect().map(r => r.toSeq).toSet
-      assert(streamed === batch)
+      val streamed = tierRows(spark.table("t1m_stream"))
+      assert(streamed === tierRows(Rollup.tier1m(Hier.withHierarchy((batch1 :+ late).toDF()))))
       // the late row really landed in the minute-0 bucket
       val m0 = spark.table("t1m_stream")
         .filter(col("host") === "w1.site1.com" && col("bucket_start") === 1704067200L)
@@ -152,14 +148,13 @@ class StreamingRollupSpec extends SparkSuite {
       mem.addData(Page("https://w0.site0.com/p/zz", ts(60, 0), "y", "en"))
       q.processAllAvailable()
 
-      val closed = spark.table("t1m_parity")
-        .filter(col("bucket_start") < 1704067200L + 5 * 60) // the 0-4m buckets, all closed
-        .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "mean_len")
-        .collect().map(_.toSeq).toSet
-      val batch = graft.operators.Rollup.tier1m(Hier.withHierarchy(pages.toDF()))
-        .select("host", "bucket_start", "cnt", "sum_len", "min_len", "max_len", "mean_len")
-        .collect().map(_.toSeq).toSet
-      // every 0-4m bucket was emitted exactly once and matches batch §2.4
+      val parity = spark.table("t1m_parity")
+      assert(parity.columns.toSeq === Rollup.tierSchema(spark, Hier.Levels).fieldNames.toSeq)
+      // the 0-4m buckets, all closed
+      val closed = tierRows(parity.filter(col("bucket_start") < 1704067200L + 5 * 60))
+      val batch = tierRows(Rollup.tier1m(Hier.withHierarchy(pages.toDF())))
+      // every 0-4m bucket was emitted exactly once and matches batch §2.4 on
+      // every column: exact p50/p95, lang_card, sorted lang_set, block SHA
       assert(closed === batch)
     } finally q.stop()
   }

@@ -221,8 +221,13 @@ class TierRouteSpec extends SparkSuite {
       .agg(count(lit(1)).as("cnt"),
         sum(length(col("text")).cast("double")).as("sum_len"),
         avg(length(col("text"))).as("mean_len"),
-        percentile(length(col("text")), lit(0.5)).as("p50_len"))
+        percentile(length(col("text")), lit(0.5)).as("p50_len"),
+        percentile(length(col("text")), lit(0.95)).as("p95_len"))
       .orderBy("host", "bucket_start")
+    // TierRoute's scaladoc: for a nonnegative integer-valued measure (these
+    // character counts) a routed percentile is within 4 ulps of Spark's
+    def withinBound(r: Double, s: Double): Boolean =
+      math.abs(r - s) <= 4 * Math.ulp(math.max(math.abs(r), math.abs(s)))
     withRoutes(pagesRoute) {
       val routed = q(rawPages)
       assert(scannedPaths(routed).exists(_.contains(tierDir)), "pages query not routed")
@@ -233,9 +238,9 @@ class TierRouteSpec extends SparkSuite {
       got.zip(exp).foreach { case (g, e) =>
         assert(g.getString(0) === e.getString(0))
         assert(g.getLong(2) === e.getLong(2))
-        assert(approxEq(g.getDouble(3), e.getDouble(3)))
+        assert(g.getDouble(3) === e.getDouble(3)) // integer-valued: exact sum
         assert(approxEq(g.getDouble(4), e.getDouble(4)))
-        assert(approxEq(g.getDouble(5), e.getDouble(5)))
+        for (i <- Seq(5, 6)) assert(withinBound(g.getDouble(i), e.getDouble(i)), s"$g vs $e")
       }
       // utf8_char_count spelling routes too
       TierRoute.register(pagesRoute)
