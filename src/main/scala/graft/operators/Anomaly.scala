@@ -134,10 +134,10 @@ object Anomaly {
     * (fixed-window) both dilute; `slack` (the "allowance" k, typically 0.5 =
     * half the shift-to-detect in σ units) absorbs in-control noise.
     *
-    * The recursion is inherently sequential per series — same licensing as
-    * the EWMA/Holt folds (SURVEY §2.11): one `collect_list` per key bounded
-    * by [[Ewma.maxSeriesPoints]] (point a TIER at it, not raw events), the
-    * fold a primitive O(n) pass, results exploded back to one row per point.
+    * The recursion is inherently sequential per series — a [[SeriesFold]]
+    * like the EWMA/Holt folds (SURVEY §2.11): one `collect_list` per key
+    * under the folds' one point bound (point a TIER at it, not raw events),
+    * the fold a primitive O(n) pass, results exploded back to one row per point.
     * One shuffle on the keys; the moments reuse a grouped agg + key join.
     *
     * Output: (keys, ts-sec, tie, z, cusum_pos, cusum_neg, is_drift).
@@ -149,10 +149,7 @@ object Anomaly {
     val keys = keyCols.map(col)
     val v = col(valCol).cast("double")
     val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"CUSUM series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val sorted = pts.sortBy(p => (p.getLong(0), p.getLong(1)))
+      val sorted = SeriesFold.guard(pts).sortBy(p => (p.getLong(0), p.getLong(1)))
       var sp = 0.0; var sn = 0.0
       sorted.map { p =>
         val z = p.getDouble(2)
@@ -163,14 +160,12 @@ object Anomaly {
     }
     val moments = df.filter(v.isNotNull).groupBy(keys: _*)
       .agg(avg(v).as("_mu"), stddev_pop(v).as("_sd"))
-    df.filter(v.isNotNull)
+    val scored = df.filter(v.isNotNull)
       .join(moments, keyCols)
       .withColumn("_z", when(col("_sd") > 0, (v - col("_mu")) / col("_sd"))
         .otherwise(lit(0.0)))
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(
-        unix_timestamp(col(tsCol)).as("t"), col(tieCol).cast("long").as("i"),
-        col("_z").as("z"))).as("_pts"))
+    SeriesFold.collect(scored, keyCols, Seq(unix_timestamp(col(tsCol)).as("t"),
+        col(tieCol).cast("long").as("i"), col("_z").as("z")))
       .withColumn("_r", explode(foldUdf(col("_pts"))))
       .select((keys ++ Seq(col("_r._1").as("ts_sec"), col("_r._2").as("tie"),
         col("_r._3").as("z"), col("_r._4").as("cusum_pos"),
@@ -356,8 +351,8 @@ object Anomaly {
     * bit-exact in any engine; true log-likelihood float costs work but put
     * near-tie path choices at the mercy of last-ulp libm agreement.
     *
-    * Per-key fold under the same series-size guard as [[cusum]]/EWMA — run
-    * it on TIER buckets, never raw events. Output: input keys + `ts_sec`,
+    * A per-key [[SeriesFold]] under the same point bound as [[cusum]]/EWMA —
+    * run it on TIER buckets, never raw events. Output: input keys + `ts_sec`,
     * both running costs, and `burst` (the Viterbi state).
     */
   def burstSegments(df: DataFrame, keyCols: Seq[String], tsCol: String,
@@ -366,10 +361,7 @@ object Anomaly {
     val keys = keyCols.map(col)
     val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row], gamma: Double) =>
       require(gamma >= 0, s"burstSegments: gamma must be >= 0, got $gamma")
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"burst series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val sorted = pts.sortBy(_.getLong(0)).toArray
+      val sorted = SeriesFold.guard(pts).sortBy(_.getLong(0)).toArray
       val n = sorted.length
       val c0 = new Array[Double](n); val c1 = new Array[Double](n)
       // fromBase(i): the min in c1_i's recurrence came from state 0
@@ -402,12 +394,9 @@ object Anomaly {
       sorted.indices.map(k =>
         (sorted(k).getLong(0), c0(k), c1(k), state(k) == 1))
     }
-    df.withColumn("_gamma", gammaCol.cast("double"))
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(
-        col(tsCol).cast("long").as("t"),
-        col(e0Col).cast("double").as("e0"),
-        col(e1Col).cast("double").as("e1"))).as("_pts"),
+    SeriesFold.collect(df.withColumn("_gamma", gammaCol.cast("double")), keyCols,
+        Seq(col(tsCol).cast("long").as("t"), col(e0Col).cast("double").as("e0"),
+          col(e1Col).cast("double").as("e1")),
         first(col("_gamma")).as("_g"))
       .withColumn("_r", explode(foldUdf(col("_pts"), col("_g"))))
       .select((keys ++ Seq(col("_r._1").as("ts_sec"),

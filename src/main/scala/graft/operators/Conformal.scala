@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one hash shuffle on the keys; the per-key window sort runs
   * over a two-column (key, residual) frame, so a key's calibration set must
   * fit one task — calibration windows are bounded by construction (a recent
-  * time slice per entity), same bound class as [[Ewma.maxSeriesPoints]].
+  * time slice per entity), same bound class as a [[SeriesFold]]'s series.
   * The fitted frame is one row per key: [[applyBands]]' join broadcasts
   * under AQE. The reference has no interval machinery at all — this plugs
   * its gap the same way [[Metrics.intervalScore]] scores the result

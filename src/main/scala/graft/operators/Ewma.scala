@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * advance the position).
   *
   * No Spark builtin exists (SURVEY.md §2.11): the recursion is order-
-  * dependent. Realized as one `collect_list(struct(ts,x))` per series +
-  * a linear-time pass, exploded back — per-series state never crosses rows,
-  * so the operator scales out across series (the grouping key). Series
+  * dependent. Realized as a [[SeriesFold]]: one `collect_list(struct(ts,x))`
+  * per series + a linear-time pass, exploded back — per-series state never
+  * crosses rows, so the operator scales out across series (the grouping
+  * key). Series
   * length is bounded by the rolled-up tier cardinality (buckets per series),
   * not raw pages, keeping per-group memory O(series length).
   */
@@ -57,22 +58,18 @@ object Ewma {
     sorted.map(_._1).zip(out)
   }
 
-  /** Per-series point bound: a series longer than this almost certainly means
-    * the caller pointed the EWMA at RAW events instead of a rolled-up tier
-    * (the intended input — series length = buckets per series, e.g. ≤ ~525k
-    * minutes/year). Failing fast with a diagnostic beats an executor OOM from
-    * one `collect_list` group. Override via [[maxSeriesPoints]].
+  /** Per-series point bound of every [[SeriesFold]] (EWMA, Kalman, CUSUM,
+    * the fold forecasters, ...): a series longer than this almost certainly
+    * means the caller pointed the fold at RAW events instead of a rolled-up
+    * tier (the intended input — series length = buckets per series, e.g.
+    * ≤ ~525k minutes/year). Only [[SeriesFold.guard]] reads it.
     */
   @volatile var maxSeriesPoints: Int = 2000000
 
   private def ewmaMultiUdf(spans: Seq[Double], lagRows: Int, minPeriods: Int,
                            adjust: Boolean): UserDefinedFunction =
     udf { (pts: Seq[Row]) =>
-      require(pts.size <= maxSeriesPoints,
-        s"EWMA series has ${pts.size} points (> maxSeriesPoints=$maxSeriesPoints). " +
-          "EWMA input should be a rolled-up tier, not raw events — aggregate to " +
-          "time buckets first, or raise Ewma.maxSeriesPoints if the length is intended.")
-      val pairs = pts.map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      val pairs = SeriesFold.pairs(pts)
       val perSpan = spans.map(s => ewmaSeries(pairs, s, lagRows, minPeriods, adjust))
       perSpan.head.indices.map { i =>
         EwmaPointN(perSpan.head(i)._1,
@@ -91,28 +88,12 @@ object Ewma {
   def ewmaSeriesFrame(df: DataFrame, hierarchy: Seq[String], tsCol: String, valueCol: String,
                       spans: Seq[Double], lagRows: Int = 1, minPeriods: Int = 1,
                       adjust: Boolean = true): DataFrame = {
-    val series = df
-      .groupBy(hierarchy.map(col): _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valueCol).cast("double").as("x"))).as("pts"))
-      .withColumn("e", explode(ewmaMultiUdf(spans, lagRows, minPeriods, adjust)(col("pts"))))
+    val series = SeriesFold.collect(df, hierarchy, SeriesFold.timeValue(tsCol, valueCol))
+      .withColumn("e", explode(ewmaMultiUdf(spans, lagRows, minPeriods, adjust)(col("_pts"))))
       .select((hierarchy.map(col) :+ col("e.ts").as("ts_sec") :+ col("e.ys").as("_ys")): _*)
     spans.zipWithIndex.foldLeft(series) { case (d, (s, i)) =>
       d.withColumn(s"${valueCol}_ewma${s.toInt}", col("_ys").getItem(i))
     }.drop("_ys")
-  }
-
-  /** Adds `<valueCol>_ewma<span>` per (hierarchy, tsCol) series, preserving
-    * the input columns (one join of the input against the series frame).
-    */
-  def ewma(df: DataFrame, hierarchy: Seq[String], tsCol: String, valueCol: String,
-           span: Double, lagRows: Int = 1, minPeriods: Int = 1, adjust: Boolean = true): DataFrame = {
-    val series = ewmaSeriesFrame(df, hierarchy, tsCol, valueCol, Seq(span),
-      lagRows, minPeriods, adjust)
-      .withColumnRenamed("ts_sec", "_ets")
-    df.withColumn("_ets", unix_timestamp(col(tsCol)))
-      .join(series, hierarchy :+ "_ets", "left")
-      .drop("_ets")
   }
 
   /** Exponentially-weighted mean AND variance (pandas `ewm(span,
@@ -149,23 +130,17 @@ object Ewma {
 
   /** Per-series EWM mean/var/std frame: (hierarchy..., ts_sec, ewm_mean,
     * ewm_var, ewm_std) — the same one-collect_list-per-series shape as
-    * [[ewmaSeriesFrame]], with the [[maxSeriesPoints]] guard.
+    * [[ewmaSeriesFrame]] ([[SeriesFold]]).
     */
   def ewmVarFrame(df: DataFrame, hierarchy: Seq[String], tsCol: String,
                   valueCol: String, span: Double, minPeriods: Int = 1): DataFrame = {
     val u = udf { (pts: Seq[Row]) =>
-      require(pts.size <= maxSeriesPoints,
-        s"EWM series has ${pts.size} points (> maxSeriesPoints=$maxSeriesPoints). " +
-          "Aggregate to time buckets first.")
-      val pairs = pts.map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1))))
-      ewmVarSeries(pairs, span, minPeriods).map { case (t, m, v) =>
+      ewmVarSeries(SeriesFold.pairs(pts), span, minPeriods).map { case (t, m, v) =>
         EwmaVarPoint(t, m.map(Double.box).orNull, v.map(Double.box).orNull)
       }
     }
-    df.groupBy(hierarchy.map(col): _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valueCol).cast("double").as("x"))).as("pts"))
-      .withColumn("e", explode(u(col("pts"))))
+    SeriesFold.collect(df, hierarchy, SeriesFold.timeValue(tsCol, valueCol))
+      .withColumn("e", explode(u(col("_pts"))))
       .select((hierarchy.map(col) :+ col("e.ts").as("ts_sec") :+
         col("e.m").as("ewm_mean") :+ col("e.v").as("ewm_var")): _*)
       .withColumn("ewm_std", sqrt(col("ewm_var")))

@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Statistical baseline forecasters: seasonal-naive and drift, with
-  * residual-based prediction intervals.
+/** Statistical baseline forecasters with the reference's model-selection
+  * layer ([[rollingOriginSelect]]), plus the series diagnostics a model
+  * choice reads (AR(2), Granger, variance ratio, Dickey–Fuller) and
+  * top-down reconciliation.
   *
   * The reference's model layer fits LightGBM/Prophet
   * (/root/reference/forecastframe/model.py:802-953 — scoped out per SURVEY
@@ -13,27 +16,84 @@ import org.apache.spark.sql.functions._
   * needs the classical baselines the models must beat, and THOSE are pure
   * relational algebra — they belong in the engine. Semantics follow the
   * standard definitions (Hyndman & Athanasopoulos, "Forecasting: Principles
-  * and Practice", §5.2 — public):
-  *   - seasonal naive: ŷ(T+s) = y(T + s − m·⌈s/m⌉)   (last same-season value)
-  *   - drift:          ŷ(T+s) = y(T) + s·(y(T) − y(1))/(T−1)
-  *
-  * Scale design: no per-key collect, no cross join with history.
-  *   - snaive: the future frame (keys × 1..h rows — tiny) computes each
-  *     step's SOURCE timestamp arithmetically, then equi-joins history on
-  *     (key, source_ts): one broadcast-able equi-join, pushdown-friendly,
-  *     instead of a range join or per-key window over history+future.
-  *   - drift: one groupBy over history (map-side partial min/max by ts via
-  *     min_by/max_by) + explode(1..h) — history is touched exactly once.
-  *   - intervals: residual σ per key from the same single history pass
-  *     (stddev of the m-lag difference), widened by √⌈s/m⌉ as the naive
-  *     variance grows with steps-ahead (same Hyndman §5.5 shape).
+  * and Practice" — public). The family:
+  *   - closed form, no per-key collect: [[seasonalNaive]], [[drift]],
+  *     [[ses]], [[theta]], [[croston]], [[sba]], [[tsb]], [[greyGm11]]. The
+  *     SES-style levels are geometric weighted sums (one window rank + one
+  *     aggregate); drift is one min_by/max_by aggregate; seasonal naive
+  *     equi-joins each step's source timestamp back onto history.
+  *   - per-key fold: [[holt]], [[holtDamped]], [[holtWinters]],
+  *     [[holtWintersMul]]. Their coupled recursions have no geometric
+  *     closed form, so each runs as a [[SeriesFold]] (one `collect_list`
+  *     per key, an O(n) pass in time order, the one point bound) through
+  *     one shared skeleton, each with its own recursion.
+  * Every keyed forecaster ends in the same future frame: each key's origin
+  * (its last observation) expanded to steps 1..horizon, with
+  * `forecast_ts` = origin + step·stepSeconds, and outputs
+  * (keys..., forecast_ts, step, yhat). Seasonal naive adds residual-based
+  * ±z·σ̂·√⌈s/m⌉ intervals (Hyndman §5.5).
   *
   * Inputs are a REGULAR per-key series (run [[GapFill]] first): `tsCol`
   * spaced exactly `stepSeconds` apart within each key.
   */
 object Forecast {
 
-  /** Seasonal-naive forecast with ±z·σ̂·√⌈s/m⌉ prediction intervals.
+  private def requireWeight(name: String, v: Double): Unit =
+    require(v > 0 && v <= 1, s"$name must be in (0, 1], got $v")
+
+  /** The future frame: each `perKey` row repeated for step = 1..horizon,
+    * with `forecast_ts` = the `origin` timestamp + step·stepSeconds.
+    */
+  private def future(perKey: DataFrame, origin: String, horizon: Int,
+                     stepSeconds: Long): DataFrame = {
+    require(horizon >= 1 && stepSeconds >= 1,
+      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
+    perKey
+      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
+      .withColumn("forecast_ts",
+        timestamp_seconds(unix_timestamp(col(origin)) + col("step") * stepSeconds))
+  }
+
+  /** [[future]] in the forecasters' output shape: (keys..., forecast_ts, step, yhat). */
+  private def forecastFrame(perKey: DataFrame, keyCols: Seq[String], origin: String,
+                            horizon: Int, stepSeconds: Long, yhat: Column): DataFrame =
+    future(perKey, origin, horizon, stepSeconds)
+      .select((keyCols.map(col) :+ col("forecast_ts") :+ col("step") :+ yhat.as("yhat")): _*)
+
+  /** Weight of an observation `back` steps before the last one in the SES
+    * closed form with l₁ = y₁: (1−α)^back for the first observation,
+    * α·(1−α)^back for every later one.
+    */
+  private def sesWeight(isFirst: Column, back: Column, alpha: Double): Column =
+    when(isFirst, pow(lit(1.0 - alpha), back))
+      .otherwise(lit(alpha) * pow(lit(1.0 - alpha), back))
+
+  /** The fold forecasters' skeleton: each key's non-null observations
+    * collected ([[SeriesFold]]), folded in time order into a state `_st`
+    * (`None` drops the key), then the future frame from the key's last
+    * observation, with `yhat` computed from `_st` and `step`.
+    */
+  private def foldForecast[S: TypeTag](history: DataFrame, keyCols: Seq[String],
+                                       tsCol: String, valCol: String, horizon: Int,
+                                       stepSeconds: Long, yhat: Column)(
+      fold: Array[Double] => Option[S]): DataFrame = {
+    val foldUdf = udf((pts: Seq[Row]) => fold(SeriesFold.values(pts)))
+    val perKey = SeriesFold.collect(history.filter(col(valCol).isNotNull), keyCols,
+        SeriesFold.timeValue(tsCol, valCol), max(col(tsCol)).as("_last_ts"))
+      .withColumn("_st", foldUdf(col("_pts")))
+      .filter(col("_st").isNotNull)
+    forecastFrame(perKey, keyCols, "_last_ts", horizon, stepSeconds, yhat)
+  }
+
+  /** Seasonal-naive forecast with ±z·σ̂·√⌈s/m⌉ prediction intervals:
+    * ŷ(T+s) = y(T + s − m·⌈s/m⌉), the last same-season value.
+    *
+    * One pass over history gives the last timestamp and the residual σ per
+    * key (stddev of the m-lag difference, widened by √⌈s/m⌉ as the naive
+    * variance grows with steps ahead). The future frame computes each
+    * step's SOURCE timestamp arithmetically, then equi-joins history on
+    * (key, source_ts): one broadcast-able equi-join instead of a range join
+    * or a per-key window over history+future.
     *
     * @param period      season length m, in steps
     * @param horizon     number of future steps to emit (1..horizon)
@@ -43,8 +103,7 @@ object Forecast {
   def seasonalNaive(history: DataFrame, keyCols: Seq[String], tsCol: String,
                     valCol: String, period: Int, horizon: Int,
                     stepSeconds: Long, z: Double = 1.96): DataFrame = {
-    require(period >= 1 && horizon >= 1 && stepSeconds >= 1,
-      s"period/horizon/stepSeconds must be >= 1, got $period/$horizon/$stepSeconds")
+    require(period >= 1, s"period must be >= 1, got $period")
     val keys = keyCols.map(col)
 
     // one pass over history: last timestamp + m-lag residual spread per key
@@ -56,11 +115,8 @@ object Forecast {
       .agg(max(col(tsCol)).as("_last_ts"),
         coalesce(stddev_samp(col("_resid")), lit(0.0)).as("_sigma"))
 
-    // future frame: step s forecasts from source ts = T + (s − m·⌈s/m⌉)·Δ
-    val future = perKey
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
+    // step s forecasts from source ts = T + (s − m·⌈s/m⌉)·Δ
+    val fut = future(perKey, "_last_ts", horizon, stepSeconds)
       .withColumn("_k", ceil(col("step").cast("double") / period).cast("long"))
       .withColumn("_src_ts",
         timestamp_seconds(unix_timestamp(col("_last_ts")) +
@@ -68,16 +124,13 @@ object Forecast {
 
     val src = history.select((keys :+ col(tsCol).as("_src_ts")
       :+ col(valCol).as("yhat")): _*)
-    future.join(src, keyCols :+ "_src_ts", "left")
+    fut.join(src, keyCols :+ "_src_ts", "left")
       .withColumn("lo", col("yhat") - lit(z) * col("_sigma") * sqrt(col("_k")))
       .withColumn("hi", col("yhat") + lit(z) * col("_sigma") * sqrt(col("_k")))
       .select((keys :+ col("forecast_ts") :+ col("step")
         :+ col("yhat") :+ col("lo") :+ col("hi")): _*)
   }
 
-  /** Drift forecast: the line through the first and last observation,
-    * extrapolated `horizon` steps. One aggregate pass + explode.
-    */
   /** Grey GM(1,1) forecast (Deng 1982) — the small-sample trend model of
     * grey-systems theory, built for series far too short for ARIMA: with
     * the accumulated series x1_k = Σ_{i≤k} x0_i and adjacent means
@@ -128,26 +181,24 @@ object Forecast {
       .select(col("step"), col("yhat"))
   }
 
+  /** Drift forecast: the line through the first and last observation,
+    * extrapolated `horizon` steps — ŷ(T+s) = y(T) + s·(y(T) − y(1))/(T−1).
+    * One aggregate pass over history (map-side partial min_by/max_by by
+    * ts) + the future frame.
+    */
   def drift(history: DataFrame, keyCols: Seq[String], tsCol: String,
             valCol: String, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
-    val keys = keyCols.map(col)
-    history
-      .groupBy(keys: _*)
+    val perKey = history
+      .groupBy(keyCols.map(col): _*)
       .agg(
         min_by(col(valCol), col(tsCol)).as("_y1"),
         max_by(col(valCol), col(tsCol)).as("_yT"),
         max(col(tsCol)).as("_last_ts"),
         count(lit(1)).as("_n"))
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat",
-        when(col("_n") > 1,
-          col("_yT") + col("step") * (col("_yT") - col("_y1")) / (col("_n") - 1))
-          .otherwise(col("_yT")))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
+    forecastFrame(perKey, keyCols, "_last_ts", horizon, stepSeconds,
+      when(col("_n") > 1,
+        col("_yT") + col("step") * (col("_yT") - col("_y1")) / (col("_n") - 1))
+        .otherwise(col("_yT")))
   }
 
   /** Simple-exponential-smoothing forecast (Hyndman §8.1, adjust=False /
@@ -169,9 +220,7 @@ object Forecast {
     */
   def ses(history: DataFrame, keyCols: Seq[String], tsCol: String,
           valCol: String, alpha: Double, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
+    requireWeight("alpha", alpha)
     val keys = keyCols.map(col)
     val obs = history.filter(col(valCol).isNotNull)
     // rank-from-the-end gives the exponent (T−t) directly; the ascending rank
@@ -183,16 +232,10 @@ object Forecast {
       .withColumn("_back", row_number().over(wDesc) - 1) // T−t: 0 for last row
       .withColumn("_rn", row_number().over(w))
     val lvl = weighted
-      .withColumn("_w",
-        when(col("_rn") === 1, pow(lit(1.0 - alpha), col("_back")))
-          .otherwise(lit(alpha) * pow(lit(1.0 - alpha), col("_back"))))
+      .withColumn("_w", sesWeight(col("_rn") === 1, col("_back"), alpha))
       .groupBy(keys: _*)
       .agg(sum(col("_w") * col(valCol)).as("level"), max(col(tsCol)).as("_last_ts"))
-    lvl
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("level").as("yhat")): _*)
+    forecastFrame(lvl, keyCols, "_last_ts", horizon, stepSeconds, col("level"))
   }
 
   /** Theta method (Assimakopoulos & Nikolopoulos 2000; the M3-competition
@@ -213,9 +256,7 @@ object Forecast {
     */
   def theta(history: DataFrame, keyCols: Seq[String], tsCol: String,
             valCol: String, alpha: Double, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
+    requireWeight("alpha", alpha)
     val keys = keyCols.map(col)
     val wp = Window.partitionBy(keys: _*)
     val w = Window.partitionBy(keys: _*).orderBy(col(tsCol))
@@ -238,67 +279,49 @@ object Forecast {
     // SES closed form over the theta-2 line z_t = 2y_t − (a + b·t)
     val withW = withOls
       .withColumn("_z", lit(2.0) * col("_y") - (col("_a") + col("_b") * col("_t")))
-      .withColumn("_w",
-        when(col("_t") === 1.0, pow(lit(1.0 - alpha), col("_back")))
-          .otherwise(lit(alpha) * pow(lit(1.0 - alpha), col("_back"))))
+      .withColumn("_w", sesWeight(col("_t") === 1.0, col("_back"), alpha))
     val lvl = withW
       .groupBy(keys: _*)
       .agg(sum(col("_w") * col("_z")).as("_l"),
         max(col(tsCol)).as("_last_ts"),
         max(col("_n")).as("_T"), max(col("_a")).as("_a"), max(col("_b")).as("_b"))
-    lvl
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat",
-        ((col("_a") + col("_b") * (col("_T") + col("step"))) + col("_l")) / 2.0)
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
+    forecastFrame(lvl, keyCols, "_last_ts", horizon, stepSeconds,
+      ((col("_a") + col("_b") * (col("_T") + col("step"))) + col("_l")) / 2.0)
   }
 
-  /** Holt's linear-trend method (Hyndman §8.2, standard init l₁ = y₁,
-    * b₁ = y₂ − y₁, recursion from t = 2):
-    *   l_t = α·y_t + (1−α)·(l_{t−1} + b_{t−1})
-    *   b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
-    *   ŷ(T+s) = l_T + s·b_T
-    *
-    * Unlike SES, the coupled (l, b) recursion has no geometric closed form
-    * (the observation weights are entries of a 2×2 matrix power), so this is
-    * the one forecaster realized as a per-key linear fold over the sorted
-    * series — the same licensed pattern as [[Ewma]] (SURVEY §2.11): one
-    * `collect_list` per key, O(series) fold, state never crosses keys, and
-    * the [[Ewma.maxSeriesPoints]] guard applies (the intended input is a
-    * rolled-up tier, not raw events). Keys with < 2 points are dropped
-    * (b₁ undefined).
-    */
   /** Damped-trend Holt (Hyndman §8.2 "damped trend methods"): the φ-damped
     * variant that stops linear trends from extrapolating to infinity —
     *   l_t = α·y_t + (1−α)·(l_{t−1} + φ·b_{t−1})
     *   b_t = β·(l_t − l_{t−1}) + (1−β)·(φ·b_{t−1})
     *   ŷ(T+s) = l_T + (φ + φ² + … + φˢ)·b_T
-    * the horizon multiplier in closed form φ(1−φˢ)/(1−φ) (s itself at φ=1,
-    * where the method degenerates to [[holt]]). Same licensed per-key fold
-    * and guards as [[holt]].
+    * from l₁ = y₁, b₁ = y₂ − y₁, with the horizon multiplier in closed form
+    * φ(1−φˢ)/(1−φ) (s itself at φ = 1, where the method is [[holt]]).
+    *
+    * The coupled (l, b) recursion has no geometric closed form (the
+    * observation weights are entries of a 2×2 matrix power), so it runs as
+    * a per-key [[SeriesFold]] over the sorted series, like the other fold
+    * forecasters ([[holtWinters]], [[holtWintersMul]]): one `collect_list`
+    * per key, O(series) fold, state never crosses keys, and the one point
+    * bound applies (the intended input is a rolled-up tier, not raw
+    * events). Keys with < 2 points are dropped (b₁ undefined).
     */
   def holtDamped(history: DataFrame, keyCols: Seq[String], tsCol: String,
                  valCol: String, alpha: Double, beta: Double, phi: Double,
                  horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(beta > 0 && beta <= 1, s"beta must be in (0, 1], got $beta")
-    require(phi > 0 && phi <= 1, s"phi must be in (0, 1], got $phi")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
-    val keys = keyCols.map(col)
-    val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"Holt series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val ys = pts.sortBy(_.getLong(0)).map(_.getDouble(1))
-      if (ys.size < 2) None
+    requireWeight("alpha", alpha)
+    requireWeight("beta", beta)
+    requireWeight("phi", phi)
+    val phiSum =
+      if (phi == 1.0) col("step").cast("double")
+      else lit(phi) * (lit(1.0) - pow(lit(phi), col("step"))) / lit(1.0 - phi)
+    foldForecast(history, keyCols, tsCol, valCol, horizon, stepSeconds,
+      col("_st._1") + phiSum * col("_st._2")) { ys =>
+      if (ys.length < 2) None
       else {
         var l = ys(0)
         var b = ys(1) - ys(0)
         var i = 1
-        while (i < ys.size) {
+        while (i < ys.length) {
           val lNew = alpha * ys(i) + (1.0 - alpha) * (l + phi * b)
           b = beta * (lNew - l) + (1.0 - beta) * (phi * b)
           l = lNew
@@ -307,63 +330,20 @@ object Forecast {
         Some((l, b))
       }
     }
-    val phiSum =
-      if (phi == 1.0) col("step").cast("double")
-      else lit(phi) * (lit(1.0) - pow(lit(phi), col("step"))) / lit(1.0 - phi)
-    history.filter(col(valCol).isNotNull)
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valCol).cast("double").as("x"))).as("_pts"),
-        max(col(tsCol)).as("_last_ts"))
-      .withColumn("_lb", foldUdf(col("_pts")))
-      .filter(col("_lb").isNotNull)
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat", col("_lb._1") + phiSum * col("_lb._2"))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
   }
 
+  /** Holt's linear-trend method (Hyndman §8.2, standard init l₁ = y₁,
+    * b₁ = y₂ − y₁, recursion from t = 2):
+    *   l_t = α·y_t + (1−α)·(l_{t−1} + b_{t−1})
+    *   b_t = β·(l_t − l_{t−1}) + (1−β)·b_{t−1}
+    *   ŷ(T+s) = l_T + s·b_T
+    * — [[holtDamped]] at φ = 1, where φ·b = b exactly, so the results are
+    * the undamped recursion's bit for bit.
+    */
   def holt(history: DataFrame, keyCols: Seq[String], tsCol: String,
            valCol: String, alpha: Double, beta: Double, horizon: Int,
-           stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(beta > 0 && beta <= 1, s"beta must be in (0, 1], got $beta")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
-    val keys = keyCols.map(col)
-    val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"Holt series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val ys = pts.sortBy(_.getLong(0)).map(_.getDouble(1))
-      if (ys.size < 2) None
-      else {
-        var l = ys(0)
-        var b = ys(1) - ys(0)
-        var i = 1
-        while (i < ys.size) {
-          val lNew = alpha * ys(i) + (1.0 - alpha) * (l + b)
-          b = beta * (lNew - l) + (1.0 - beta) * b
-          l = lNew
-          i += 1
-        }
-        Some((l, b))
-      }
-    }
-    history.filter(col(valCol).isNotNull)
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valCol).cast("double").as("x"))).as("_pts"),
-        max(col(tsCol)).as("_last_ts"))
-      .withColumn("_lb", foldUdf(col("_pts")))
-      .filter(col("_lb").isNotNull)
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat", col("_lb._1") + col("step") * col("_lb._2"))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
-  }
+           stepSeconds: Long): DataFrame =
+    holtDamped(history, keyCols, tsCol, valCol, alpha, beta, phi = 1.0, horizon, stepSeconds)
 
   /** Holt-Winters ADDITIVE seasonal method (Winters 1960; Hyndman §8.3),
     * classical init (statsmodels "legacy-heuristic"-adjacent, fully pinned
@@ -377,27 +357,21 @@ object Forecast {
     *   s_t = γ·(y_t − l_{t−1} − b_{t−1}) + (1−γ)·s_{t−m}
     * forecast: ŷ(T+h) = l_T + h·b_T + s_{T+h−m·⌈h/m⌉}.
     *
-    * Like [[holt]], the coupled recursion is a per-key fold (the licensed
-    * Ewma pattern — [[Ewma.maxSeriesPoints]] guard applies); the seasonal
-    * state is an m-slot ring buffer, O(m) memory per key. Keys with fewer
-    * than 2m points are dropped (the init needs two full seasons).
+    * Like [[holt]], the coupled recursion is a per-key [[SeriesFold]]; the
+    * seasonal state is an m-slot ring buffer, O(m) memory per key. Keys
+    * with fewer than 2m points are dropped (the init needs two full seasons).
     */
   def holtWinters(history: DataFrame, keyCols: Seq[String], tsCol: String,
                   valCol: String, alpha: Double, beta: Double, gamma: Double,
                   period: Int, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(beta > 0 && beta <= 1, s"beta must be in (0, 1], got $beta")
-    require(gamma > 0 && gamma <= 1, s"gamma must be in (0, 1], got $gamma")
+    requireWeight("alpha", alpha)
+    requireWeight("beta", beta)
+    requireWeight("gamma", gamma)
     require(period >= 2, s"period must be >= 2, got $period")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
     val m = period
-    val keys = keyCols.map(col)
-    val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"Holt-Winters series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val ys = pts.sortBy(_.getLong(0)).map(_.getDouble(1)).toArray
+    foldForecast(history, keyCols, tsCol, valCol, horizon, stepSeconds,
+      col("_st._1") + col("step") * col("_st._2") +
+        element_at(col("_st._3"), col("step").cast("int"))) { ys =>
       val n = ys.length
       if (n < 2 * m) None
       else {
@@ -419,20 +393,6 @@ object Forecast {
         Some((l, b, (1 to horizon).map(h => s((n - 1 + h) % m))))
       }
     }
-    history.filter(col(valCol).isNotNull)
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valCol).cast("double").as("x"))).as("_pts"),
-        max(col(tsCol)).as("_last_ts"))
-      .withColumn("_st", foldUdf(col("_pts")))
-      .filter(col("_st").isNotNull)
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat",
-        col("_st._1") + col("step") * col("_st._2") +
-          element_at(col("_st._3"), col("step").cast("int")))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
   }
 
   /** MULTIPLICATIVE Holt-Winters (Hyndman §8.3) — the variant for series
@@ -445,24 +405,19 @@ object Forecast {
     * Init mirrors [[holtWinters]] with ratio seasonals (s_i = y_i / l₀).
     * Requires strictly positive observations (the ratios are undefined
     * otherwise) — keys with any y ≤ 0 or fewer than 2 seasons are dropped.
-    * Same licensed per-key fold + ring buffer as the additive form.
+    * Same per-key fold + ring buffer as the additive form.
     */
   def holtWintersMul(history: DataFrame, keyCols: Seq[String], tsCol: String,
                      valCol: String, alpha: Double, beta: Double, gamma: Double,
                      period: Int, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(beta > 0 && beta <= 1, s"beta must be in (0, 1], got $beta")
-    require(gamma > 0 && gamma <= 1, s"gamma must be in (0, 1], got $gamma")
+    requireWeight("alpha", alpha)
+    requireWeight("beta", beta)
+    requireWeight("gamma", gamma)
     require(period >= 2, s"period must be >= 2, got $period")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
     val m = period
-    val keys = keyCols.map(col)
-    val foldUdf = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"Holt-Winters series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val ys = pts.sortBy(_.getLong(0)).map(_.getDouble(1)).toArray
+    foldForecast(history, keyCols, tsCol, valCol, horizon, stepSeconds,
+      (col("_st._1") + col("step") * col("_st._2")) *
+        element_at(col("_st._3"), col("step").cast("int"))) { ys =>
       val n = ys.length
       if (n < 2 * m || ys.exists(_ <= 0.0)) None
       else {
@@ -484,20 +439,6 @@ object Forecast {
         }
       }
     }
-    history.filter(col(valCol).isNotNull)
-      .groupBy(keys: _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valCol).cast("double").as("x"))).as("_pts"),
-        max(col(tsCol)).as("_last_ts"))
-      .withColumn("_st", foldUdf(col("_pts")))
-      .filter(col("_st").isNotNull)
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_last_ts")) + col("step") * stepSeconds))
-      .withColumn("yhat",
-        (col("_st._1") + col("step") * col("_st._2")) *
-          element_at(col("_st._3"), col("step").cast("int")))
-      .select((keys :+ col("forecast_ts") :+ col("step") :+ col("yhat")): _*)
   }
 
   /** Croston's method for INTERMITTENT demand (Croston 1972, "Forecasting
@@ -519,9 +460,7 @@ object Forecast {
     */
   def croston(history: DataFrame, keyCols: Seq[String], tsCol: String,
               valCol: String, alpha: Double, horizon: Int, stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
+    requireWeight("alpha", alpha)
     val keys = keyCols.map(col)
     val wAll = Window.partitionBy(keys: _*).orderBy(col(tsCol))
     val indexed = history
@@ -534,19 +473,12 @@ object Forecast {
       .withColumn("_q", coalesce(col("_idx") - lag(col("_idx"), 1).over(wNz), col("_idx")))
       .withColumn("_rn", row_number().over(wNz))
       .withColumn("_back", row_number().over(wNzDesc) - 1)
-      .withColumn("_w",
-        when(col("_rn") === 1, pow(lit(1.0 - alpha), col("_back")))
-          .otherwise(lit(alpha) * pow(lit(1.0 - alpha), col("_back"))))
+      .withColumn("_w", sesWeight(col("_rn") === 1, col("_back"), alpha))
     val lvl = ranked
       .groupBy(keys: _*)
       .agg(sum(col("_w") * col(valCol)).as("_z"), sum(col("_w") * col("_q")).as("_p"),
         max(col("_last_ts")).as("_origin"))
-    lvl
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_origin")) + col("step") * stepSeconds))
-      .select((keys :+ col("forecast_ts") :+ col("step")
-        :+ (col("_z") / col("_p")).as("yhat")): _*)
+    forecastFrame(lvl, keyCols, "_origin", horizon, stepSeconds, col("_z") / col("_p"))
   }
 
   /** Syntetos–Boylan approximation (SBA; Syntetos & Boylan 2005): Croston's
@@ -626,10 +558,8 @@ object Forecast {
   def tsb(history: DataFrame, keyCols: Seq[String], tsCol: String,
           valCol: String, alpha: Double, beta: Double, horizon: Int,
           stepSeconds: Long): DataFrame = {
-    require(alpha > 0 && alpha <= 1 && beta > 0 && beta <= 1,
-      s"alpha/beta must be in (0, 1], got $alpha/$beta")
-    require(horizon >= 1 && stepSeconds >= 1,
-      s"horizon/stepSeconds must be >= 1, got $horizon/$stepSeconds")
+    requireWeight("alpha", alpha)
+    requireWeight("beta", beta)
     val keys = keyCols.map(col)
     val wAll = Window.partitionBy(keys: _*).orderBy(col(tsCol))
     val wAllDesc = Window.partitionBy(keys: _*).orderBy(col(tsCol).desc)
@@ -640,9 +570,7 @@ object Forecast {
       .withColumn("_back", row_number().over(wAllDesc) - 1)
       .withColumn("_ind",
         when(col(valCol).isNotNull && col(valCol) =!= 0, 1.0).otherwise(0.0))
-      .withColumn("_w",
-        when(col("_rn") === 1, pow(lit(1.0 - beta), col("_back")))
-          .otherwise(lit(beta) * pow(lit(1.0 - beta), col("_back"))))
+      .withColumn("_w", sesWeight(col("_rn") === 1, col("_back"), beta))
       .groupBy(keys: _*)
       .agg(sum(col("_w") * col("_ind")).as("_p"), max(col(tsCol)).as("_origin"))
     // size level over the NON-ZERO subsequence (identical to croston's ẑ)
@@ -650,17 +578,12 @@ object Forecast {
     val z = nz
       .withColumn("_rn", row_number().over(wAll))
       .withColumn("_back", row_number().over(wAllDesc) - 1)
-      .withColumn("_w",
-        when(col("_rn") === 1, pow(lit(1.0 - alpha), col("_back")))
-          .otherwise(lit(alpha) * pow(lit(1.0 - alpha), col("_back"))))
+      .withColumn("_w", sesWeight(col("_rn") === 1, col("_back"), alpha))
       .groupBy(keys: _*)
       .agg(sum(col("_w") * col(valCol)).as("_z"))
-    p.join(z, keyCols) // inner: keys with no demand have no ẑ
-      .withColumn("step", explode(sequence(lit(1), lit(horizon))))
-      .withColumn("forecast_ts",
-        timestamp_seconds(unix_timestamp(col("_origin")) + col("step") * stepSeconds))
-      .select((keys :+ col("forecast_ts") :+ col("step")
-        :+ (col("_p") * col("_z")).as("yhat")): _*)
+    // inner join: keys with no demand have no ẑ
+    forecastFrame(p.join(z, keyCols), keyCols, "_origin", horizon, stepSeconds,
+      col("_p") * col("_z"))
   }
 
   /** Hierarchical forecast reconciliation — top-down by historical

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * ordinal, not calibrated probabilities).
   *
   * PAVA is a sequential pooling pass, so like the other per-key recursions
-  * ([[Ewma]], [[Forecast.holt]], [[Kalman]]) it runs as a per-key fold
-  * under the [[Ewma.maxSeriesPoints]] guard — calibration sets are bounded
+  * ([[Ewma]], [[Forecast.holt]], [[Kalman]]) it runs as a per-key
+  * [[SeriesFold]] under its one point bound — calibration sets are bounded
   * samples by construction. Points are processed in (x, then y) order
   * (pinned tie rule); the output is one fitted value per input point,
   * piecewise-constant and monotone, preserving the weighted mean of each
@@ -75,17 +75,13 @@ object Isotonic {
   def fitFrame(df: DataFrame, keyCols: Seq[String], xCol: String, yCol: String,
                wCol: Option[String] = None): DataFrame = {
     val u = udf { (pts: Seq[Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"isotonic series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Sample the calibration set first.")
-      pava(pts.map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))))
+      pava(SeriesFold.guard(pts).map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2))))
         .map { case (x, f) => IsoPoint(x, f) }
     }
     val w = wCol.map(c => col(c).cast("double")).getOrElse(lit(1.0))
     val x = col(xCol).cast("double"); val y = col(yCol).cast("double")
-    df.filter(x.isNotNull && y.isNotNull)
-      .groupBy(keyCols.map(col): _*)
-      .agg(collect_list(struct(x.as("x"), y.as("y"), w.as("w"))).as("_pts"))
+    SeriesFold.collect(df.filter(x.isNotNull && y.isNotNull), keyCols,
+        Seq(x.as("x"), y.as("y"), w.as("w")))
       .withColumn("_e", explode(u(col("_pts"))))
       .select((keyCols.map(col) :+ col("_e.x").as("x") :+
         col("_e.f").as("y_fit")): _*)

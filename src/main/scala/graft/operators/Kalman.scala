@@ -60,25 +60,18 @@ object Kalman {
   }
 
   /** Per-key filter frame: (keys..., ts_sec, level, gain, z) — the licensed
-    * one-collect_list-per-series shape ([[Ewma.maxSeriesPoints]] guard):
-    * series must already be at time-bucket grain.
+    * per-key [[SeriesFold]], under its one point bound: series must already
+    * be at time-bucket grain.
     */
   def kalmanLevelFrame(df: DataFrame, keyCols: Seq[String], tsCol: String,
                        valueCol: String, q: Double, r: Double): DataFrame = {
     val u = udf { (pts: Seq[Row]) =>
-      require(pts.size <= Ewma.maxSeriesPoints,
-        s"Kalman series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${Ewma.maxSeriesPoints}). Aggregate to time buckets first.")
-      val pairs = pts.map(rw =>
-        (rw.getLong(0), if (rw.isNullAt(1)) None else Some(rw.getDouble(1))))
-      kalmanLevelSeries(pairs, q, r).map { case (t, lv, kv, zv) =>
+      kalmanLevelSeries(SeriesFold.pairs(pts), q, r).map { case (t, lv, kv, zv) =>
         KalmanPoint(t, lv.map(Double.box).orNull, kv.map(Double.box).orNull,
           zv.map(Double.box).orNull)
       }
     }
-    df.groupBy(keyCols.map(col): _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valueCol).cast("double").as("x"))).as("_pts"))
+    SeriesFold.collect(df, keyCols, SeriesFold.timeValue(tsCol, valueCol))
       .withColumn("_e", explode(u(col("_pts"))))
       .select((keyCols.map(col) :+ col("_e.ts").as("ts_sec") :+
         col("_e.l").as("level") :+ col("_e.k").as("gain") :+

@@ -28,13 +28,9 @@ import org.apache.spark.sql.functions._
   * the previous pick), so it runs where the engine's other series folds
   * run — on TIER series, whose length is bounded by bucket cardinality
   * (ten years of a daily tier = 3,650 points; the raw corpus never folds).
-  * Same licensed collect-fold pattern and [[Ewma.maxSeriesPoints]]-style
-  * guard as EWMA.
+  * A [[SeriesFold]], under the one point bound every fold shares.
   */
 object Lttb {
-
-  /** Fail-fast bound on points per series (see [[Ewma.maxSeriesPoints]]). */
-  @volatile var maxSeriesPoints: Int = 2000000
 
   /** Core selection on one sorted series: returns the selected indices
     * (always includes 0 and n−1; passthrough when n ≤ t).
@@ -79,11 +75,7 @@ object Lttb {
   }
 
   private def lttbUdf(t: Int): UserDefinedFunction = udf { (pts: Seq[Row]) =>
-    require(pts.size <= maxSeriesPoints,
-      s"LTTB series has ${pts.size} points (> maxSeriesPoints=$maxSeriesPoints). " +
-        "LTTB input should be a rolled-up tier, not raw events — aggregate to " +
-        "time buckets first, or raise Lttb.maxSeriesPoints if the length is intended.")
-    val sorted = pts.map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
+    val sorted = SeriesFold.guard(pts).map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
     val xs = sorted.map(_._1.toDouble).toArray
     val ys = sorted.map(_._2).toArray
     selectIndices(xs, ys, t).map(i => sorted(i)).toSeq
@@ -96,10 +88,9 @@ object Lttb {
   def downsample(df: DataFrame, keys: Seq[String], xCol: String, yCol: String,
                  threshold: Int): DataFrame = {
     require(threshold >= 3, s"threshold must be >= 3, got $threshold")
-    df.groupBy(keys.map(col): _*)
-      .agg(collect_list(struct(col(xCol).cast("long").as("x"),
-        col(yCol).cast("double").as("y"))).as("pts"))
-      .withColumn("p", explode(lttbUdf(threshold)(col("pts"))))
+    SeriesFold.collect(df, keys,
+        Seq(col(xCol).cast("long").as("x"), col(yCol).cast("double").as("y")))
+      .withColumn("p", explode(lttbUdf(threshold)(col("_pts"))))
       .select(keys.map(col) :+ col("p._1").as("x") :+ col("p._2").as("y"): _*)
   }
 }

@@ -335,8 +335,8 @@ object Similarity {
     * pathological warps out.
     *
     * The reference is a driver-side constant (same bounded license as the
-    * IVF centroids); each key's series folds in one task under the
-    * [[graft.operators.Ewma.maxSeriesPoints]] guard. Deterministic DP —
+    * IVF centroids); each key's series folds in one task as a
+    * [[SeriesFold]], under its one point bound. Deterministic DP —
     * evidence is the spec goldens (identity 0, hand DP, shift tolerance vs
     * Euclidean, band binding) PLUS, for the bounded-window query form
     * where both series have the reference's length, a full DuckDB oracle:
@@ -352,17 +352,11 @@ object Similarity {
     require(band >= 1, s"band must be >= 1, got $band")
     val ref = reference.toArray
     val u = udf { (pts: Seq[org.apache.spark.sql.Row]) =>
-      require(pts.size <= graft.operators.Ewma.maxSeriesPoints,
-        s"DTW series has ${pts.size} points (> Ewma.maxSeriesPoints=" +
-          s"${graft.operators.Ewma.maxSeriesPoints}). Bucket to tiers first.")
-      val xs = pts.sortBy(_.getLong(0)).map(_.getDouble(1)).toArray
+      val xs = SeriesFold.values(pts)
       if (xs.isEmpty) None else Some(dtw(xs, ref, band))
     }
-    df.filter(col(valueCol).isNotNull)
-      .groupBy(keyCols.map(col): _*)
-      .agg(collect_list(struct(unix_timestamp(col(tsCol)).as("t"),
-        col(valueCol).cast("double").as("x"))).as("_pts"),
-        count(lit(1)).as("n_points"))
+    SeriesFold.collect(df.filter(col(valueCol).isNotNull), keyCols,
+        SeriesFold.timeValue(tsCol, valueCol), count(lit(1)).as("n_points"))
       .withColumn("dtw", u(col("_pts")))
       .filter(col("dtw").isNotNull)
       .select((keyCols.map(col) :+ col("dtw") :+ col("n_points")): _*)

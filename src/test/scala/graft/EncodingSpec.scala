@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Encoding, Ewma}
+import graft.operators.{Encoding, Ewma, Forecast, Lttb}
 import graft.functions.FingerprintExpr
 
 /** Ordinal dictionary encode/decode (operators.Encoding) + the construction
-  * guards added for EWMA series length and FingerprintExpr parameters.
+  * guards for series-fold length and FingerprintExpr parameters.
   */
 class EncodingSpec extends SparkSuite {
   import spark.implicits._
@@ -73,13 +73,18 @@ class EncodingSpec extends SparkSuite {
     try {
       val df = (0 until 50).map(i => ("s", new java.sql.Timestamp(i * 60000L), i.toDouble))
         .toDF("k", "ts", "v")
-      val ex = intercept[Exception] {
-        Ewma.ewmaSeriesFrame(df, Seq("k"), "ts", "v", Seq(3.0)).count()
-      }
       // Spark wraps the UDF's IllegalArgumentException; the diagnostic survives
       def messages(t: Throwable): Seq[String] =
         Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
-      assert(messages(ex).exists(_.contains("maxSeriesPoints")))
+      // every series fold reads the one bound: EWMA, a fold forecaster, LTTB
+      val folds = Seq[(String, () => Any)](
+        "ewma" -> (() => Ewma.ewmaSeriesFrame(df, Seq("k"), "ts", "v", Seq(3.0)).count()),
+        "holt" -> (() => Forecast.holt(df, Seq("k"), "ts", "v", 0.5, 0.5, 3, 60L).collect()),
+        "lttb" -> (() => Lttb.downsample(df, Seq("k"), "ts", "v", 5).collect()))
+      folds.foreach { case (name, run) =>
+        val ex = intercept[Exception](run())
+        assert(messages(ex).exists(_.contains("maxSeriesPoints")), name)
+      }
     } finally Ewma.maxSeriesPoints = prev
   }
 
